@@ -130,7 +130,7 @@ def q_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _signed_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared candidate scaffolding: documents → fused shingle+MinHash
-    signatures → LSH candidates (policy "all").  Returns (signed, cands);
+    signatures → uncapped LSH candidates.  Returns (signed, cands);
     every driver query that needs MinHash candidates goes through here so
     the shingle/signature config lives in exactly one place."""
     from wdedup_spark.operators.lsh import minhash_lsh_candidates
@@ -146,7 +146,7 @@ def _signed_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Dat
         enable_simhash=False, enable_substring=False,
     ).drop("doc").localCheckpoint(eager=False)
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
-                                   oversize_policy="all")
+                                   max_bucket=None)
     return signed, cands
 
 
@@ -264,7 +264,7 @@ def q_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All pairs within SimHash Hamming distance 3, exactly: the Manku
     pigeonhole tables guarantee candidate recall and the bit_count filter
-    is exact, so with oversize_policy="all" the output equals the oracle's
+    is exact, so with max_bucket=None the output equals the oracle's
     all-pairs definition.  Features are md5-of-shingle-string (k=3) so
     DuckDB reproduces the bit majorities bit-for-bit."""
     from wdedup_spark.operators.simhash import simhash_candidates
@@ -274,7 +274,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return simhash_candidates(
         docs, "doc", "conv_id", max_hamming=3, k=K,
-        feature="md5", oversize_policy="all",
+        feature="md5", max_bucket=None,
     ).select(
         F.col("conv_a").cast("long").alias("doc_a"),
         F.col("conv_b").cast("long").alias("doc_b"),
@@ -283,7 +283,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-anchored exact long-substring pairs.  With
-    oversize_policy="all", the winnowing guarantee (k=8, w=16: any common
+    max_bucket=None, the winnowing guarantee (k=8, w=16: any common
     span >= 23 tokens shares an anchor) plus exact common-run verification
     (16-token seed chaining) make this EXACTLY the pairs sharing a verbatim
     token run >= 23 — mirrored by the oracle's shared-16-gram diagonal
@@ -294,8 +294,7 @@ def q_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )
     return substring_candidates(
-        docs, "doc", "conv_id", k=8, w=16, min_span=23, max_bucket=512,
-        oversize_policy="all",
+        docs, "doc", "conv_id", k=8, w=16, min_span=23, max_bucket=None,
     ).select(
         F.col("conv_a").cast("long").alias("doc_a"),
         F.col("conv_b").cast("long").alias("doc_b"),
@@ -309,7 +308,7 @@ def q_edit_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte semantics match DuckDB's levenshtein(), == char-level on ASCII).
 
     Exactness vs the all-pairs oracle: candidates come from MinHash/LSH
-    (policy "all"), then the exact char-DP decides.  A pair can only reach
+    (uncapped buckets), then the exact char-DP decides.  A pair can only reach
     edit_sim 0.8 with ~80% of its characters in common runs, which forces
     shingle Jaccard far above the LSH catch floor (the planted data shows
     the gap plainly: every pair >= 0.8 edit sim sits at >= 0.93, while the
@@ -459,7 +458,7 @@ def q_cosine_highsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         lsh_cosine_pairs_sparse(
             vecs, threshold=0.9 - 1e-6, dim=HIST_DIM,
             id_col="doc_id", idx_col="bkts", val_col="cs",
-            n_bits=13, n_tables=128, oversize_policy="all", min_collisions=3,
+            n_bits=13, n_tables=128, max_bucket=None, min_collisions=3,
         )
         .withColumn("cosine", F.round("cosine", 6))
         .filter(F.col("cosine") >= 0.9)
@@ -2048,7 +2047,7 @@ def oracle_sql() -> dict[str, str]:
     # SimHash with md5-of-shingle-string features is fully SQL-expressible:
     # DuckDB reproduces the 64-bit feature hash via substr(md5(s),1,16) and
     # the bit majorities via an unnest(range(64)) sum.  The engine's
-    # pigeonhole tables + exact bit_count filter (oversize_policy="all")
+    # pigeonhole tables + exact bit_count filter (max_bucket=None)
     # equal the all-pairs Hamming <= 3 definition below.
     sql["simhash_pairs"] = """
         WITH toks AS (

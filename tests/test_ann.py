@@ -217,7 +217,7 @@ def test_lsh_cosine_pairs_sparse_matches_dense_and_numpy(spark):
     pdf = pd.DataFrame({"vec_id": ids, "idxs": idxs, "vals": vals})
     df = spark.createDataFrame(pdf)
     got = lsh_cosine_pairs_sparse(
-        df, threshold=0.9, dim=dim, n_bits=8, n_tables=32, oversize_policy="all"
+        df, threshold=0.9, dim=dim, n_bits=8, n_tables=32, max_bucket=None
     ).collect()
     mat = np.stack([dense[i] for i in sorted(dense)])
     want = _numpy_pairs(mat, 0.9)
@@ -239,7 +239,7 @@ def test_lsh_cosine_pairs_sparse_matches_dense_and_numpy(spark):
     )
     ddf = spark.createDataFrame(dpdf)
     dgot = lsh_cosine_pairs(
-        ddf, threshold=0.9, dim=dim, n_bits=8, n_tables=32, oversize_policy="all"
+        ddf, threshold=0.9, dim=dim, n_bits=8, n_tables=32, max_bucket=None
     ).collect()
     dense_pairs = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in dgot}
     sparse_pairs = {(r["vec_a"], r["vec_b"]): r["cosine"] for r in got}

@@ -1,14 +1,8 @@
 """Conversation assembly (stable turn ordering) + exact dedup tests —
 fixtures D0 (exact copy), D4 (row-shuffled), D4X (permuted indices)."""
 
-from pyspark.sql import functions as F
-
 from wdedup_spark.operators.assemble import assemble_conversations
-from wdedup_spark.operators.exact import (
-    deduplicate_exact,
-    exact_dup_clusters,
-    exact_dup_pairs,
-)
+from wdedup_spark.operators.exact import add_fingerprint, exact_dup_clusters
 
 
 def test_assembly_stable_under_row_order(spark, tiny, tiny_turns):
@@ -23,52 +17,30 @@ def test_assembly_stable_under_row_order(spark, tiny, tiny_turns):
         assert docs[row.conv_a] != docs[row.conv_b], row.dup_class
 
 
-def test_exact_pairs_match_planted(spark, tiny, tiny_turns):
-    conv = assemble_conversations(tiny_turns)
-    got = {
-        (r["conv_a"], r["conv_b"])
-        for r in exact_dup_pairs(conv, "doc", "conv_id").collect()
-    }
-    planted = tiny.oracle_pairs
-    expected_direct = {
-        (min(a, b), max(a, b))
-        for a, b, c in planted.itertuples(index=False)
-        if c in ("D0", "D4")
-    }
-    # exact pairs are emitted as star edges around the min id; planted
-    # D0/D4 pairs share the base conv, so direct pairs == star edges here
-    # unless two copies of the same base exist → compare via cluster closure
-    clusters: dict[str, set] = {}
-    for a, b in got:
-        s = clusters.setdefault(a, {a})
-        s.add(b)
-    covered = set()
-    for a, b in expected_direct:
-        ok = any(a in s and b in s for s in clusters.values())
-        if ok:
-            covered.add((a, b))
-    assert covered == expected_direct
-
-
-def test_deduplicate_exact_keeps_min_id(spark, tiny_turns):
-    conv = assemble_conversations(tiny_turns)
-    deduped = deduplicate_exact(conv, "doc", "conv_id")
-    total = conv.count()
-    kept = deduped.count()
+def _rep_of(conv):
+    """conv_id → its exact group's representative (the group min id)."""
     clusters = exact_dup_clusters(conv, "doc", "conv_id")
-    assert kept == clusters.count()
-    dups = clusters.filter(F.col("n_members") > 1).count()
-    assert kept < total and dups > 0
-    # representative is the min id of each group
-    reps = {r["rep_id"] for r in clusters.collect()}
-    kept_ids = {r["conv_id"] for r in deduped.collect()}
-    assert reps == kept_ids
+    return {
+        r["conv_id"]: r["rep_id"]
+        for r in add_fingerprint(conv, "doc").join(clusters, "fp").collect()
+    }
+
+
+def test_exact_pairs_match_planted(spark, tiny, tiny_turns):
+    rep = _rep_of(assemble_conversations(tiny_turns))
+    planted = tiny.oracle_pairs
+    exact = planted[planted.dup_class.isin(["D0", "D4"])]
+    assert len(exact) > 0
+    # planted exact copies share one group ...
+    assert all(rep[a] == rep[b] for a, b in zip(exact.conv_a, exact.conv_b))
+    # ... and every group is represented by its min id (first occurrence)
+    assert all(r <= c for c, r in rep.items())
 
 
 def test_determinism_across_runs(spark, tiny, tiny_turns):
     """Two runs → identical output (the reference's determinism contract,
     include/wdedup.hpp:114-116)."""
     conv = assemble_conversations(tiny_turns)
-    a = sorted(map(tuple, exact_dup_pairs(conv, "doc", "conv_id").collect()))
-    b = sorted(map(tuple, exact_dup_pairs(conv, "doc", "conv_id").collect()))
+    a = sorted(map(tuple, exact_dup_clusters(conv, "doc", "conv_id").collect()))
+    b = sorted(map(tuple, exact_dup_clusters(conv, "doc", "conv_id").collect()))
     assert a == b

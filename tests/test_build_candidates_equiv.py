@@ -1,15 +1,15 @@
-"""Equivalence pin for the r6 merged candidate stage.
+"""Reference pin for the merged candidate stage.
 
-``build_candidates`` used to run one ``candidate_pairs`` pass per channel
-(minhash / simhash / substring); it now unions the tagged banded streams
-and runs ONE ``candidate_pairs_multi`` pass (one window exchange + one
-self-join for all channels).  The rewrite must not change a single
-(conv_a, conv_b, via) row — this test reimplements the old per-channel
-shape verbatim as the reference and diffs full outputs, across:
+``build_candidates`` unions the three channels' tagged banded streams
+(minhash / simhash / substring) and runs ONE ``candidate_pairs_multi``
+pass (one window exchange + one self-join for all channels), then folds
+per-channel floors, star edges and the simhash Hamming check into one
+groupBy.  This test diffs full (conv_a, conv_b, via) outputs against the
+plain-Python reference in ``candidate_oracle`` across:
 
-* the default config (star policy, min_band_collisions=2),
-* a flood corpus that trips the oversize star path,
-* a tiny max_bucket so star edges dominate,
+* the default config (max_bucket=256, min_band_collisions=2),
+* a flood corpus with a tiny max_bucket, so star edges dominate,
+* uncapped buckets (max_bucket=None), on the flood and the plain corpus,
 * incremental mode (new_col batch flag + old-anchor star edges).
 """
 
@@ -19,55 +19,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from wdedup_spark.operators.lsh import band_buckets, candidate_pairs
+import candidate_oracle
 from wdedup_spark.operators.minhash import add_signatures
-from wdedup_spark.operators.simhash import simhash_chunks
 from wdedup_spark.plans.pipeline import PipelineConfig, build_candidates
-
-
-def _old_build_candidates(signed, cfg, new_col=None):
-    """The pre-r6 per-channel shape, verbatim (reference implementation)."""
-    passthrough = [new_col] if new_col else None
-    banded = band_buckets(
-        signed, "sig", "conv_id", cfg.n_bands, cfg.n_perms, passthrough=passthrough
-    )
-    cands = candidate_pairs(
-        banded, cfg.max_bucket, cfg.oversize_policy,
-        min_collisions=cfg.min_band_collisions, dedup=False, new_col=new_col,
-    ).withColumn("via", F.lit("minhash"))
-    if cfg.enable_simhash:
-        sim_banded = simhash_chunks(
-            signed, "simhash", "conv_id", cfg.max_hamming, passthrough=passthrough
-        )
-        sim_cands = candidate_pairs(
-            sim_banded, cfg.max_bucket, cfg.oversize_policy, dedup=False,
-            new_col=new_col,
-        )
-        sigs = signed.select(F.col("conv_id").alias("id"), "simhash")
-        sim_cands = (
-            sim_cands.join(
-                sigs.select(F.col("id").alias("conv_a"), F.col("simhash").alias("sh_a")), "conv_a"
-            )
-            .join(sigs.select(F.col("id").alias("conv_b"), F.col("simhash").alias("sh_b")), "conv_b")
-            .filter(F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))) <= cfg.max_hamming)
-            .select("conv_a", "conv_b")
-            .withColumn("via", F.lit("simhash"))
-        )
-        cands = cands.unionByName(sim_cands)
-    if cfg.enable_substring:
-        anchored = signed.select(
-            F.col("conv_id").alias("id"),
-            *([new_col] if new_col else []),
-            F.explode("anchors").alias("bucket"),
-        ).withColumn("band", F.lit(0))
-        sub_cands = candidate_pairs(
-            anchored.select("band", "bucket", "id", *([new_col] if new_col else [])),
-            cfg.max_bucket, cfg.oversize_policy, dedup=False, new_col=new_col,
-        ).withColumn("via", F.lit("substring"))
-        cands = cands.unionByName(sub_cands)
-    return cands.groupBy("conv_a", "conv_b").agg(
-        F.sort_array(F.collect_set("via")).alias("via")
-    )
 
 
 def _corpus(spark, flood: bool):
@@ -102,36 +56,38 @@ def _collect(df) -> set:
     }
 
 
+def _reference(signed, cfg, new_col=None) -> set:
+    cols = ["conv_id", "sig", "simhash", "anchors", *([new_col] if new_col else [])]
+    return candidate_oracle.build_candidates(
+        signed.select(*cols).collect(), cfg, new_col=new_col
+    )
+
+
 @pytest.mark.parametrize(
-    "flood,max_bucket,policy",
+    "flood,max_bucket",
     [
-        (False, 256, "star"),
-        (True, 8, "star"),
-        (True, 8, "drop"),
-        (False, 256, "all"),
+        pytest.param(False, 256, id="False-256-star"),
+        pytest.param(True, 8, id="True-8-star"),
+        pytest.param(True, None, id="True-uncapped"),
+        pytest.param(False, None, id="False-uncapped"),
     ],
 )
-def test_merged_equals_per_channel(spark, flood, max_bucket, policy):
+def test_merged_equals_per_channel(spark, flood, max_bucket):
     cfg = PipelineConfig(
-        n_perms=32, n_bands=8, max_bucket=max_bucket, oversize_policy=policy,
-        substring_k=4, substring_w=8,
+        n_perms=32, n_bands=8, max_bucket=max_bucket, substring_k=4, substring_w=8,
     )
     signed = _corpus(spark, flood).localCheckpoint(eager=True)
-    assert _collect(build_candidates(signed, cfg)) == _collect(
-        _old_build_candidates(signed, cfg)
-    )
+    got = _collect(build_candidates(signed, cfg))
+    assert got, "corpus produced no candidates"
+    assert got == _reference(signed, cfg)
 
 
 def test_merged_equals_per_channel_incremental(spark):
-    cfg = PipelineConfig(
-        n_perms=32, n_bands=8, max_bucket=8, oversize_policy="star",
-        substring_k=4, substring_w=8,
-    )
+    cfg = PipelineConfig(n_perms=32, n_bands=8, max_bucket=8, substring_k=4, substring_w=8)
     signed = (
         _corpus(spark, flood=True)
         .withColumn("is_new", F.pmod(F.col("conv_id"), F.lit(3)) == 0)
         .localCheckpoint(eager=True)
     )
-    assert _collect(build_candidates(signed, cfg, new_col="is_new")) == _collect(
-        _old_build_candidates(signed, cfg, new_col="is_new")
-    )
+    got = _collect(build_candidates(signed, cfg, new_col="is_new"))
+    assert got == _reference(signed, cfg, new_col="is_new")

@@ -1,12 +1,10 @@
-"""CLI, text-file parity source, stage GC, stop_after staging, salting."""
+"""CLI, text-file parity source, stage GC, stop_after staging."""
 
 import json
 import os
 
-import pandas as pd
 import pytest
 
-from wdedup_spark.operators.skew import salted_count, salted_repartition
 from wdedup_spark.plans.pipeline import PipelineConfig, run_pipeline
 from wdedup_spark.sources.io import find_first_unique_word_in_file, read_words_from_textfile
 
@@ -127,18 +125,3 @@ def test_cli_dedup_and_findfirst(spark, tiny, tmp_path, monkeypatch):
     words.write_text("a b a q b\n")
     assert cli.main(["findfirst", "--input", str(words)]) == 0
 
-
-def test_salted_count_matches_plain(spark):
-    pdf = pd.DataFrame(
-        {"key": ["hot"] * 500 + [f"k{i}" for i in range(100)], "id": range(600)}
-    )
-    df = spark.createDataFrame(pdf)
-    got = {r["key"]: r["n"] for r in salted_count(df, "key", "id", buckets=8).collect()}
-    assert got["hot"] == 500
-    assert got["k7"] == 1
-    assert len(got) == 101
-    # salted repartition spreads the hot key over multiple shuffle keys
-    # (AQE may re-coalesce small partitions — that's desired; only genuinely
-    # hot shards stay separate, so assert on the salt spread itself)
-    salted = salted_repartition(df.filter("key = 'hot'"), "key", "id", buckets=8)
-    assert salted.select("_salt").distinct().count() > 1

@@ -1,16 +1,19 @@
 """Skew safety of candidate_pairs: oversize buckets must never be
 materialized as a collect_list array (VERDICT round-2 finding #1).
 
-The star policy exists for boilerplate floods; the round-2 implementation
+Star edges exist for boilerplate floods; the round-2 implementation
 aggregated ``collect_list(id)`` over EVERY bucket before filtering on the
-size — an executor OOM at exactly the skew it targets.  The fix counts
-bucket sizes with a window (sort-based, spills) and only collect_lists
-buckets already proven small; oversize rows flow straight to star edges.
+size — an executor OOM at exactly the skew it targets.  The engine counts
+bucket sizes with a window (sort-based, spills) and only expands buckets
+already proven small; oversize rows flow straight to star edges.
 """
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
+import candidate_oracle
 from wdedup_spark.operators.lsh import candidate_pairs
 
 
@@ -34,7 +37,7 @@ def skewed(spark):
 
 
 def test_star_policy_truncates_hot_bucket(spark, skewed):
-    pairs = candidate_pairs(skewed, max_bucket=16, oversize_policy="star")
+    pairs = candidate_pairs(skewed, max_bucket=16)
     got = {(r["conv_a"], r["conv_b"]) for r in pairs.collect()}
     # hot bucket → exactly m-1 star edges around the min id (0)
     star = {(0, i) for i in range(1, 100_000)}
@@ -44,31 +47,32 @@ def test_star_policy_truncates_hot_bucket(spark, skewed):
 
 def test_oversize_branch_builds_no_array(spark, skewed):
     """Plan-level guarantee: bucket sizes come from a window count (spills,
-    no buffer) and NO per-bucket array is ever built — the r6 expansion is
-    a size-gated self-join, so collect_list is gone entirely and the join
-    inputs are filtered on the window-computed size."""
-    pairs = candidate_pairs(skewed, max_bucket=16, oversize_policy="star")
+    no buffer) and NO per-bucket array is ever built — expansion is a
+    size-gated self-join, so collect_list is gone entirely and the join
+    inputs are filtered on the window-computed size.  A collision floor
+    folds collisions and star edges in exactly one aggregate on
+    (conv_a, conv_b)."""
+    pairs = candidate_pairs(skewed, max_bucket=16)
     optimized = pairs._jdf.queryExecution().optimizedPlan().toString().lower()
     assert "windowspecdefinition" in optimized, "size gate must be a window count"
-    # the r5 shape collected each small bucket into an array; the r6
-    # self-join builds no aggregation buffer at all
     assert "collect_list" not in optimized
     join_idx = optimized.index("join")
     gate_idx = optimized.index("<= 16")
     assert gate_idx > join_idx, "size filter must sit BELOW the join"
 
-
-def test_drop_policy_drops_hot_bucket(spark, skewed):
-    pairs = candidate_pairs(skewed, max_bucket=16, oversize_policy="drop")
-    got = {(r["conv_a"], r["conv_b"]) for r in pairs.collect()}
-    assert got == {(1, 2), (1, 3), (2, 3), (5, 9)}
+    floored = candidate_pairs(skewed, max_bucket=16, min_collisions=2)
+    plan = floored._jdf.queryExecution().optimizedPlan().toString()
+    agg_keys = re.findall(r"Aggregate \[([^\]]*)\]", plan)
+    assert len(agg_keys) == 1, plan
+    assert re.sub(r"#\d+L?", "", agg_keys[0]) == "conv_a, conv_b", plan
 
 
 def test_all_policy_unchanged(spark):
+    """max_bucket=None expands every bucket, whatever its size."""
     banded = _banded(
         spark, [(0, 1, 7), (0, 1, 8), (0, 1, 9), (1, 2, 7), (1, 2, 8)]
     )
-    pairs = candidate_pairs(banded, max_bucket=2, oversize_policy="all")
+    pairs = candidate_pairs(banded, max_bucket=None)
     got = {(r["conv_a"], r["conv_b"]) for r in pairs.collect()}
     assert got == {(7, 8), (7, 9), (8, 9)}
 
@@ -79,41 +83,15 @@ def test_min_collisions_floor_with_star(spark):
     rows = [(0, 1, 7), (0, 1, 8), (1, 2, 7), (1, 2, 8), (2, 3, 7), (2, 3, 9)]
     hot = [(3, 99, i) for i in range(20, 40)]
     banded = _banded(spark, rows + hot)
-    pairs = candidate_pairs(
-        banded, max_bucket=8, oversize_policy="star", min_collisions=2
-    )
+    pairs = candidate_pairs(banded, max_bucket=8, min_collisions=2)
     got = {(r["conv_a"], r["conv_b"]) for r in pairs.collect()}
     assert got == {(7, 8)} | {(20, i) for i in range(21, 40)}
-
-
-def _brute_pairs(rows, max_bucket, policy, min_collisions=1):
-    """Reference semantics of candidate_pairs in plain Python."""
-    from collections import defaultdict
-
-    buckets = defaultdict(list)
-    for band, bucket, i in rows:
-        buckets[(band, bucket)].append(i)
-    small_hits = defaultdict(int)
-    star = set()
-    for ids in buckets.values():
-        ids = sorted(set(ids))
-        if len(ids) < 2:
-            continue
-        if policy != "all" and len(ids) > max_bucket:
-            if policy == "star":
-                star |= {(ids[0], b) for b in ids[1:]}
-            continue
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                small_hits[(ids[x], ids[y])] += 1
-    small = {p for p, n in small_hits.items() if n >= min_collisions}
-    return small | star
 
 
 def test_windowed_path_equals_bruteforce_random(spark):
     """Property check: the window-gated implementation is semantically
     identical to the straightforward per-bucket enumeration across random
-    bucket structures, all policies, and collision floors."""
+    bucket structures, capped and uncapped buckets, and collision floors."""
     import random
 
     rng = random.Random(7)
@@ -133,11 +111,11 @@ def test_windowed_path_equals_bruteforce_random(spark):
                 seen.add((b, i))
                 clean.append((b, bkt, i))
         df = _banded(spark, clean)
-        for policy in ("star", "drop", "all"):
+        for max_bucket in (5, None):
             for mc in (1, 2):
                 got = {
                     (r["conv_a"], r["conv_b"])
-                    for r in candidate_pairs(df, 5, policy, min_collisions=mc).collect()
+                    for r in candidate_pairs(df, max_bucket, min_collisions=mc).collect()
                 }
-                want = _brute_pairs(clean, 5, policy, mc)
-                assert got == want, (trial, policy, mc)
+                want = candidate_oracle.candidate_pairs(clean, max_bucket, mc)
+                assert got == want, (trial, max_bucket, mc)

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from wdedup_spark import oracle
 from wdedup_spark.operators.assemble import assemble_conversations
 from wdedup_spark.operators.lsh import minhash_lsh_candidates
-from wdedup_spark.operators.minhash import add_minhash, add_shingles
+from wdedup_spark.operators.minhash import add_signatures
 from wdedup_spark.operators.simhash import simhash_candidates
 from wdedup_spark.operators.substring import substring_candidates
 from wdedup_spark.operators.verify import verify_pairs
@@ -31,12 +31,19 @@ def oracle_pairs_high(conv):
     return oracle.all_pairs_jaccard(pdf["conv_id"], pdf["doc"], K, THRESHOLD)
 
 
+def _signed(conv):
+    """The fused signing path the entry queries use (MinHash lanes and
+    shingle sets only)."""
+    return add_signatures(
+        conv, "doc", k=K, n_perms=N_PERMS, enable_simhash=False, enable_substring=False
+    )
+
+
 def test_lsh_verified_recall(spark, conv, oracle_pairs_high, tiny):
-    shingled = add_shingles(conv, "doc", K)
-    signed = add_minhash(shingled, "shingles", N_PERMS)
+    signed = _signed(conv)
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
-                                   oversize_policy="all")
-    verified = verify_pairs(cands, shingled, threshold=THRESHOLD)
+                                   max_bucket=None)
+    verified = verify_pairs(cands, signed, threshold=THRESHOLD)
     got = {(r["conv_a"], r["conv_b"]) for r in verified.collect()}
     want = {
         (r.conv_a, r.conv_b) for r in oracle_pairs_high.itertuples(index=False)
@@ -55,11 +62,10 @@ def test_lsh_verified_recall(spark, conv, oracle_pairs_high, tiny):
 
 
 def test_verified_jaccard_values_match_oracle(spark, conv, oracle_pairs_high):
-    shingled = add_shingles(conv, "doc", K)
-    signed = add_minhash(shingled, "shingles", N_PERMS)
+    signed = _signed(conv)
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
-                                   oversize_policy="all")
-    verified = verify_pairs(cands, shingled, threshold=THRESHOLD).toPandas()
+                                   max_bucket=None)
+    verified = verify_pairs(cands, signed, threshold=THRESHOLD).toPandas()
     want = {
         (r.conv_a, r.conv_b): r.jaccard for r in oracle_pairs_high.itertuples(index=False)
     }

@@ -24,7 +24,7 @@ def _pairs_for(spark, sig_a: int, sig_b: int):
     banded = simhash_chunks(df, "simhash", "conv_id", max_hamming=3)
     return {
         (r["conv_a"], r["conv_b"])
-        for r in candidate_pairs(banded, 64, "all").collect()
+        for r in candidate_pairs(banded, max_bucket=None).collect()
     }
 
 

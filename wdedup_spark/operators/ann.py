@@ -303,8 +303,7 @@ def lsh_cosine_pairs(
     n_bits: int = 10,
     n_tables: int = 16,
     seed: int = 42,
-    max_bucket: int = 4096,
-    oversize_policy: str = "star",
+    max_bucket: int | None = 4096,
     min_collisions: int = 1,
 ) -> DataFrame:
     """Embedding near-dup pairs (cosine >= threshold) sub-quadratically:
@@ -356,7 +355,7 @@ def lsh_cosine_pairs(
     banded = e.select("id", _sigs(F.col("v")).alias("keys")).select(
         "id", F.posexplode("keys").alias("band", "bucket")
     ).select("band", "bucket", "id")
-    cands = candidate_pairs(banded, max_bucket, oversize_policy, min_collisions).select(
+    cands = candidate_pairs(banded, max_bucket, min_collisions).select(
         F.col("conv_a").alias("vec_a"), F.col("conv_b").alias("vec_b")
     )
     va = e.select(F.col("id").alias("vec_a"), F.col("v").alias("va"))
@@ -380,8 +379,7 @@ def lsh_cosine_pairs_sparse(
     n_bits: int = 10,
     n_tables: int = 16,
     seed: int = 42,
-    max_bucket: int = 4096,
-    oversize_policy: str = "star",
+    max_bucket: int | None = 4096,
     min_collisions: int = 1,
 ) -> DataFrame:
     """``lsh_cosine_pairs`` for SPARSE vectors — parallel (index, value)
@@ -462,7 +460,7 @@ def lsh_cosine_pairs_sparse(
         e.select("id", F.explode(_sigs(F.col("ii"), F.col("vv"))).alias("bucket"))
         .select(F.lit(0).alias("band"), "bucket", "id")
     )
-    cands = candidate_pairs(banded, max_bucket, oversize_policy, min_collisions).select(
+    cands = candidate_pairs(banded, max_bucket, min_collisions).select(
         F.col("conv_a").alias("vec_a"), F.col("conv_b").alias("vec_b")
     )
 

@@ -43,37 +43,3 @@ def exact_dup_clusters(
             F.count(F.lit(1)).alias("n_members"),
         )
     )
-
-
-def exact_dup_pairs(df: DataFrame, text_col: str = "doc", id_col: str = "conv_id") -> DataFrame:
-    """All pairs of identical documents — edges for the cluster stage.
-    Emitted as (rep, member) star edges, not the full clique: a cluster of
-    m members yields m-1 edges, not m(m-1)/2 — the same economy the
-    reference gets by collapsing on first collision.  Derived by re-join
-    on the digest (no collect_list: a 10^8-member boilerplate clique must
-    never materialize as one aggregation-buffer array)."""
-    fp = add_fingerprint(df, text_col).select("fp", F.col(id_col).alias("id"))
-    clusters = (
-        fp.groupBy("fp")
-        .agg(F.min("id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-    )
-    return (
-        fp.join(clusters.select("fp", "rep"), "fp")
-        .filter(F.col("id") != F.col("rep"))
-        .select(F.col("rep").alias("conv_a"), F.col("id").alias("conv_b"))
-    )
-
-
-def deduplicate_exact(df: DataFrame, text_col: str = "doc", id_col: str = "conv_id") -> DataFrame:
-    """Keep one representative row per distinct document (first occurrence).
-
-    Implemented as ``min_by(struct(*), id)`` per fingerprint — a single
-    hash aggregate, no window function, no sort."""
-    fp = add_fingerprint(df, text_col)
-    cols = [c for c in fp.columns if c != "fp"]
-    return (
-        fp.groupBy("fp")
-        .agg(F.min_by(F.struct(*cols), F.col(id_col)).alias("row"))
-        .select("row.*")
-    )

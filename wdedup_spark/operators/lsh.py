@@ -6,19 +6,19 @@ band key replaces all lg(N/M) merge levels (SURVEY.md §2 O6-O8).
 
 Scale design:
 * Banding is JVM-side (``xxhash64`` over signature slices) — no Python.
-* Candidate pairs are emitted per bucket via a SIZE-GATED co-partitioned
-  self-join (r6 — the window count runs first, so only buckets with
-  1 < m <= max_bucket ever reach the join): a bucket of m docs yields
-  m(m-1)/2 pairs only while m <= max_bucket; oversize buckets (boilerplate
-  floods) degrade to m-1 star edges around the min id — bounded output,
-  connectivity preserved for clustering (the reference's "collapse on
-  first collision" economy, src/wmerge.cpp:124-127).  No per-bucket
-  array is ever built (the r5 collect_list shape was both slower and
-  carried the aggregation-buffer footprint).
-* Dedup of the same pair across bands is one ``distinct`` on (a, b) —
-  map-side partial aggregation absorbs most of it.
+* ONE bucket-expansion engine, ``candidate_pairs_multi``: a window count
+  sizes every (channel, band, bucket) first, buckets with
+  1 < m <= max_bucket expand through a co-partitioned self-join, and
+  oversize buckets (boilerplate floods) degrade to m-1 star edges around
+  the min id — bounded output, connectivity preserved for clustering
+  (the reference's "collapse on first collision" economy,
+  src/wmerge.cpp:124-127).  No per-bucket array is ever built.
+* The engine emits raw collision rows; cross-band repeats, collision
+  floors and star bypass fold in ONE groupBy(conv_a, conv_b) — the
+  pipeline's per-channel aggregate (build_candidates) or the
+  single-channel ``candidate_pairs`` wrapper's.
 * Skew: AQE skew-join is on (session.py); hot *conversations* are removed
-  earlier by exact dedup; hot *buckets* are bounded by the star policy.
+  earlier by exact dedup; hot *buckets* are bounded by the star edges.
 """
 
 from __future__ import annotations
@@ -74,66 +74,61 @@ def band_buckets(
     )
 
 
-def candidate_pairs(
+def candidate_pairs_multi(
     banded: DataFrame,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    oversize_policy: str = "star",
-    min_collisions: int = 1,
-    dedup: bool = True,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
     new_col: str | None = None,
 ) -> DataFrame:
-    """band buckets → distinct candidate pairs (conv_a < conv_b).
+    """The bucket-expansion engine: ``(ch, band, bucket, id[, new_col])``
+    rows → RAW collision rows ``(ch, conv_a, conv_b, is_star)``.
 
-    ``dedup=False`` skips the final ``distinct()`` exchange: callers that
-    immediately aggregate on (conv_a, conv_b) anyway (the pipeline's
-    channel-union groupBy) get identical results one shuffle cheaper —
-    cross-band duplicates just carry into that aggregate.
+    ``ch`` is a channel tag (a narrow integer — guide §2.3) and buckets are
+    keyed per (ch, band, bucket), so every channel gets its own size gate,
+    star economy and incremental anchor while all channels share ONE
+    window exchange and ONE self-join (the pipeline's candidate stage used
+    to run one of each per channel).
+
+    Output is one row per within-bucket collision (a pair colliding in k
+    of a channel's buckets appears k times) plus one flagged row per star
+    edge.  No aggregation happens here: the caller owns the collision
+    floors and folds them into its ONE groupBy(conv_a, conv_b) — the
+    pipeline's per-channel tag set (build_candidates) or the
+    single-channel floor (``candidate_pairs``).
+
+    ``max_bucket``: buckets with more members emit m-1 star edges to their
+    min id instead of m(m-1)/2 pairs — bounded output, connectivity kept
+    for clustering (pairwise similarity inside a boilerplate flood is
+    resolved transitively by the cluster stage).  ``None`` means uncapped:
+    no size gate at all, singleton buckets emit nothing from the a < b
+    join (exact all-pairs queries, small data).
 
     ``new_col``: INCREMENTAL mode — ``banded`` carries a boolean column of
     that name marking the new batch's ids, and only pairs touching at
     least one new id are emitted.  This is what makes a daily increment
     O(new × bucket) instead of O(corpus²): old×old pairs were already
-    generated (and verified/clustered) by the run that committed them, so
-    within-bucket expansion filters them out and oversize buckets emit
-    star edges for NEW members only (old members were star-connected to
-    the same bucket-min by the base run at the same config, so
-    connectivity through the flood is already in the cluster state).
-
-    oversize_policy for buckets with > max_bucket members:
-      "star" — emit m-1 edges to the bucket-min id (bounded, keeps
-               connectivity; pairwise similarity within the flood is
-               resolved transitively by the cluster stage)
-      "drop" — skip the bucket (recall loss, recorded by caller metrics)
-      "all"  — no cap (tests / small data)
-
-    min_collisions: require the pair to co-occur in at least this many
-    band buckets.  At corpus scale single-band collisions are quadratic
-    noise (baseline similarity s contributes n²·s^r expected pairs);
-    requiring 2 of b bands suppresses noise ~quadratically while recall
-    at the dedup threshold stays ~1 (s=0.8, b=32, r=4 → P[≥2] ≈
-    0.999998).  Star edges (structural connectivity) bypass the floor.
+    generated (and verified/clustered) by the run that committed them.
+    Oversize buckets emit star edges for NEW members only, anchored at
+    the min over OLD members (see below).
 
     Skew safety: bucket sizes are established FIRST (window count over the
-    band/bucket exchange — sort-based, spills, never an array), so
-    ``collect_list`` only ever runs on buckets already proven
-    ``m <= max_bucket``.  A 10^7-member boilerplate flood therefore never
-    materializes a 10^7-element aggregation buffer: its rows flow straight
-    to the star branch as (min_id, id) edges, one row at a time.
+    (ch, band, bucket) exchange — sort-based, spills, never an array), so
+    only buckets already proven ``1 < m <= max_bucket`` reach the
+    self-join.  A 10^7-member boilerplate flood never materializes a
+    per-bucket buffer: its rows flow straight to the star branch as
+    (min_id, id) edges, one row at a time.  The raw stream carries at most
+    Σ m·(m−1)/2 rows over gated buckets plus the star edges.
     """
+    keys = ["ch", "band", "bucket"]
+
     # within-bucket expansion as a co-partitioned SELF-JOIN on the bucket
     # key (r6): the previous shape (collect_list per bucket + double
     # explode + filter) paid an ObjectHashAggregate building an array per
     # bucket and an interpreted two-level explode — measured 2.4× slower
-    # end-to-end than the join at 1.6M banded rows.  The join's two
-    # inputs are the SAME subtree, so Catalyst reuses one Exchange
-    # (ReusedExchange — no second shuffle), and no per-bucket array is
-    # ever materialized: a bucket of m rows streams m(m-1)/2 join rows.
-    # Output bounds are unchanged — the sized policies still gate on the
-    # window count FIRST, so only buckets with 1 < m <= max_bucket reach
-    # the join; oversize buckets take the star path row-by-row.
+    # end-to-end than the join at 1.6M banded rows.  No per-bucket array
+    # is ever materialized: a bucket of m rows streams m(m-1)/2 join rows.
     def _expand(rows: DataFrame) -> DataFrame:
-        lcols = [F.col("band"), F.col("bucket"), F.col("id").alias("_ida")]
-        rcols = [F.col("band"), F.col("bucket"), F.col("id").alias("_idb")]
+        lcols = [*[F.col(k) for k in keys], F.col("id").alias("_ida")]
+        rcols = [*[F.col(k) for k in keys], F.col("id").alias("_idb")]
         if new_col:
             lcols.append(F.col(new_col).alias("_na"))
             rcols.append(F.col(new_col).alias("_nb"))
@@ -148,182 +143,96 @@ def candidate_pairs(
         p = (
             rows.select(*lcols)
             .hint("shuffle_hash")
-            .join(rows.select(*rcols), ["band", "bucket"])
-            .filter(F.col("_ida") < F.col("_idb"))
-        )
-        if new_col:
-            p = p.filter(F.col("_na") | F.col("_nb"))
-        return p.select(F.col("_ida").alias("a"), F.col("_idb").alias("b"))
-
-    if oversize_policy == "all":
-        # no cap → no size gate needed: singleton buckets emit nothing
-        # from the a < b join (tests/small data)
-        pairs_small = _expand(banded)
-        big_rows = None
-    else:
-        w = Window.partitionBy("band", "bucket")
-        extra_cols = []
-        if new_col:
-            # incremental star anchor: the min over OLD members — the node
-            # the base run's star edges already orbit.  A new bucket-min
-            # would otherwise be isolated (old members' committed edges
-            # point at the OLD min, and new members only edge to the
-            # anchor).  All-new flood → fall back to min over new.
-            extra_cols = [
-                new_col,
-                F.coalesce(
-                    F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
-                    F.min(F.when(F.col(new_col), F.col("id"))).over(w),
-                ).alias("anchor"),
-            ]
-        counted = banded.select(
-            "band",
-            "bucket",
-            "id",
-            *extra_cols,
-            F.count(F.lit(1)).over(w).alias("m"),
-            F.min("id").over(w).alias("min_id"),
-        ).filter(F.col("m") > 1)
-        # the join below reuses the window's hash partitioning on
-        # (band, bucket) — one exchange total
-        small = counted.filter(F.col("m") <= max_bucket)
-        pairs_small = _expand(small)
-        big_rows = counted.filter(F.col("m") > max_bucket)
-
-    if min_collisions > 1:
-        pairs_small = (
-            pairs_small.groupBy("a", "b")
-            .agg(F.count(F.lit(1)).alias("_hits"))
-            .filter(F.col("_hits") >= min_collisions)
-            .select("a", "b")
-        )
-
-    if oversize_policy == "star" and big_rows is not None:
-        # star edges row-by-row: (anchor, member) — no array ever built.
-        # Incremental: only NEW members need edges (old members were
-        # star-connected to the old-member min by the base run at the
-        # same config), anchored at that same old min.
-        if new_col:
-            pairs_big = (
-                big_rows.filter(F.col(new_col) & (F.col("id") != F.col("anchor")))
-                .select(
-                    F.least("anchor", "id").alias("a"),
-                    F.greatest("anchor", "id").alias("b"),
-                )
-            )
-        else:
-            pairs_big = big_rows.filter(F.col("id") != F.col("min_id")).select(
-                F.col("min_id").alias("a"), F.col("id").alias("b")
-            )
-        pairs = pairs_small.unionByName(pairs_big)
-    else:
-        pairs = pairs_small
-
-    if dedup:
-        pairs = pairs.distinct()
-    return pairs.select(F.col("a").alias("conv_a"), F.col("b").alias("conv_b"))
-
-
-def candidate_pairs_multi(
-    banded: DataFrame,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    oversize_policy: str = "star",
-    new_col: str | None = None,
-    channel_col: str = "ch",
-) -> DataFrame:
-    """Multi-channel ``candidate_pairs`` (r6): ``banded`` carries a
-    channel tag (``channel_col``, a narrow integer — guide §2.3) and the
-    bucket machinery is keyed per (channel, band, bucket), so every
-    channel behaves EXACTLY like its own ``candidate_pairs`` call — same
-    per-bucket size gate, same star economy, same incremental anchor —
-    but all channels share ONE window exchange and ONE self-join instead
-    of one of each per channel (the pipeline's candidate stage ran three).
-
-    Output: RAW collision rows ``(channel_col, conv_a, conv_b, is_star)``
-    — one row per within-bucket collision (so a pair colliding in k of a
-    channel's buckets appears k times) plus one flagged row per star
-    edge.  No aggregation happens here: the caller owns the per-channel
-    collision floors and the per-pair tag set, and folding both into its
-    ONE groupBy(a, b) (build_candidates) is exactly one exchange cheaper
-    than aggregating per (channel, a, b) first.  Bounds are unchanged:
-    the window size gate still runs before the join, so the raw stream
-    carries at most Σ m·(m−1)/2 rows over gated buckets plus star edges.
-
-    KEEP IN SYNC with ``candidate_pairs`` above: the window gate, the
-    ``_expand`` self-join (shuffle_hash rationale), and the star/anchor
-    logic are deliberately the same machinery with a channel key column
-    added — a fix to either copy (e.g. the incremental anchor coalesce)
-    almost certainly applies to both.  ``candidate_pairs`` stays
-    separate because its single-channel callers (simhash_candidates,
-    minhash_lsh_candidates, the cosine operators) have plan-pinned
-    shapes a constant channel column would perturb for zero gain.
-    """
-    keys = [channel_col, "band", "bucket"]
-
-    def _expand(rows: DataFrame) -> DataFrame:
-        lcols = [*[F.col(k) for k in keys], F.col("id").alias("_ida")]
-        rcols = [*[F.col(k) for k in keys], F.col("id").alias("_idb")]
-        if new_col:
-            lcols.append(F.col(new_col).alias("_na"))
-            rcols.append(F.col(new_col).alias("_nb"))
-        # same shuffle_hash rationale as candidate_pairs: size estimates
-        # through the Python signature UDFs are garbage; both sides are
-        # the SAME subtree, so the second exchange is a ReusedExchange
-        p = (
-            rows.select(*lcols)
-            .hint("shuffle_hash")
             .join(rows.select(*rcols), keys)
             .filter(F.col("_ida") < F.col("_idb"))
         )
         if new_col:
             p = p.filter(F.col("_na") | F.col("_nb"))
-        return p.select(channel_col, F.col("_ida").alias("a"), F.col("_idb").alias("b"))
+        return p.select("ch", F.col("_ida").alias("a"), F.col("_idb").alias("b"))
 
-    if oversize_policy == "all":
-        pairs_small = _expand(banded)
-        big_rows = None
+    if max_bucket is None:
+        return _expand(banded).select(
+            "ch", F.col("a").alias("conv_a"), F.col("b").alias("conv_b"),
+            F.lit(False).alias("is_star"),
+        )
+
+    w = Window.partitionBy(*keys)
+    extra_cols = []
+    if new_col:
+        # incremental star anchor: the min over OLD members — the node
+        # the base run's star edges already orbit.  A new bucket-min
+        # would otherwise be isolated (old members' committed edges
+        # point at the OLD min, and new members only edge to the
+        # anchor).  All-new flood → fall back to min over new.
+        extra_cols = [
+            new_col,
+            F.coalesce(
+                F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
+                F.min(F.when(F.col(new_col), F.col("id"))).over(w),
+            ).alias("anchor"),
+        ]
+    counted = banded.select(
+        *keys,
+        "id",
+        *extra_cols,
+        F.count(F.lit(1)).over(w).alias("m"),
+        F.min("id").over(w).alias("min_id"),
+    ).filter(F.col("m") > 1)
+    # the join below reuses the window's hash partitioning on the bucket
+    # key — one exchange total
+    pairs = _expand(counted.filter(F.col("m") <= max_bucket)).withColumn(
+        "is_star", F.lit(False)
+    )
+    big_rows = counted.filter(F.col("m") > max_bucket)
+    # star edges row-by-row: (anchor, member) — no array ever built.
+    # Incremental: only NEW members need edges (old members were
+    # star-connected to the old-member min by the base run at the same
+    # config), anchored at that same old min.
+    if new_col:
+        pairs_big = big_rows.filter(
+            F.col(new_col) & (F.col("id") != F.col("anchor"))
+        ).select(
+            "ch", F.least("anchor", "id").alias("a"), F.greatest("anchor", "id").alias("b")
+        )
     else:
-        w = Window.partitionBy(*keys)
-        extra_cols = []
-        if new_col:
-            extra_cols = [
-                new_col,
-                F.coalesce(
-                    F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
-                    F.min(F.when(F.col(new_col), F.col("id"))).over(w),
-                ).alias("anchor"),
-            ]
-        counted = banded.select(
-            *keys,
-            "id",
-            *extra_cols,
-            F.count(F.lit(1)).over(w).alias("m"),
-            F.min("id").over(w).alias("min_id"),
-        ).filter(F.col("m") > 1)
-        small = counted.filter(F.col("m") <= max_bucket)
-        pairs_small = _expand(small)
-        big_rows = counted.filter(F.col("m") > max_bucket)
-
-    pairs = pairs_small.withColumn("is_star", F.lit(False))
-
-    if oversize_policy == "star" and big_rows is not None:
-        if new_col:
-            pairs_big = (
-                big_rows.filter(F.col(new_col) & (F.col("id") != F.col("anchor")))
-                .select(
-                    channel_col,
-                    F.least("anchor", "id").alias("a"),
-                    F.greatest("anchor", "id").alias("b"),
-                )
-            )
-        else:
-            pairs_big = big_rows.filter(F.col("id") != F.col("min_id")).select(
-                channel_col, F.col("min_id").alias("a"), F.col("id").alias("b")
-            )
-        pairs = pairs.unionByName(pairs_big.withColumn("is_star", F.lit(True)))
-
+        pairs_big = big_rows.filter(F.col("id") != F.col("min_id")).select(
+            "ch", F.col("min_id").alias("a"), F.col("id").alias("b")
+        )
+    pairs = pairs.unionByName(pairs_big.withColumn("is_star", F.lit(True)))
     return pairs.select(
-        channel_col, F.col("a").alias("conv_a"), F.col("b").alias("conv_b"), "is_star"
+        "ch", F.col("a").alias("conv_a"), F.col("b").alias("conv_b"), "is_star"
+    )
+
+
+def candidate_pairs(
+    banded: DataFrame,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    min_collisions: int = 1,
+) -> DataFrame:
+    """Single-channel ``(band, bucket, id)`` → distinct candidate pairs
+    ``(conv_a, conv_b)``, conv_a < conv_b: one engine pass under a
+    constant channel tag, folded by ONE groupBy(conv_a, conv_b).
+
+    min_collisions: require the pair to co-occur in at least this many
+    band buckets.  At corpus scale single-band collisions are quadratic
+    noise (baseline similarity s contributes n²·s^r expected pairs);
+    requiring 2 of b bands suppresses noise ~quadratically while recall
+    at the dedup threshold stays ~1 (s=0.8, b=32, r=4 → P[≥2] ≈
+    0.999998).  Star edges (structural connectivity) bypass the floor —
+    the same per-channel rule build_candidates folds.
+    """
+    raw = candidate_pairs_multi(
+        banded.select(F.lit(0).cast("tinyint").alias("ch"), "band", "bucket", "id"),
+        max_bucket,
+    )
+    return (
+        raw.groupBy("conv_a", "conv_b")
+        .agg(
+            F.count(F.when(~F.col("is_star"), F.lit(1))).alias("_hits"),
+            F.max("is_star").alias("_star"),
+        )
+        .filter((F.col("_hits") >= min_collisions) | F.col("_star"))
+        .select("conv_a", "conv_b")
     )
 
 
@@ -333,10 +242,8 @@ def minhash_lsh_candidates(
     sig_col: str = "sig",
     n_perms: int = 128,
     n_bands: int = DEFAULT_NUM_BANDS,
-    max_bucket: int = DEFAULT_MAX_BUCKET,
-    oversize_policy: str = "star",
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
     min_collisions: int = 1,
-    dedup: bool = True,
 ) -> DataFrame:
     banded = band_buckets(signed, sig_col, id_col, n_bands, n_perms)
-    return candidate_pairs(banded, max_bucket, oversize_policy, min_collisions, dedup)
+    return candidate_pairs(banded, max_bucket, min_collisions)

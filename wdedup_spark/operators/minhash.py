@@ -48,23 +48,6 @@ def shingle_udf(k: int = DEFAULT_K):
     return _shingle
 
 
-def minhash_udf(n_perms: int = DEFAULT_NUM_PERMS, seed: int = DEFAULT_SEED):
-    """array<long> shingles → array<long> MinHash signature (fixed width)."""
-    a, b = hashing.minhash_params(n_perms, seed)
-
-    @pandas_udf("array<long>")
-    def _minhash(shingle_col: pd.Series) -> pd.Series:
-        import numpy as np
-
-        out = []
-        for sh in shingle_col:
-            s = np.asarray(sh, dtype=np.int64).view(np.uint64)
-            out.append(hashing.to_i64(hashing.minhash_signature(s, a, b)))
-        return pd.Series(out)
-
-    return _minhash
-
-
 def sign_udf(
     k: int = DEFAULT_K,
     n_perms: int = DEFAULT_NUM_PERMS,
@@ -150,13 +133,3 @@ def add_signatures(
 
 def add_shingles(df: DataFrame, text_col: str = "doc", k: int = DEFAULT_K, out_col: str = "shingles") -> DataFrame:
     return df.withColumn(out_col, shingle_udf(k)(F.col(text_col)))
-
-
-def add_minhash(
-    df: DataFrame,
-    shingle_col: str = "shingles",
-    n_perms: int = DEFAULT_NUM_PERMS,
-    seed: int = DEFAULT_SEED,
-    out_col: str = "sig",
-) -> DataFrame:
-    return df.withColumn(out_col, minhash_udf(n_perms, seed)(F.col(shingle_col)))

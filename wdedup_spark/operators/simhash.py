@@ -138,19 +138,18 @@ def simhash_candidates(
     text_col: str = "doc",
     id_col: str = "conv_id",
     max_hamming: int = DEFAULT_HAMMING,
-    max_bucket: int = 256,
+    max_bucket: int | None = 256,
     k: int = 3,
     feature: str = "poly",
-    oversize_policy: str = "star",
 ) -> DataFrame:
     """→ (conv_a, conv_b) pairs with Hamming(simhash) <= max_hamming.
 
     The pigeonhole buckets generate candidates; the exact distance filter
     re-joins the two signatures and checks ``bit_count(xor) <= d``.  With
-    ``oversize_policy="all"`` the pigeonhole guarantee makes the result
-    EXACTLY the set of all pairs within the Hamming budget (the DuckDB
-    oracle's all-pairs definition); "star" bounds pathological buckets at
-    scale at the cost of completeness inside them.
+    ``max_bucket=None`` the pigeonhole guarantee makes the result EXACTLY
+    the set of all pairs within the Hamming budget (the DuckDB oracle's
+    all-pairs definition); a cap bounds pathological buckets at scale
+    with star edges, at the cost of completeness inside them.
     """
     # checkpoint: the signature pass (Python md5/hash kernels) feeds the
     # banding AND both sides of the exact-distance verify join — without
@@ -161,9 +160,7 @@ def simhash_candidates(
         .localCheckpoint(eager=False)
     )
     sigs = signed.select(F.col(id_col).alias("id"), "simhash")
-    cands = candidate_pairs(
-        simhash_chunks(signed, "simhash", id_col, max_hamming), max_bucket, oversize_policy
-    )
+    cands = candidate_pairs(simhash_chunks(signed, "simhash", id_col, max_hamming), max_bucket)
     return (
         cands.join(sigs.withColumnRenamed("id", "conv_a").withColumnRenamed("simhash", "sh_a"), "conv_a")
         .join(sigs.withColumnRenamed("id", "conv_b").withColumnRenamed("simhash", "sh_b"), "conv_b")

@@ -129,17 +129,17 @@ def substring_candidates(
     k: int = DEFAULT_KGRAM,
     w: int = DEFAULT_WINDOW,
     min_span: int = 100,
-    max_bucket: int = 64,
-    oversize_policy: str = "star",
+    max_bucket: int | None = 64,
 ) -> DataFrame:
     """→ (conv_a, conv_b, common_run) for pairs sharing a verbatim token
     span of >= min_span tokens (min_span must be >= w + k - 1).
 
-    With ``oversize_policy="all"`` the winnowing guarantee (spans >=
-    w + k - 1 share an anchor) plus the exact common-run verification make
-    the output EXACTLY the all-pairs common-run >= min_span set — the
-    contract the DuckDB diagonal-islands oracle checks.  "star" bounds hot
-    anchors (boilerplate spans shared by thousands of docs) at scale.
+    With ``max_bucket=None`` the winnowing guarantee (spans >= w + k - 1
+    share an anchor) plus the exact common-run verification make the
+    output EXACTLY the all-pairs common-run >= min_span set — the
+    contract the DuckDB diagonal-islands oracle checks.  A cap bounds hot
+    anchors (boilerplate spans shared by thousands of docs) at scale with
+    star edges.
     """
     # checkpoint: the winnowing pass feeds the anchor explode AND both
     # sides of the common-run verify join — without this it executes
@@ -151,7 +151,7 @@ def substring_candidates(
     anchored = fp.select("id", F.explode("anchors").alias("bucket")).withColumn(
         "band", F.lit(0)
     )
-    cands = candidate_pairs(anchored.select("band", "bucket", "id"), max_bucket, oversize_policy)
+    cands = candidate_pairs(anchored, max_bucket)
     docs = fp.select("id", "doc")
     verified = (
         cands.join(docs.select(F.col("id").alias("conv_a"), F.col("doc").alias("doc_a")), "conv_a")

@@ -17,8 +17,8 @@ Scale architecture (the 100 TB story):
 * sign-before-shuffle — candidates/verify exchange signatures and ids,
   never documents; worst-case wide-stage row is ~1 KB regardless of
   conversation length;
-* candidate pair volume is bounded per bucket (lsh.candidate_pairs
-  max_bucket + star policy), so one pathological bucket cannot explode
+* candidate pair volume is bounded per bucket (lsh.candidate_pairs_multi
+  max_bucket + star edges), so one pathological bucket cannot explode
   the verify stage;
 * each stage commits row counts / bytes / file lineage to the ledger —
   the observability the reference gets from profile sizes in its WAL.
@@ -85,8 +85,8 @@ class PipelineConfig:
     # threshold - edit_margin are unreachable by design (documented bound,
     # not a bug: a candidate must still collide in >= min_band_collisions
     # LSH bands to be seen at all)
-    max_bucket: int = 256
-    oversize_policy: str = "star"
+    max_bucket: int | None = 256   # larger buckets emit star edges;
+    # None expands every bucket (uncapped — small data and tests)
     min_band_collisions: int = 2   # ≥2 of 32 bands: kills quadratic
     # single-band noise at corpus scale; recall at threshold ~0.999998
     sync_ranges: int = 8           # sub-stage commit granularity for the
@@ -121,8 +121,8 @@ def build_candidates(
     Shape (r6): the three channels' banded streams are unioned under a
     tinyint channel tag and expanded by ONE ``candidate_pairs_multi``
     pass — one window exchange + one self-join for all channels instead
-    of one of each per channel (guide §2.4; same per-channel gating,
-    floors and star economy — equivalence pinned in
+    of one of each per channel (guide §2.4; per-channel gating, floors
+    and star economy pinned against a plain-Python reference in
     tests/test_build_candidates_equiv.py).  The raw collision/star rows
     then fold into ONE groupBy(conv_a, conv_b) carrying per-channel hit
     counts and star flags — the per-(channel, pair) floor aggregate and
@@ -173,9 +173,7 @@ def build_candidates(
     for s in streams[1:]:
         banded = banded.unionByName(s)
 
-    raw = candidate_pairs_multi(
-        banded, cfg.max_bucket, cfg.oversize_policy, new_col=new_col,
-    )
+    raw = candidate_pairs_multi(banded, cfg.max_bucket, new_col=new_col)
 
     def _ch(c: int):
         return F.col("ch") == F.lit(c)
@@ -192,7 +190,7 @@ def build_candidates(
     )
     # per-channel pass condition: collision floor (minhash: >= 2 of 32
     # bands; others: >= 1) OR a star edge, which bypasses the floor —
-    # identical to the per-channel candidate_pairs semantics
+    # the same rule candidate_pairs folds for a single channel
     passes = [
         (F.col("_h0") >= cfg.min_band_collisions) | F.coalesce("_s0", F.lit(False)),
         (F.col("_h1") >= 1) | F.coalesce("_s1", F.lit(False)),
@@ -614,8 +612,8 @@ def run_incremental(
       one fp-join against the chain's exact tables;
     * candidate generation re-bands the committed sign tables JVM-side
       (narrow scan, no Python, no re-signing) and expands only pairs
-      touching the new batch (``candidate_pairs(new_col=...)``); oversize
-      buckets emit star edges for new members anchored at the old-member
+      touching the new batch (``candidate_pairs_multi(new_col=...)``);
+      oversize buckets emit star edges for new members anchored at the old-member
       min — old×old pairs are never regenerated;
     * verify's Python (Jaccard/edit/common-run) sees only those pairs;
     * clustering is ``incremental_update``: CC on the rep-contracted
@@ -625,7 +623,7 @@ def run_incremental(
     Equivalence caveat (tested): clusters match a full recompute on the
     union EXCEPT where a bucket crosses ``max_bucket`` only after the
     increment — new members then star-connect instead of all-pairing, the
-    same boundedness-for-recall trade the batch star policy makes.
+    same boundedness-for-recall trade the batch star edges make.
     Containment-threshold caveat: chain days committed at a HIGHER
     containment threshold are REFUSED (silent old×old holes — no parity
     possible); days committed at a LOWER threshold are accepted but make
