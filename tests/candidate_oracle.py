@@ -25,6 +25,8 @@ from __future__ import annotations
 from collections import Counter, defaultdict
 from itertools import combinations
 
+from wdedup_spark.plans.pipeline import MAX_HAMMING, MIN_BAND_COLLISIONS
+
 _U64 = (1 << 64) - 1
 
 
@@ -110,9 +112,9 @@ def build_candidates(signed_rows, cfg, new_col=None):
         for r in signed_rows
     ]
     channels = {"minhash": (_minhash_buckets(docs, cfg.n_bands, cfg.n_perms),
-                            cfg.min_band_collisions)}
+                            MIN_BAND_COLLISIONS)}
     if cfg.enable_simhash:
-        channels["simhash"] = (_simhash_buckets(docs, cfg.max_hamming), 1)
+        channels["simhash"] = (_simhash_buckets(docs, MAX_HAMMING), 1)
     if cfg.enable_substring:
         channels["substring"] = (_anchor_buckets(docs), 1)
     simhash = {d["id"]: d["simhash"] & _U64 for d in docs}
@@ -124,7 +126,7 @@ def build_candidates(signed_rows, cfg, new_col=None):
         if name == "simhash":
             passed = {
                 (a, b) for a, b in passed
-                if bin(simhash[a] ^ simhash[b]).count("1") <= cfg.max_hamming
+                if bin(simhash[a] ^ simhash[b]).count("1") <= MAX_HAMMING
             }
         for p in passed:
             via[p].add(name)

@@ -7,7 +7,7 @@ per-channel floors, star edges and the simhash Hamming check into one
 groupBy.  This test diffs full (conv_a, conv_b, via) outputs against the
 plain-Python reference in ``candidate_oracle`` across:
 
-* the default config (max_bucket=256, min_band_collisions=2),
+* the default config (max_bucket=256, MIN_BAND_COLLISIONS=2),
 * a flood corpus with a tiny max_bucket, so star edges dominate,
 * uncapped buckets (max_bucket=None), on the flood and the plain corpus,
 * incremental mode (new_col batch flag + old-anchor star edges).

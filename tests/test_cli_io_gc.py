@@ -125,3 +125,28 @@ def test_cli_dedup_and_findfirst(spark, tiny, tmp_path, monkeypatch):
     words.write_text("a b a q b\n")
     assert cli.main(["findfirst", "--input", str(words)]) == 0
 
+
+def test_cli_dedup_incr_honours_sync_ranges(spark, tmp_path, monkeypatch):
+    """dedup-incr runs the same ranged sign as dedup: with the per-range
+    row floor patched down, --sync-ranges 2 commits the day's sign under
+    rng= buckets."""
+    from pyspark.sql import functions as F
+
+    from wdedup_spark import cli, synth
+    from wdedup_spark.plans import pipeline
+
+    monkeypatch.setattr(pipeline, "SYNC_MIN_ROWS_PER_RANGE", 4)
+    turns = synth.to_spark(spark, synth.generate_transcripts(n_base=40, seed=5))
+    is_day = F.col("conv_id") >= F.lit("conv-000040")
+    base_src, day_src = str(tmp_path / "base_turns"), str(tmp_path / "day_turns")
+    turns.filter(~is_day).write.parquet(base_src)
+    turns.filter(is_day).write.parquet(day_src)
+    base_wd, day_wd = str(tmp_path / "base"), str(tmp_path / "day")
+    assert cli.main(["dedup", "--input", base_src, "--workdir", base_wd, "--no-gc"]) == 0
+    assert cli.main([
+        "dedup-incr", "--input", day_src, "--workdir", day_wd, "--base", base_wd,
+        "--sync-ranges", "2",
+    ]) == 0
+    sign = os.path.join(day_wd, "sign")
+    assert sorted(d for d in os.listdir(sign) if d.startswith("rng=")) == ["rng=0", "rng=1"]
+    assert os.path.exists(os.path.join(day_wd, "cluster", "_SUCCESS"))

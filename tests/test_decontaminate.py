@@ -1,4 +1,4 @@
-"""Benchmark decontamination: gram generation, hit counting, anti-join.
+"""Benchmark decontamination: gram generation, hit counting, broadcast plan.
 
 Pins the GPT-3-appendix-C semantics (a training doc is contaminated when
 it shares ANY n-token gram with the benchmark corpus) and the broadcast
@@ -7,16 +7,9 @@ plan shape (the training corpus must not shuffle to find hits).
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from wdedup_spark.operators.decontaminate import (
-    bloom_bitmap,
-    contaminated,
-    contaminated_bloom,
-    decontaminate,
-    ngram_array,
-)
+from wdedup_spark.operators.decontaminate import contaminated, ngram_array
 
 
 def _df(spark, rows, cols=("doc_id", "text")):
@@ -66,19 +59,6 @@ def test_contaminated_counts_distinct_shared_grams(spark):
     assert hits == {1: 2, 3: 1}
 
 
-def test_decontaminate_drops_hits_keeps_columns(spark):
-    train = _df(
-        spark,
-        [(1, "shared secret phrase here", "keep"), (2, "clean document body", "keep")],
-        cols=("doc_id", "text", "extra"),
-    )
-    bench = _df(spark, [(9, "the shared secret phrase here too")])
-    out = decontaminate(train, bench, n=3)
-    rows = out.collect()
-    assert [r["doc_id"] for r in rows] == [2]
-    assert set(out.columns) == {"doc_id", "text", "extra"}
-
-
 def test_contaminated_no_bench_overlap_empty(spark):
     train = _df(spark, [(1, "alpha beta gamma delta")])
     bench = _df(spark, [(9, "one two three four")])
@@ -115,74 +95,6 @@ def test_shuffle_fallback_matches_broadcast(spark):
         for r in contaminated(train, bench, n=4, broadcast_bench=False).collect()
     )
     assert a == b and len(a) == 2
-
-
-def test_bloom_matches_exact(spark):
-    """The Bloom path re-verifies its survivors exactly, so results must
-    be identical to contaminated() — false positives only shrink the
-    pruning win, never change the output."""
-    train = _df(
-        spark,
-        [
-            (1, "the quick brown fox jumps over it"),
-            (2, "totally unrelated text body here"),
-            (3, "quick brown fox jumps again today"),
-            (4, "clean and free of any benchmark"),
-        ],
-    )
-    bench = _df(spark, [(100, "a quick brown fox jumps high")])
-    exact = sorted(tuple(r) for r in contaminated(train, bench, n=3).collect())
-    bloom = sorted(
-        tuple(r) for r in contaminated_bloom(train, bench, n=3).collect()
-    )
-    assert bloom == exact and len(exact) == 2
-
-
-def test_bloom_matches_exact_tiny_filter(spark):
-    """A deliberately saturated filter (n_bits tiny -> ~every probe a
-    false positive) still yields exact results: the verify join is what
-    decides, the filter only prunes."""
-    train = _df(spark, [(1, "p q r s t"), (2, "zz yy xx ww vv")])
-    bench = _df(spark, [(9, "p q r s t u")])
-    exact = sorted(tuple(r) for r in contaminated(train, bench, n=4).collect())
-    bloom = sorted(
-        tuple(r)
-        for r in contaminated_bloom(train, bench, n=4, n_bits=8, n_hashes=2).collect()
-    )
-    assert bloom == exact == [(1, 2)]
-
-
-def test_bloom_bitmap_membership_complete(spark):
-    """No false negatives by construction: every benchmark gram's k bits
-    are set in the built bitmap."""
-    import numpy as np
-
-    bench = _df(spark, [(9, "alpha beta gamma delta epsilon")])
-    grams = bench.select(F.explode(ngram_array("text", 2)).alias("gram")).distinct()
-    n_bits, k = 1 << 12, 4
-    bm = np.frombuffer(bloom_bitmap(grams, n_bits, k), dtype=np.uint8)
-    idx = (
-        grams.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.pmod(F.xxhash64("gram", F.lit(i)), F.lit(n_bits))
-                        for i in range(k)
-                    ]
-                )
-            ).alias("i")
-        )
-        .toPandas()["i"]
-        .to_numpy()
-    )
-    assert ((bm[idx >> 3] & (1 << (idx & 7).astype(np.uint8))) != 0).all()
-
-
-def test_bloom_bitmap_bits_cap(spark):
-    bench = _df(spark, [(9, "a b c")])
-    grams = bench.select(F.explode(ngram_array("text", 2)).alias("gram"))
-    with pytest.raises(ValueError, match="n_bits"):
-        bloom_bitmap(grams, (1 << 33) + 8, 4)
 
 
 def test_hashed_grams_no_structural_collision(spark):

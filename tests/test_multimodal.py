@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: schema, mapInPandas batch flow, deterministic
-fake features, exact media dedup, frame sampling, decode stub contract."""
+features, exact media dedup."""
 
 import numpy as np
 import pytest
@@ -17,19 +17,6 @@ def assets(spark):
         (4, "video", b"MP4-fake-content", (1920, 1080, 60000, "video/mp4")),
     ]
     return spark.createDataFrame(rows, schema=mm.ASSET_SCHEMA)
-
-
-def test_decode_stub_raises():
-    with pytest.raises(NotImplementedError):
-        mm.decode_image(b"anything")
-
-
-def test_decode_fake_deterministic():
-    a = mm.decode_image(b"payload", backend="fake")
-    b = mm.decode_image(b"payload", backend="fake")
-    assert a.shape == (8, 8) and a.dtype == np.float32
-    assert (a == b).all()
-    assert not (a == mm.decode_image(b"other", backend="fake")).all()
 
 
 def test_extract_features_schema_and_determinism(spark, assets):
@@ -51,10 +38,3 @@ def test_exact_media_dups(spark, assets):
     clusters = {r["rep_id"]: r["n_members"] for r in mm.exact_media_dups(feats).collect()}
     assert clusters[0] == 2  # assets 0 and 2
     assert clusters[1] == 1
-
-
-def test_frame_sampling(spark, assets):
-    video = assets.filter("modality = 'video'")
-    frames = mm.frame_sample_udf(4)(video).collect()
-    assert [f["frame_no"] for f in frames] == [0, 1, 2, 3]
-    assert [f["offset_ms"] for f in frames] == [0, 15000, 30000, 45000]

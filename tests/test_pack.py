@@ -55,16 +55,6 @@ def test_matches_global_window_reference(spark):
         run += n
 
 
-def test_pack_stats(spark):
-    # 4+7+10+0+25 = 46 tokens, L=10 -> 5 chunks, fill 0.92; docs 1,2,4
-    # straddle a boundary (doc 3 is empty, seq_end == seq_start)
-    plan = pack.pack_plan(_docs(spark, [4, 7, 10, 0, 25]), seq_len=10)
-    s = pack.pack_stats(plan, seq_len=10).collect()[0]
-    assert (s.n_docs, s.total_tokens, s.n_seqs) == (5, 46, 5)
-    assert abs(s.fill_frac - 0.92) < 1e-9
-    assert abs(s.straddle_frac - 0.6) < 1e-9
-
-
 def test_rejects_bad_seq_len(spark):
     import pytest
 

@@ -43,10 +43,10 @@ def test_ssn_phone_disjoint(spark):
 
 def test_counts_and_has_pii(spark):
     t = "a@b.com c@d.org 1.2.3.4 nothing else"
-    got = _one(spark, t, {**pii.pii_counts("t"), "h": pii.has_pii("t")})
-    assert got == {"email": 2, "ipv4": 1, "ssn": 0, "phone": 0, "h": True}
-    clean = _one(spark, "just words 12 34", {"h": pii.has_pii("t")})
-    assert clean["h"] is False
+    got = _one(spark, t, dict(pii.pii_counts("t")))
+    assert got == {"email": 2, "ipv4": 1, "ssn": 0, "phone": 0}
+    clean = _one(spark, "just words 12 34", dict(pii.pii_counts("t")))
+    assert not any(clean.values())
 
 
 def test_plain_numbers_not_redacted(spark):

@@ -6,11 +6,15 @@ from __future__ import annotations
 import pytest
 import random
 
-from wdedup_spark.operators.prefixdedup import (
-    prefix_edges,
-    prefix_subsumed,
-    remove_prefix_subsumed,
-)
+from wdedup_spark.operators.prefixdedup import prefix_subsumed
+
+
+def prefix_edges(df, text_col: str = "doc", id_col: str = "conv_id"):
+    """Cluster edges ``(conv_a=witness, conv_b=prefix)`` derived from the
+    operator: one edge per subsumed document."""
+    return prefix_subsumed(df, text_col, id_col).filter("subsumed").selectExpr(
+        "witness AS conv_a", "id AS conv_b"
+    )
 
 
 def oracle(docs: list[tuple[int, str]]) -> dict[int, tuple[bool, int | None]]:
@@ -91,13 +95,6 @@ def test_null_text_is_answered_not_crashed(spark):
     df = spark.createDataFrame(docs, "conv_id long, doc string")
     got = {r.id: (r.subsumed, r.witness) for r in prefix_subsumed(df).collect()}
     assert got == {1: (True, 2), 2: (False, None), 3: (False, None)}
-
-
-def test_remove_prefix_subsumed_keeps_other_columns(spark):
-    docs = [(1, "a b", "s1"), (2, "a b c", "s2"), (3, "z", "s3")]
-    df = spark.createDataFrame(docs, ["conv_id", "doc", "source"])
-    kept = remove_prefix_subsumed(df).orderBy("conv_id").collect()
-    assert [(r.conv_id, r.source) for r in kept] == [(2, "s2"), (3, "s3")]
 
 
 # ---------------------------------------------------------------------------

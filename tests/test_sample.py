@@ -1,6 +1,6 @@
 """Deterministic hash sampling (operators/sample.py): reproducibility
-across partitionings, rate accuracy, salt independence, and the
-soft-dedup composition."""
+across partitionings, rate accuracy, salt independence, strata and
+quotas."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from wdedup_spark.operators import sample
-from wdedup_spark.operators.quality import soft_dedup_weights
 
 N = 4000
 
@@ -17,17 +16,20 @@ def _ids(spark, n=N, par=4):
     return spark.range(n).select(F.col("id").alias("doc_id")).repartition(par)
 
 
+def _keyed(df, frac, salt=""):
+    """The plain keyed draw: one fraction for every row (no strata)."""
+    return sample.stratified_sample(df, {}, default_frac=frac, salt=salt)
+
+
 def test_deterministic_across_partitionings(spark):
-    a = {r.doc_id for r in sample.bernoulli_sample(_ids(spark, par=2), 0.3,
-                                                   salt="s").collect()}
-    b = {r.doc_id for r in sample.bernoulli_sample(_ids(spark, par=13), 0.3,
-                                                   salt="s").collect()}
+    a = {r.doc_id for r in _keyed(_ids(spark, par=2), 0.3, salt="s").collect()}
+    b = {r.doc_id for r in _keyed(_ids(spark, par=13), 0.3, salt="s").collect()}
     assert a == b and 0 < len(a) < N
 
 
 def test_rate_close_and_salts_independent(spark):
-    a = {r.doc_id for r in sample.bernoulli_sample(_ids(spark), 0.5, salt="a").collect()}
-    b = {r.doc_id for r in sample.bernoulli_sample(_ids(spark), 0.5, salt="b").collect()}
+    a = {r.doc_id for r in _keyed(_ids(spark), 0.5, salt="a").collect()}
+    b = {r.doc_id for r in _keyed(_ids(spark), 0.5, salt="b").collect()}
     for s in (a, b):  # binomial(4000, .5): ±5 sigma ≈ ±158
         assert abs(len(s) - N / 2) < 160
     overlap = len(a & b)  # independent draws: ~N/4
@@ -37,16 +39,16 @@ def test_rate_close_and_salts_independent(spark):
 def test_nested_fractions(spark):
     # the keyed draw is a fixed uniform per id: frac=0.1 kept set is a
     # subset of frac=0.3's under the same salt (consistency property)
-    lo = {r.doc_id for r in sample.bernoulli_sample(_ids(spark), 0.1, salt="s").collect()}
-    hi = {r.doc_id for r in sample.bernoulli_sample(_ids(spark), 0.3, salt="s").collect()}
+    lo = {r.doc_id for r in _keyed(_ids(spark), 0.1, salt="s").collect()}
+    hi = {r.doc_id for r in _keyed(_ids(spark), 0.3, salt="s").collect()}
     assert lo <= hi
 
 
 def test_edge_fracs(spark):
-    assert sample.bernoulli_sample(_ids(spark), 0.0).count() == 0
-    assert sample.bernoulli_sample(_ids(spark), 1.0).count() == N
+    assert _keyed(_ids(spark), 0.0).count() == 0
+    assert _keyed(_ids(spark), 1.0).count() == N
     with pytest.raises(ValueError):
-        sample.bernoulli_sample(_ids(spark), 1.5)
+        _keyed(_ids(spark), 1.5)
 
 
 def test_stratified(spark):
@@ -58,30 +60,6 @@ def test_stratified(spark):
     assert {r.source: r["count"] for r in rows} == {"a": N // 2}
     with pytest.raises(ValueError):
         sample.stratified_sample(df, {"a": -0.1})
-
-
-def test_soft_dedup_composition(spark):
-    # clusters of size 4: weighted_sample keeps ~1/4 of members -> the
-    # cluster contributes ~one doc in expectation
-    df = _ids(spark).withColumn("cluster_id", F.col("doc_id") % (N // 4))
-    w = soft_dedup_weights(df, id_col="doc_id", cluster_col="cluster_id")
-    kept = sample.weighted_sample(w, "weight", id_col="id", salt="s")
-    # binomial(4000, .25): mean 1000, ±5 sigma ≈ ±137
-    assert abs(kept.count() - N / 4) < 140
-
-
-def test_weighted_sample_rejects_bad_weights(spark):
-    # per-row execution-time validation (review r5): a corrupted weight
-    # column must raise, not silently drop (negative) or always-keep
-    # (>1) — and a null weight must not silently filter out its row
-    base = _ids(spark, n=10, par=2)
-    for bad in (-0.5, 1.5, float("nan"), None):
-        df = base.withColumn("weight", F.lit(bad).cast("double"))
-        with pytest.raises(Exception, match="weighted_sample"):
-            sample.weighted_sample(df, "weight", id_col="doc_id").collect()
-    # valid weights still work through the checked expression
-    ok = base.withColumn("weight", F.lit(1.0))
-    assert sample.weighted_sample(ok, "weight", id_col="doc_id").count() == 10
 
 
 def test_quota_sample_exact_counts_and_nesting(spark):

@@ -14,10 +14,10 @@ def test_token_count_and_whitespace(spark):
     df = _one(spark, "  the  quick\tbrown\nfox  ")
     row = df.select(
         tx.token_count("text").alias("n"),
-        tx.avg_token_len("text").alias("avg"),
+        tx.char_count("text").alias("c"),
     ).collect()[0]
     assert row["n"] == 4
-    assert abs(row["avg"] - (3 + 5 + 5 + 3) / 4) < 1e-9
+    assert row["c"] == 24  # char_count keeps the whitespace
 
 
 def test_empty_text(spark):
@@ -35,7 +35,7 @@ def test_empty_text(spark):
 def test_stopword_ratio_and_lang_id(spark):
     df = _one(spark, "the cat of the house is in the garden")
     row = df.select(
-        tx.stopword_ratio("text", "en").alias("swr"),
+        (tx.lang_scores("text")["en"] / tx.token_count("text")).alias("swr"),
         tx.lang_id("text").alias("lang"),
     ).collect()[0]
     # stopwords: the, of, the, is, in, the → 6/9

@@ -51,8 +51,6 @@ def main() -> None:
     bad += abs(n_out - n_nodes)
     print(json.dumps({
         "n_nodes": n_nodes, "n_edges": n_edges, "segment_diameter": seg,
-        "strategy": cluster.LAST_RUN_INFO.get("strategy"),
-        "rounds": cluster.LAST_RUN_INFO.get("rounds"),
         "wall_s": round(wall, 1), "wrong_labels": bad,
         "checkpoint": "reliable (dir set)",
     }))

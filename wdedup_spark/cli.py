@@ -1,10 +1,13 @@
 """spark-submit entry point (the reference's CLI, src/wcli.cpp:77-198).
 
-Two subcommands:
+Three subcommands:
 
   dedup      — the transcript near-dup pipeline:
                spark-submit --py-files wdedup_spark.zip -m wdedup_spark.cli \\
                  dedup --input turns.parquet --workdir /work --threshold 0.8
+  dedup-incr — the same pipeline for a new batch against a committed
+               workdir: ... dedup-incr --base /work --input day.parquet
+               --workdir /work-day1 (same flags as dedup)
   findfirst  — wdedup parity: first non-repeated word of a text file:
                ... findfirst --input big.txt
 
@@ -36,8 +39,9 @@ def _add_pipeline_args(d: argparse.ArgumentParser) -> None:
     d.add_argument("--no-substring", action="store_true")
     d.add_argument("--prefix", action="store_true",
                    help="prefix-subsumption channel: cluster conversations "
-                        "that are byte prefixes of longer ones (batch "
-                        "pipeline only — dedup-incr rejects it)")
+                        "that are byte prefixes of longer ones (dedup-incr "
+                        "probes every chain day's sorted run, so every day "
+                        "needs it)")
     d.add_argument("--containment", action="store_true",
                    help="set-containment channel: cluster quote-in-"
                         "transcript pairs (containment >= threshold over "
@@ -48,7 +52,8 @@ def _add_pipeline_args(d: argparse.ArgumentParser) -> None:
     d.add_argument("--sync-ranges", type=int, default=8,
                    help="sub-stage commit granularity for the sign stage — the "
                         "reference's --sync-distance analog (wcli.cpp:109-112): "
-                        "a crash mid-sign loses at most 1/N of the stage")
+                        "a crash mid-sign loses at most 1/N of the stage "
+                        "(dedup and dedup-incr alike)")
     d.add_argument("--stop-after", choices=STAGES, default=None,
                    help="debug: commit stages up to this one, then exit")
     d.add_argument("--no-gc", action="store_true",

@@ -2,11 +2,10 @@
 
 The Spark-side plumbing is real — schemas, Arrow batch shapes, mapInPandas
 partition flow, deterministic feature extraction for dedup — while the
-actual media decoding is STUBBED (no image/audio libraries in this
-container).  ``decode_image`` raises NotImplementedError unless the
-deterministic fake backend is selected; the fake parses a tiny header and
-derives a fixed-shape feature vector from a blake2 digest, so downstream
-dedup/ANN over media features is fully testable.
+actual media decoding is left out (no image/audio libraries are
+required): features are a fixed-shape vector derived from a blake2
+digest of the bytes, so downstream dedup/ANN over media features is
+fully testable.
 
 Schema contract (one row per asset):
   asset_id: long, modality: string in {image,audio,video},
@@ -71,25 +70,6 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def decode_image(content: bytes, backend: str = "stub"):
-    """Decode an image byte payload.
-
-    backend="stub"  — real decoders (PIL/opencv) are not available in this
-                      container: raises NotImplementedError, as documented.
-    backend="fake"  — deterministic fake decode for tests: derives an
-                      8x8 'pixel' array from the blake2 digest of content.
-    """
-    if backend == "stub":
-        raise NotImplementedError(
-            "image decoding requires PIL/opencv (not installed); "
-            "use backend='fake' for deterministic test plumbing"
-        )
-    if backend == "fake":
-        d = blake2b(content, digest_size=64).digest()
-        return np.frombuffer(d, dtype=np.uint8).reshape(8, 8).astype(np.float32)
-    raise ValueError(f"unknown backend {backend}")
-
-
 def _feature_from_bytes(content: bytes) -> np.ndarray:
     """Deterministic FEATURE_DIM-float feature from the content digest —
     the stand-in for an embedding model; same bytes → same feature."""
@@ -141,27 +121,3 @@ def exact_media_dups(features: DataFrame) -> DataFrame:
     return features.groupBy("content_hash").agg(
         F.min("asset_id").alias("rep_id"), F.count(F.lit(1)).alias("n_members")
     )
-
-
-def frame_sample_udf(n_frames: int = 4):
-    """Video frame sampling stub: emits n_frames deterministic pseudo-frame
-    offsets per asset (the real implementation would seek the container).
-    Demonstrates the explode-shaped plumbing for per-frame features."""
-
-    def sample(assets: DataFrame) -> DataFrame:
-        return assets.select(
-            "asset_id",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(n_frames - 1)),
-                    lambda i: F.struct(
-                        i.alias("frame_no"),
-                        (F.coalesce(F.col("meta.duration_ms"), F.lit(0)) * i / n_frames)
-                        .cast("int")
-                        .alias("offset_ms"),
-                    ),
-                )
-            ).alias("frame"),
-        ).select("asset_id", "frame.frame_no", "frame.offset_ms")
-
-    return sample

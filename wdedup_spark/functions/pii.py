@@ -64,12 +64,3 @@ def pii_counts(text: Column | str,
     corpus before deciding to redact vs drop."""
     return {name: pii_count(text, pat)
             for name, pat in (patterns or PII_PATTERNS).items()}
-
-
-def has_pii(text: Column | str,
-            patterns: dict[str, str] | None = None) -> Column:
-    """Boolean filter Column: any PII pattern matches.  Expressed as one
-    alternation so the scan pays a single regex pass."""
-    pats = patterns or PII_PATTERNS
-    merged = "|".join(f"({p})" for p in pats.values())
-    return _col(text).rlike(merged)

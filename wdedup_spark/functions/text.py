@@ -37,28 +37,12 @@ def char_count(text: Column | str) -> Column:
     return F.length(c)
 
 
-def avg_token_len(text: Column | str) -> Column:
-    """Mean token length in characters (0.0 for empty docs)."""
-    t = tokens(text)
-    return F.when(F.size(t) > 0,
-                  F.aggregate(t, F.lit(0.0), lambda acc, x: acc + F.length(x)) / F.size(t)
-                  ).otherwise(F.lit(0.0))
-
-
 def distinct_token_ratio(text: Column | str) -> Column:
     """Lexical diversity: distinct/total tokens (1.0 for empty docs)."""
     t = tokens(text)
     return F.when(F.size(t) > 0,
                   F.size(F.array_distinct(t)).cast("double") / F.size(t)
                   ).otherwise(F.lit(1.0))
-
-
-def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    t = tokens(text)
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    hits = F.size(F.filter(t, lambda x: F.array_contains(sw, x)))
-    return F.when(F.size(t) > 0, hits.cast("double") / F.size(t)).otherwise(F.lit(0.0))
 
 
 def quality_score(text: Column | str) -> Column:

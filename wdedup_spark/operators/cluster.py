@@ -60,12 +60,6 @@ def _truncate_lineage(df: DataFrame, eager: bool) -> tuple[DataFrame, DataFrame 
     return df.localCheckpoint(eager=eager), None
 
 
-#: Observability: connected_components records its last run here —
-#: {"strategy": "driver-uf" | "pointer-jumping", "rounds": int,
-#:  "n_edges": int} (rounds == 0 for the driver path).  Read-only for
-#: callers/benchmarks; not part of the result contract.
-LAST_RUN_INFO: dict = {}
-
 #: Below this many edges the dup graph fits comfortably on the driver and
 #: union-find beats ~8 distributed rounds of job latency.  Duplicate-pair
 #: graphs are tiny relative to the corpus (edges ≈ dup pairs, not turns):
@@ -142,7 +136,6 @@ def connected_components(
         spark = edges.sparkSession
         rows = [(r["conv_a"], r["conv_b"]) for r in distinct_edges.collect()]
         id_type = distinct_edges.schema["conv_a"].dataType
-        LAST_RUN_INFO.update(strategy="driver-uf", rounds=0, n_edges=n_edges)
         return _driver_union_find(rows, spark, id_type)
     edges = distinct_edges
     sym = (
@@ -157,9 +150,7 @@ def connected_components(
     )
     labels, prev_handle = _truncate_lineage(labels, eager=False)
 
-    rounds = 0
     for _ in range(max_iter):
-        rounds += 1
         # (1) propagate: min label over closed neighborhood
         neighbor_labels = (
             sym.join(labels.withColumnRenamed("node", "dst"), "dst")
@@ -206,7 +197,6 @@ def connected_components(
         prev_handle.unpersist()
     if sym_handle is not None:
         sym_handle.unpersist()
-    LAST_RUN_INFO.update(strategy="pointer-jumping", rounds=rounds, n_edges=n_edges)
     return labels.select(F.col("node").alias("conv_id"), F.col("label").alias("cluster_id"))
 
 

@@ -1,4 +1,4 @@
-"""Benchmark decontamination — remove training documents that share any
+"""Benchmark decontamination — find training documents that share any
 long n-gram with a held-out evaluation corpus.
 
 The training-data-pipeline operation next to dedup (GPT-3 appendix C /
@@ -29,8 +29,7 @@ is unchanged.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pandas as pd  # resolves the pandas_udf "pd.Series" hints (postponed annotations)
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -72,7 +71,6 @@ def gram_hash_array_udf(n: int):
     ("a b b a" vs "b a a b" — caught by the r6 sf0.1 oracle sweep;
     tests/test_decontaminate.py pins the case)."""
     import numpy as np
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from wdedup_spark.functions import hashing
@@ -142,147 +140,3 @@ def contaminated(
         .agg(F.count(F.lit(1)).cast("long").alias("n_hit_grams"))
     )
 
-
-def decontaminate(
-    train: DataFrame,
-    bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    broadcast_bench: bool = True,
-) -> DataFrame:
-    """Training corpus with contaminated docs dropped (anti-join on id;
-    the caller's other columns survive)."""
-    hits = contaminated(train, bench, text_col, id_col, n, broadcast_bench)
-    return train.join(
-        hits.select(F.col("id").alias(id_col)), id_col, "left_anti"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Bloom-pruned path — the configuration for a benchmark too big to
-# broadcast as raw grams
-# ---------------------------------------------------------------------------
-#
-# At 100 TB the training side is fixed (scan + map-side probe either
-# way); the pressure point is the BENCHMARK side.  A raw distinct-gram
-# broadcast of a large contamination blocklist (every eval suite + their
-# train splits + canary strings) can reach many GB; a Bloom filter holds
-# the same membership test in ~1.2 bytes per gram at 1e-3 false-positive
-# rate.  Shape:
-#
-# * build: the benchmark grams' k bit-indices are computed JVM-side
-#   (``xxhash64(gram, seed_i) mod n_bits``), the DISTINCT set-bit
-#   positions are pulled to the driver via Arrow (bounded by
-#   min(k·|grams|, n_bits) ints — never the gram strings), OR'd into a
-#   numpy bitmap, and the bitmap (n_bits/8 bytes) ships to executors in
-#   the probe UDF's closure;
-# * probe: training grams compute the same k JVM hashes; one vectorized
-#   Arrow-batched UDF tests the k bits (the only Python on the path —
-#   ~numpy indexing over int64 arrays);
-# * verify: Bloom false positives would WRONGLY DROP training docs, so
-#   the pruned survivors (a ~FPR-sized sliver of the corpus's grams) are
-#   exactly confirmed with the plain shuffled gram join — the same plan
-#   as ``broadcast_bench=False`` but with its left side shrunk by the
-#   filter.  Results are therefore EXACTLY ``contaminated()``'s; the
-#   Bloom stage only prunes the shuffle.
-#
-# (Spark's own BloomFilterAggregate expression is internal and
-# `DataFrame.stat.bloomFilter` is not exposed to Python, so the bitmap
-# is built from first principles — it also keeps the bit layout
-# deterministic for tests.)
-
-BLOOM_MAX_BITS = 1 << 33  # 1 GiB bitmap ceiling — loud, not OOM
-
-
-def _bloom_hash_cols(gram: Column, n_bits: int, n_hashes: int) -> list[Column]:
-    """k independent bit positions per gram, JVM-side: xxhash64 seeded by
-    the hash index, reduced mod n_bits (pmod: xxhash64 is signed)."""
-    return [
-        F.pmod(F.xxhash64(gram, F.lit(i)), F.lit(n_bits)).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-
-
-def bloom_bitmap(
-    bench_grams: DataFrame, n_bits: int, n_hashes: int
-) -> bytes:
-    """Build the benchmark bitmap: distinct set-bit positions to the
-    driver (Arrow), OR'd into ``n_bits/8`` bytes.  ``bench_grams`` is a
-    one-column ``gram`` DataFrame (pre-distinct not required)."""
-    if not 0 < n_bits <= BLOOM_MAX_BITS:
-        raise ValueError(
-            f"n_bits={n_bits} outside (0, {BLOOM_MAX_BITS}]: size the "
-            "filter at ~10 bits/gram and raise BLOOM_MAX_BITS consciously "
-            "if the blocklist truly needs more"
-        )
-    idx = (
-        bench_grams.select(
-            F.explode(F.array(*_bloom_hash_cols(F.col("gram"), n_bits, n_hashes))).alias("i")
-        )
-        .distinct()
-        .toPandas()["i"]
-        .to_numpy(dtype=np.int64)
-    )
-    bm = np.zeros((n_bits + 7) >> 3, dtype=np.uint8)
-    # duplicate BYTE positions survive distinct() (two bits, one byte):
-    # bitwise_or.at applies unbuffered per element
-    np.bitwise_or.at(bm, idx >> 3, (1 << (idx & 7).astype(np.uint8)))
-    return bm.tobytes()
-
-
-def contaminated_bloom(
-    train: DataFrame,
-    bench: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    n_bits: int = 1 << 23,
-    n_hashes: int = 4,
-) -> DataFrame:
-    """``contaminated()`` with the benchmark side carried as a Bloom
-    filter: identical results (false positives are exactly re-verified),
-    shuffle shrunk to the filter's survivors.  Use when the benchmark's
-    distinct grams exceed broadcast comfort; size ``n_bits`` at ~10 bits
-    per expected distinct gram for ~1% FPR."""
-    from pyspark.sql.functions import pandas_udf
-
-    # materialized once (localCheckpoint, not persist: no dangling cache
-    # entry to leak — the r4 IVF lesson): the bitmap build consumes these
-    # grams, then the exact verify join reads them AGAIN — without this
-    # the benchmark explode+distinct (the dominant benchmark-side cost at
-    # the scale this path exists for) runs twice
-    bench_grams = (
-        bench.select(F.explode(ngram_array(text_col, n)).alias("gram"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    bm_bytes = bloom_bitmap(bench_grams, n_bits, n_hashes)
-
-    # one array<long> argument (pandas_udf rejects varargs signatures);
-    # each Arrow batch becomes one (rows, k) int64 matrix — the bit test
-    # stays fully vectorized
-    @pandas_udf("boolean")
-    def might_contain(hs: pd.Series) -> pd.Series:
-        bm = np.frombuffer(bm_bytes, dtype=np.uint8)
-        if len(hs) == 0:
-            return pd.Series([], dtype=bool)
-        m = np.array(hs.tolist(), dtype=np.int64)
-        hits = (bm[m >> 3] & (1 << (m & 7).astype(np.uint8))) != 0
-        return pd.Series(hits.all(axis=1))
-
-    train_grams = train.select(
-        F.col(id_col).alias("id"), F.explode(ngram_array(text_col, n)).alias("gram")
-    )
-    hcol = F.array(*_bloom_hash_cols(F.col("gram"), n_bits, n_hashes))
-    pruned = (
-        train_grams.withColumn("_mc", might_contain(hcol))
-        .filter(F.col("_mc"))
-        .drop("_mc")
-    )
-    # exact verify on the sliver: false positives must not drop docs
-    return (
-        pruned.join(bench_grams, "gram")
-        .groupBy("id")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_hit_grams"))
-    )

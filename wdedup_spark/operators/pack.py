@@ -131,38 +131,6 @@ def pack_plan(
     )
 
 
-def pack_stats(plan: DataFrame, seq_len: int) -> DataFrame:
-    """→ one row ``(n_docs, total_tokens, n_seqs, fill_frac,
-    straddle_frac)``: chunk count for the packed corpus, fill ratio of
-    the final (padded) chunk layout, and the fraction of documents that
-    straddle a chunk boundary — the packing-quality numbers a data team
-    reads before committing a seq_len."""
-    # empty / all-empty-doc corpus: n_seqs = 0 makes fill_frac 0/0 — emit
-    # explicit 0.0s (coalesce) instead of silently-propagating nulls, so
-    # the stats row is readable arithmetic in every case (review r5)
-    return plan.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.coalesce(F.sum("n_tokens"), F.lit(0)).cast("long").alias("total_tokens"),
-        F.coalesce(F.ceil(F.sum("n_tokens") / F.lit(seq_len)), F.lit(0))
-        .cast("long")
-        .alias("n_seqs"),
-        F.coalesce(
-            F.round(
-                F.sum("n_tokens")
-                / (F.ceil(F.sum("n_tokens") / F.lit(seq_len)) * F.lit(seq_len)),
-                6,
-            ),
-            F.lit(0.0),
-        ).alias("fill_frac"),
-        F.coalesce(
-            F.round(
-                F.avg((F.col("seq_end") > F.col("seq_start")).cast("double")), 6
-            ),
-            F.lit(0.0),
-        ).alias("straddle_frac"),
-    )
-
-
 def chunk_docs(
     df: DataFrame,
     chunk_tokens: int,

@@ -1,4 +1,4 @@
-"""Prefix-subsumption dedup — drop documents that are a proper prefix of
+"""Prefix-subsumption dedup — find documents that are a proper prefix of
 another document.
 
 The agent-transcript case the similarity channels miss: a conversation
@@ -494,25 +494,3 @@ def cross_prefix_edges(
         return spark.createDataFrame([], edge_schema)
     return out
 
-
-def prefix_edges(
-    df: DataFrame, text_col: str = "doc", id_col: str = "conv_id"
-) -> DataFrame:
-    """Dedup edges ``(conv_a=witness, conv_b=prefix)`` for the cluster
-    stage — one edge per subsumed document; chains of prefixes (A ⊏ B ⊏
-    C) connect transitively through connected components."""
-    out = prefix_subsumed(df, text_col, id_col).filter(F.col("subsumed"))
-    return out.select(
-        F.col("witness").alias("conv_a"), F.col("id").alias("conv_b")
-    )
-
-
-def remove_prefix_subsumed(
-    df: DataFrame, text_col: str = "doc", id_col: str = "conv_id"
-) -> DataFrame:
-    """Corpus with proper-prefix documents dropped — join back on id so
-    the caller's other columns survive."""
-    keep = prefix_subsumed(df, text_col, id_col).filter(~F.col("subsumed"))
-    return df.join(
-        keep.select(F.col("id").alias(id_col)), id_col, "left_semi"
-    )

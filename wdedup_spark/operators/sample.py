@@ -15,11 +15,6 @@ into a uniform 60-bit integer and keep the row iff it falls below
   side, so derived tables sampled with the same salt stay aligned;
 * integer threshold compare — no float edge cases in the keep decision.
 
-Composes with quality.soft_dedup_weights: ``weighted_sample`` keeps each
-row with probability = its weight column, which realizes soft dedup as an
-actual corpus cut (a cluster of n near-dups keeps ~one member in
-expectation, each member equally likely — unbiased, unlike keep-min-id).
-
 Reference scope: no counterpart (the reference stops at word dedup);
 part of the training-pipeline layer like pack.py / pii.py.
 """
@@ -39,46 +34,6 @@ def uniform_hash60(col: Column | str, salt: str = "") -> Column:
     c = F.col(col) if isinstance(col, str) else col
     keyed = F.concat(c.cast("string"), F.lit(":" + salt))
     return F.conv(F.substring(F.md5(keyed), 1, 15), 16, 10).cast("long")
-
-
-def bernoulli_sample(
-    df: DataFrame, frac: float, id_col: str = "doc_id", salt: str = ""
-) -> DataFrame:
-    """Keep each row independently with probability ``frac``,
-    deterministically in (id, salt)."""
-    if not 0.0 <= frac <= 1.0:
-        raise ValueError(f"frac must be in [0, 1], got {frac}")
-    return df.filter(uniform_hash60(id_col, salt) < int(frac * _SCALE))
-
-
-def weighted_sample(
-    df: DataFrame,
-    weight_col: str,
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> DataFrame:
-    """Keep each row with probability = its per-row weight in [0, 1]
-    (e.g. soft_dedup_weights' 1/cluster-size).
-
-    Weights are validated PER ROW at execution time: a null / NaN /
-    out-of-range weight (e.g. from a corrupted upstream join) raises
-    instead of silently dropping or always-keeping the row — the same
-    loud contract the constant-fraction samplers enforce at plan time.
-    The check lives inside the threshold expression (not a separate
-    assert column) so column pruning cannot eliminate it."""
-    w = F.col(weight_col).cast("double")
-    bad = w.isNull() | F.isnan(w) | (w < 0.0) | (w > 1.0)
-    checked = F.when(
-        bad,
-        F.raise_error(
-            F.concat(
-                F.lit(f"weighted_sample: {weight_col!r} must be in [0, 1], got "),
-                F.coalesce(w.cast("string"), F.lit("NULL")),
-            )
-        ).cast("double"),
-    ).otherwise(w)
-    thresh = (checked * F.lit(float(_SCALE))).cast("long")
-    return df.filter(uniform_hash60(id_col, salt) < thresh)
 
 
 def stratified_sample(

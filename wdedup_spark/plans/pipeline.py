@@ -8,7 +8,9 @@ Orchestrates the checkpointed stage DAG (SURVEY.md §3):
 mirroring the reference's driver (/root/reference/src/main.cpp:208-222:
 wprof → wmerge → wfindfirst) with the stage ledger standing in for the
 WAL.  Every stage is resumable: rerunning after a crash skips committed
-stages (tests/test_resume.py is the F4 protocol).
+stages (tests/test_pipeline.py::test_resume_skips_completed_stages).
+``run_pipeline`` and ``run_incremental`` drive the same stages through
+``_run_stages``; an increment passes it the committed base it dedups against.
 
 Scale architecture (the 100 TB story):
 * exact dedup FIRST — near-dup stages run on distinct documents only, so
@@ -30,6 +32,7 @@ import hashlib
 import json
 import posixpath
 from dataclasses import asdict, dataclass
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -50,6 +53,28 @@ from wdedup_spark.sources.ledger import StageLedger
 #: (v2: fingerprint committed by the assemble stage; members stage removed)
 PIPELINE_VERSION = 2
 
+# Fixed tuning constants.  They are not PipelineConfig fields, so
+# cfg.fence() does not cover them: changing one must bump PIPELINE_VERSION.
+
+#: SimHash channel radius: pairs within this many differing bits of the
+#: 64-bit SimHash are candidates (6-block pigeonhole tables, simhash.py)
+MAX_HAMMING = 3
+#: MinHash channel collision floor: >= 2 of 32 bands kills quadratic
+#: single-band noise at corpus scale; recall at threshold ~0.999998
+MIN_BAND_COLLISIONS = 2
+#: edit candidates keep a wider MinHash-estimate band than the Jaccard
+#: channel's 0.15: token-reorder near-dups (the channel's whole purpose)
+#: have depressed shingle Jaccard, so the reachable band is
+#: [threshold - EDIT_MARGIN, threshold); pairs below it are unreachable by
+#: design (documented bound, not a bug: a candidate must still collide in
+#: >= MIN_BAND_COLLISIONS LSH bands to be seen at all)
+EDIT_MARGIN = 0.45
+#: like the reference's 2 GB syncDistance default, sign-commit granularity
+#: is data-proportional: small inputs collapse to one range (per-range job
+#: overhead would exceed the recompute it insures against), large inputs
+#: get the full ``sync_ranges`` fan-out
+SYNC_MIN_ROWS_PER_RANGE = 20_000
+
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -59,7 +84,6 @@ class PipelineConfig:
     threshold: float = 0.8        # verified Jaccard threshold
     seed: int = 42
     enable_simhash: bool = True
-    max_hamming: int = 3
     enable_substring: bool = True
     substring_k: int = 16
     substring_w: int = 48
@@ -67,8 +91,9 @@ class PipelineConfig:
     enable_prefix: bool = False    # prefix-subsumption channel: a doc that
     # is a proper byte prefix of another (transcript retry/continuation)
     # joins its extension's cluster — invisible to both exact dedup and
-    # shingle similarity (operators/prefixdedup.py).  Batch pipeline only;
-    # the incremental path documents the restriction.
+    # shingle similarity (operators/prefixdedup.py).  Supported by both
+    # the batch pipeline and run_incremental (today's batch is probed
+    # against every chain day's committed sorted run).
     enable_containment: bool = False  # set-containment channel (quote-in-
     # transcript: containment ~1, Jaccard ~|A|/|B| — outside every band
     # config's reach).  Prefix-filtered AllPairs join over the committed
@@ -78,24 +103,11 @@ class PipelineConfig:
     containment_threshold: float = 0.9
     verify_edit: bool = False      # second verification channel: pairs that
     edit_threshold: float = 0.85   # fail Jaccard but have edit-sim >= this pass
-    edit_margin: float = 0.45      # edit candidates keep a wider MinHash-estimate
-    # band than the Jaccard channel's 0.15: token-reorder near-dups (the
-    # channel's whole purpose) have depressed shingle Jaccard, so the
-    # reachable band is [threshold - edit_margin, threshold); pairs below
-    # threshold - edit_margin are unreachable by design (documented bound,
-    # not a bug: a candidate must still collide in >= min_band_collisions
-    # LSH bands to be seen at all)
     max_bucket: int | None = 256   # larger buckets emit star edges;
     # None expands every bucket (uncapped — small data and tests)
-    min_band_collisions: int = 2   # ≥2 of 32 bands: kills quadratic
-    # single-band noise at corpus scale; recall at threshold ~0.999998
     sync_ranges: int = 8           # sub-stage commit granularity for the
     # sign stage (the reference's --sync-distance analog): a crash mid-sign
     # loses at most 1/sync_ranges of the stage's Python work
-    sync_min_rows_per_range: int = 20_000  # like the reference's 2 GB
-    # syncDistance default, granularity is data-proportional: small inputs
-    # collapse to one range (per-range job overhead would exceed the
-    # recompute it insures against), large inputs get the full fan-out
 
     def fence(self) -> str:
         payload = {"v": PIPELINE_VERSION, **asdict(self)}
@@ -156,7 +168,7 @@ def build_candidates(
         streams.append(
             tag(
                 simhash_chunks(
-                    signed, "simhash", "conv_id", cfg.max_hamming,
+                    signed, "simhash", "conv_id", MAX_HAMMING,
                     passthrough=passthrough,
                 ),
                 CH_SIMHASH,
@@ -192,7 +204,7 @@ def build_candidates(
     # bands; others: >= 1) OR a star edge, which bypasses the floor —
     # the same rule candidate_pairs folds for a single channel
     passes = [
-        (F.col("_h0") >= cfg.min_band_collisions) | F.coalesce("_s0", F.lit(False)),
+        (F.col("_h0") >= MIN_BAND_COLLISIONS) | F.coalesce("_s0", F.lit(False)),
         (F.col("_h1") >= 1) | F.coalesce("_s1", F.lit(False)),
         (F.col("_h2") >= 1) | F.coalesce("_s2", F.lit(False)),
     ]
@@ -214,7 +226,7 @@ def build_candidates(
             sigs.select(F.col("id").alias("conv_b"), F.col("simhash").alias("sh_b")), "conv_b"
         )
         passes[CH_SIMHASH] = passes[CH_SIMHASH] & (
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))) <= cfg.max_hamming
+            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))) <= MAX_HAMMING
         )
     # ch_names is lexically ordered, so this conditional array IS the
     # sorted tag set the old sort_array(collect_set(via)) produced
@@ -293,14 +305,14 @@ def build_verify(
         # pairs that failed Jaccard get the edit-distance check
         # (north_rule "Jaccard/edit-distance checks"): catches
         # token-reorder-heavy near-dups whose shingle sets diverge.
-        # Candidates come from the WIDER edit_margin band — reordered
+        # Candidates come from the WIDER EDIT_MARGIN band — reordered
         # docs have depressed shingle Jaccard, so the jac channel's
         # 0.15 margin would filter out exactly the pairs this channel
         # exists to rescue.
         from wdedup_spark.operators.verify import edit_similarity_udf
 
         failed = estimated.filter(
-            (F.col("est") >= cfg.threshold - cfg.edit_margin)
+            (F.col("est") >= cfg.threshold - EDIT_MARGIN)
             | F.array_contains("via", "substring")  # substring-anchored
             # candidates keep their edit shot regardless of estimate
             # (long docs with moderate overlap can sit below the band)
@@ -351,210 +363,8 @@ def run_pipeline(
     outputs (sign, candidates) once the final stage commits (O14,
     src/wmerge.cpp:141-144); resumed runs then skip straight to the
     surviving outputs."""
-    if stop_after == "prefix" and not cfg.enable_prefix:
-        # without the guard this debug invocation would silently run the
-        # ENTIRE pipeline (no done() check ever matches)
-        raise ValueError("stop_after='prefix' requires enable_prefix=True")
-    if stop_after == "containment" and not cfg.enable_containment:
-        raise ValueError("stop_after='containment' requires enable_containment=True")
-    ledger = StageLedger(workdir, config_fence=cfg.fence(), spark=spark)
-    out: dict = {"ledger": ledger}
-
-    def done(stage: str) -> bool:
-        return stop_after == stage
-
-    # -- stage 1: assemble (one shuffle on conv_id) ---------------------------
-    # the content fingerprint is computed HERE, in the same pass, and
-    # committed with the conversations: both the exact stage and the
-    # cluster stage's exact edges read it back for free instead of each
-    # re-hashing the whole corpus (the round-2 "members" stage existed
-    # only to cache that second sha2 pass — now unnecessary)
-    conv = ledger.run(
-        spark, "assemble", lambda: add_fingerprint(assemble_conversations(turns), "doc")
-    )
-    out["conv"] = conv
-    if done("assemble"):
-        return out
-
-    # effective sign-stage commit granularity: data-proportional, from the
-    # committed assemble row count (free — it's in the ledger entry)
-    n_convs = ledger.metrics().get("assemble", {}).get("rows", 0)
-    eff_ranges = max(1, min(cfg.sync_ranges, n_convs // cfg.sync_min_rows_per_range))
-
-    # -- stage 2: exact dedup (shuffle on 32-byte digest) ---------------------
-    # No collect_list of members: a boilerplate flood (10^8 identical docs)
-    # must not materialize one giant array in a single aggregation buffer.
-    # Member→rep star edges are derived by re-joining on the digest — a
-    # plain shuffle join whose skew AQE splits.
-    def _exact() -> DataFrame:
-        return conv.groupBy("fp").agg(
-            F.min("conv_id").alias("rep_id"),
-            F.min("doc").alias("doc"),  # all docs in an fp-group are identical
-            F.count(F.lit(1)).alias("n_members"),
-        )
-
-    # written range-partitioned on rep_id (when granular commits are in
-    # play) so the sign stage's ranged commits partition-prune straight
-    # off this output — no staging copy.  At eff_ranges == 1 the range
-    # layout buys nothing; skip it and its partitionBy write.
-    if eff_ranges > 1:
-        exact = ledger.run(
-            spark, "exact", _exact, range_key="rep_id", n_ranges=eff_ranges
-        )
-    else:
-        exact = ledger.run(spark, "exact", _exact)
-    out["exact"] = exact
-    if done("exact"):
-        return out
-    # exact edges are a pure id/fp join of two COMMITTED outputs (fp rides
-    # along from the assemble stage — nothing re-fingerprints the corpus)
-    exact_edges = (
-        conv.select("fp", F.col("conv_id").alias("conv_b"))
-        .join(exact.filter(F.col("n_members") > 1).select("fp", F.col("rep_id").alias("conv_a")), "fp")
-        .filter(F.col("conv_a") != F.col("conv_b"))
-        .select("conv_a", "conv_b")
-    )
-    # near-dup stages see one representative per distinct document
-    reps = exact.select(F.col("rep_id").alias("conv_id"), "doc")
-
-    # -- stage 2b (optional): prefix-subsumption edges over the reps ----------
-    # runs on DISTINCT documents (exact-first means no equal-text runs),
-    # one range exchange + O(partitions) driver stitch; commits
-    # (conv_a=witness, conv_b=prefix) edges for the cluster union
-    prefix_edge_df = None
-    if cfg.enable_prefix:
-        from wdedup_spark.operators.prefixdedup import (
-            corpus_bounds,
-            edges_from_sorted,
-            sorted_corpus,
-        )
-
-        # three commits, not one: the SORTED corpus (one range exchange)
-        # and its per-slice bounds are durable artifacts — parquet is the
-        # pin the in-memory operator gets from localCheckpoint — so later
-        # run_incremental days probe the pinned slices instead of
-        # re-sorting the corpus (see prefixdedup.py committed-artifact
-        # notes).  Cost: one extra text copy on storage, the same
-        # materialize-once economy the operator already paid transiently;
-        # gc=True reclaims it when no increment chain will follow.
-        prefix_corpus = ledger.run(
-            spark, "prefix_corpus", lambda: sorted_corpus(reps, "doc", "conv_id")
-        )
-        prefix_bounds = ledger.run(
-            spark, "prefix_bounds", lambda: corpus_bounds(prefix_corpus)
-        )
-        prefix_edge_df = ledger.run(
-            spark, "prefix", lambda: edges_from_sorted(prefix_corpus, prefix_bounds)
-        )
-        out["prefix_edges"] = prefix_edge_df
-        if done("prefix"):
-            return out
-
-    # -- stage 3: sign (narrow, ONE fused vectorized pandas UDF) --------------
-    # The single most expensive Python stage, so it commits per key-range
-    # (run_ranged = the reference's --sync-distance analog): a crash mid-
-    # sign resumes from the first uncommitted range instead of re-signing
-    # the whole corpus.
-    def _sign_range(part: DataFrame, _r: int) -> DataFrame:
-        # CPU-bound Python stage: fan out to ~2 partitions per core
-        # regardless of input file byte-splits (ranges run up to 4 jobs
-        # concurrently, so size each range for its share of the cores)
-        par = max(1, spark.sparkContext.defaultParallelism * 2 // min(eff_ranges, 4))
-        df = add_signatures(
-            part.repartition(par), "doc",
-            k=cfg.k, n_perms=cfg.n_perms, seed=cfg.seed,
-            enable_simhash=cfg.enable_simhash,
-            enable_substring=cfg.enable_substring,
-            substring_k=cfg.substring_k, substring_w=cfg.substring_w,
-        )
-        return df.drop("doc")
-
-    if eff_ranges > 1:
-        signed = ledger.run_ranged(
-            spark, "sign", lambda: reps, _sign_range, key_col="conv_id",
-            n_ranges=eff_ranges, input_stage="exact",
-            input_select=lambda df: df.select(
-                F.col("rep_id").alias("conv_id"), "doc"
-            ),
-        )
-    else:
-        # one range == one whole-stage commit: plain run, none of the
-        # fence/staging/per-bucket machinery (toy-scale fast path; the
-        # recompute it would insure against is smaller than its overhead)
-        signed = ledger.run(spark, "sign", lambda: _sign_range(reps, 0))
-    out["signed"] = signed
-    if done("sign"):
-        return out
-
-    # -- stage 4: candidates (the shuffle stages) ------------------------------
-    cands = ledger.run(spark, "candidates", lambda: build_candidates(signed, cfg))
-    out["candidates"] = cands
-    if done("candidates"):
-        return out
-
-    # -- stage 5: verify (exact Jaccard; substring pairs get exact LCS) -------
-    # JVM-side MinHash-estimate pre-filter: lane-agreement rate is an
-    # unbiased Jaccard estimate; pairs far below threshold die inside
-    # whole-stage codegen before any Python verification.  ONE join per
-    # pair side carries BOTH the signature (estimate) and the shingle set
-    # (exact Jaccard) — see build_verify.
-    verified = ledger.run(spark, "verify", lambda: build_verify(cands, signed, reps, cfg))
-    out["verified"] = verified
-    if done("verify"):
-        return out
-
-    # -- stage 5b (optional): containment channel -----------------------------
-    # prefix-filtered set-containment join over the committed shingle
-    # sets (operators/containment.py): quote-in-transcript pairs whose
-    # Jaccard is ~|A|/|B| and therefore invisible to every band config.
-    # Consumes the sign stage's shingles — no re-tokenization.
-    containment_edge_df = None
-    if cfg.enable_containment:
-        from wdedup_spark.operators.containment import containment_join
-
-        containment_edge_df = ledger.run(
-            spark,
-            "containment",
-            lambda: containment_join(
-                signed, threshold=cfg.containment_threshold, shingle_col="shingles"
-            ),
-            # recorded so chain validation in run_incremental can check the
-            # threshold this day ACTUALLY committed at (ADVICE r4: base
-            # ledgers open with config_fence="", so the fence never sees it)
-            extra={"containment_threshold": cfg.containment_threshold},
-        )
-        out["containment_pairs"] = containment_edge_df
-        if done("containment"):
-            return out
-
-    # -- stage 6: cluster (iterative hash-to-min CC) ---------------------------
-    def _cluster() -> DataFrame:
-        edges = verified.select("conv_a", "conv_b").unionByName(
-            exact_edges.select("conv_a", "conv_b")
-        )
-        if prefix_edge_df is not None:
-            edges = edges.unionByName(prefix_edge_df.select("conv_a", "conv_b"))
-        if containment_edge_df is not None:
-            edges = edges.unionByName(
-                containment_edge_df.select("conv_a", "conv_b")
-            )
-        return cluster_assignments(conv.select("conv_id"), edges)
-
-    clusters = ledger.run(spark, "cluster", _cluster)
-    out["clusters"] = clusters
-
-    if gc:
-        # reclaim intermediates whose consumers are all committed (O14):
-        # sign feeds candidates+verify; candidates feeds verify
-        ledger.gc("sign")
-        ledger.gc("candidates")
-        if cfg.enable_prefix:
-            # the sorted-corpus text copy feeds only the prefix scan in
-            # THIS run — but an increment chain probes it, so (like sign)
-            # chains require gc=False; bounds are O(slices), kept
-            ledger.gc("prefix_corpus")
-
-    return out
+    ledger = _open_ledger(spark, workdir, cfg, stop_after)
+    return _run_stages(spark, ledger, turns, cfg, stop_after, gc, base=None)
 
 
 # ---------------------------------------------------------------------------
@@ -596,7 +406,8 @@ def run_incremental(
     """Dedup a NEW batch of turns against the committed corpus in
     ``base_workdir`` — the operation a daily 10^12-turn ingest actually
     runs — committing this increment's stages to ``workdir`` (resumable,
-    same ledger semantics as ``run_pipeline``).
+    same ledger semantics as ``run_pipeline``, ranged sign commits
+    included: ``cfg.sync_ranges`` applies to the day's batch).
 
     ``base_workdir`` is a completed ``run_pipeline`` workdir or a previous
     ``run_incremental`` workdir: increments CHAIN (each records its base
@@ -647,12 +458,7 @@ def run_incremental(
     additionally merge clusters a full recompute keeps separate —
     increments cannot retract an edge that was true when emitted.
     """
-    if stop_after == "prefix" and not cfg.enable_prefix:
-        raise ValueError("stop_after='prefix' requires enable_prefix=True")
-    if stop_after == "containment" and not cfg.enable_containment:
-        raise ValueError("stop_after='containment' requires enable_containment=True")
-    ledger = StageLedger(workdir, config_fence=cfg.fence(), spark=spark)
-    out: dict = {"ledger": ledger}
+    ledger = _open_ledger(spark, workdir, cfg, stop_after)
 
     # record / validate the chain pointer (idempotent across resumes)
     ptr = posixpath.join(ledger.workdir, BASE_POINTER)
@@ -735,66 +541,131 @@ def run_incremental(
         raise ValueError(f"base {chain[0]} has no committed cluster stage")
 
     def _union(stage: str) -> DataFrame:
-        dfs = [bl.output(spark, stage) for bl in base_ledgers]
-        u = dfs[0]
-        for d in dfs[1:]:
-            u = u.unionByName(d)
-        return u
+        return reduce(DataFrame.unionByName, [bl.output(spark, stage) for bl in base_ledgers])
 
-    old_sign = _union("sign")
-    old_exact = _union("exact")  # (fp, rep_id, doc, n_members); fps disjoint along the chain
-    base_clusters = base_ledgers[0].output(spark, "cluster")
+    base = _Base(
+        sign=_union("sign"),
+        exact=_union("exact"),  # (fp, rep_id, doc, n_members); fps disjoint along the chain
+        clusters=base_ledgers[0].output(spark, "cluster"),
+        prefix_runs=[
+            (bl.output(spark, "prefix_corpus"), bl.output(spark, "prefix_bounds"))
+            for bl in base_ledgers
+        ] if cfg.enable_prefix else [],
+    )
+    return _run_stages(spark, ledger, new_turns, cfg, stop_after, gc, base=base)
+
+
+# ---------------------------------------------------------------------------
+# The stage DAG, shared by both entry points
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class _Base:
+    """The committed corpus an increment runs against (run_pipeline has
+    none): the chain's unioned sign and exact tables, the newest day's
+    cluster assignment and, with ``enable_prefix``, every chain day's
+    pinned (prefix_corpus, prefix_bounds) run."""
+
+    sign: DataFrame
+    exact: DataFrame
+    clusters: DataFrame
+    prefix_runs: list[tuple[DataFrame, DataFrame]]
+
+
+def _open_ledger(
+    spark: SparkSession, workdir: str, cfg: PipelineConfig, stop_after: str | None
+) -> StageLedger:
+    if stop_after == "prefix" and not cfg.enable_prefix:
+        # without the guard this debug invocation would silently run the
+        # ENTIRE pipeline (no done() check ever matches)
+        raise ValueError("stop_after='prefix' requires enable_prefix=True")
+    if stop_after == "containment" and not cfg.enable_containment:
+        raise ValueError("stop_after='containment' requires enable_containment=True")
+    return StageLedger(workdir, config_fence=cfg.fence(), spark=spark)
+
+
+def _run_stages(
+    spark: SparkSession,
+    ledger: StageLedger,
+    turns: DataFrame,
+    cfg: PipelineConfig,
+    stop_after: str | None,
+    gc: bool,
+    base: _Base | None,
+) -> dict[str, DataFrame]:
+    """assemble → exact → [prefix] → sign → candidates → verify →
+    [containment] → cluster over ``turns``.  With a ``base`` the batch is
+    deduped against that committed corpus: each place the base changes a
+    stage branches once, on ``base``."""
+    out: dict = {"ledger": ledger}
 
     def done(stage: str) -> bool:
         return stop_after == stage
 
-    # -- assemble + fingerprint the new batch only ---------------------------
+    # -- stage 1: assemble (one shuffle on conv_id) ---------------------------
+    # the content fingerprint is computed HERE, in the same pass, and
+    # committed with the conversations: both the exact stage and the
+    # cluster stage's exact edges read it back for free instead of each
+    # re-hashing the whole corpus
     conv = ledger.run(
-        spark, "assemble", lambda: add_fingerprint(assemble_conversations(new_turns), "doc")
+        spark, "assemble", lambda: add_fingerprint(assemble_conversations(turns), "doc")
     )
     out["conv"] = conv
     if done("assemble"):
         return out
 
-    # -- exact: batch-internal dedup + routing to committed reps -------------
-    # committed rows = fps the corpus has NEVER seen (chain fps stay
-    # disjoint → day-N unions need no precedence logic)
+    # effective sign-stage commit granularity: data-proportional, from the
+    # committed assemble row count (free — it's in the ledger entry)
+    n_convs = ledger.metrics().get("assemble", {}).get("rows", 0)
+    eff_ranges = max(1, min(cfg.sync_ranges, n_convs // SYNC_MIN_ROWS_PER_RANGE))
+
+    # -- stage 2: exact dedup (shuffle on 32-byte digest) ---------------------
+    # No collect_list of members: a boilerplate flood (10^8 identical docs)
+    # must not materialize one giant array in a single aggregation buffer.
+    # Member→rep star edges are derived by re-joining on the digest — a
+    # plain shuffle join whose skew AQE splits.
     def _exact() -> DataFrame:
-        batch = conv.groupBy("fp").agg(
+        groups = conv.groupBy("fp").agg(
             F.min("conv_id").alias("rep_id"),
-            F.min("doc").alias("doc"),
+            F.min("doc").alias("doc"),  # all docs in an fp-group are identical
             F.count(F.lit(1)).alias("n_members"),
         )
-        return batch.join(old_exact.select("fp"), "fp", "left_anti")
+        if base is None:
+            return groups
+        # an increment commits only fps the corpus has NEVER seen (chain
+        # fps stay disjoint → day-N unions need no precedence logic)
+        return groups.join(base.exact.select("fp"), "fp", "left_anti")
 
-    exact = ledger.run(spark, "exact", _exact)
+    # range-laid-out on rep_id so the ranged sign commits partition-prune
+    # straight off this output (a plain write at eff_ranges == 1)
+    exact = ledger.run(spark, "exact", _exact, range_key="rep_id", n_ranges=eff_ranges)
     out["exact"] = exact
     if done("exact"):
         return out
-    # every new member → its rep (committed base rep for re-seen fps,
-    # batch rep for new fps); derived from committed outputs, like
-    # run_pipeline's exact_edges
-    rep_map = old_exact.select("fp", F.col("rep_id").alias("rep")).unionByName(
-        exact.select("fp", F.col("rep_id").alias("rep"))
-    )
+    # member → rep edges: an id/fp join of COMMITTED outputs (a singleton
+    # fp's rep is the member itself); an increment also routes re-seen fps
+    # to their committed reps
+    rep_map = exact.filter(F.col("n_members") > 1).select("fp", F.col("rep_id").alias("conv_a"))
+    if base is not None:
+        rep_map = base.exact.select("fp", F.col("rep_id").alias("conv_a")).unionByName(rep_map)
     exact_edges = (
         conv.select("fp", F.col("conv_id").alias("conv_b"))
         .join(rep_map, "fp")
-        .filter(F.col("rep") != F.col("conv_b"))
-        .select(F.col("rep").alias("conv_a"), "conv_b")
+        .filter(F.col("conv_a") != F.col("conv_b"))
+        .select("conv_a", "conv_b")
     )
-    reps_new = exact.select(F.col("rep_id").alias("conv_id"), "doc")
+    # near-dup stages see one representative per distinct document
+    reps = exact.select(F.col("rep_id").alias("conv_id"), "doc")
 
-    # -- prefix channel (optional): probe the chain's pinned sorted runs ------
-    # No corpus re-sort: today's batch is range-sorted ALONE (its own
-    # committed run, a chain day for tomorrow), within-batch edges come
-    # from scanning that run, and cross-day edges come from predecessor/
-    # successor probes into every chain day's committed slices — touched
-    # slices only.  Soundness/completeness of two probes per new doc, and
-    # the coarser-clusters caveat (early-witness edges a full recompute
-    # re-points; subsumed SET and canonical edges identical), are argued
-    # in prefixdedup.py's committed-artifact notes and pinned by
-    # tests/test_pipeline_prefix.py.
+    # -- stage 2b (optional): prefix-subsumption edges over the reps ----------
+    # (conv_a=witness, conv_b=prefix) edges over DISTINCT documents.  The
+    # SORTED corpus and its slice bounds commit separately — parquet pins
+    # the range partitioning — so later increments probe those slices
+    # instead of re-sorting the corpus: an increment sorts its batch ALONE
+    # and adds predecessor/successor probes into every chain day's run
+    # (two-probe argument and coarser-clusters caveat: prefixdedup.py,
+    # tests/test_pipeline_prefix.py).
     prefix_edge_df = None
     if cfg.enable_prefix:
         from wdedup_spark.operators.prefixdedup import (
@@ -804,74 +675,95 @@ def run_incremental(
             sorted_corpus,
         )
 
-        p_corpus = ledger.run(
-            spark, "prefix_corpus", lambda: sorted_corpus(reps_new, "doc", "conv_id")
+        prefix_corpus = ledger.run(
+            spark, "prefix_corpus", lambda: sorted_corpus(reps, "doc", "conv_id")
         )
-        p_bounds = ledger.run(
-            spark, "prefix_bounds", lambda: corpus_bounds(p_corpus)
-        )
+        prefix_bounds = ledger.run(spark, "prefix_bounds", lambda: corpus_bounds(prefix_corpus))
 
-        def _prefix_edges() -> DataFrame:
-            within = edges_from_sorted(p_corpus, p_bounds)
-            chain_runs = [
-                (bl.output(spark, "prefix_corpus"), bl.output(spark, "prefix_bounds"))
-                for bl in base_ledgers
-            ]
-            cross = cross_prefix_edges(reps_new, chain_runs, "doc", "conv_id")
-            return within.unionByName(cross)
+        def _prefix() -> DataFrame:
+            within = edges_from_sorted(prefix_corpus, prefix_bounds)
+            if base is None:
+                return within
+            return within.unionByName(
+                cross_prefix_edges(reps, base.prefix_runs, "doc", "conv_id")
+            )
 
-        prefix_edge_df = ledger.run(spark, "prefix", _prefix_edges)
+        prefix_edge_df = ledger.run(spark, "prefix", _prefix)
         out["prefix_edges"] = prefix_edge_df
         if done("prefix"):
             return out
 
-    # -- sign the new reps only ----------------------------------------------
-    def _sign() -> DataFrame:
-        par = max(1, spark.sparkContext.defaultParallelism * 2)
-        return add_signatures(
-            reps_new.repartition(par), "doc",
+    # -- stage 3: sign (narrow, ONE fused vectorized pandas UDF) --------------
+    # The single most expensive Python stage, so it commits per key-range
+    # (run_ranged = the reference's --sync-distance analog): a crash mid-
+    # sign resumes from the first uncommitted range instead of re-signing
+    # the whole batch.
+    def _sign_range(part: DataFrame, _r: int) -> DataFrame:
+        # CPU-bound Python stage: fan out to ~2 partitions per core
+        # regardless of input file byte-splits (ranges run up to 4 jobs
+        # concurrently, so size each range for its share of the cores)
+        par = max(1, spark.sparkContext.defaultParallelism * 2 // min(eff_ranges, 4))
+        df = add_signatures(
+            part.repartition(par), "doc",
             k=cfg.k, n_perms=cfg.n_perms, seed=cfg.seed,
             enable_simhash=cfg.enable_simhash,
             enable_substring=cfg.enable_substring,
             substring_k=cfg.substring_k, substring_w=cfg.substring_w,
-        ).drop("doc")
+        )
+        return df.drop("doc")
 
-    signed_new = ledger.run(spark, "sign", _sign)
-    out["signed"] = signed_new
+    if eff_ranges > 1:
+        signed = ledger.run_ranged(
+            spark, "sign", "exact", _sign_range, n_ranges=eff_ranges,
+            input_select=lambda df: df.select(F.col("rep_id").alias("conv_id"), "doc"),
+        )
+    else:
+        # one range == one whole-stage commit: plain run, none of the
+        # fence/per-bucket machinery (the recompute it would insure
+        # against is smaller than its overhead)
+        signed = ledger.run(spark, "sign", lambda: _sign_range(reps, 0))
+    out["signed"] = signed
     if done("sign"):
         return out
 
-    signed_all = old_sign.withColumn("is_new", F.lit(False)).unionByName(
-        signed_new.withColumn("is_new", F.lit(True))
-    )
+    # an increment's candidates and containment see old ∪ new signatures
+    # with a batch flag: old ids are re-BANDED (one narrow JVM scan of the
+    # committed sign tables — no Python, no re-signing) but never
+    # re-PAIRED among themselves; verify reads docs along the chain
+    signed_all, flagged, new_col, docs = signed, signed, None, reps
+    if base is not None:
+        new_col = "is_new"
+        signed_all = base.sign.unionByName(signed)
+        flagged = base.sign.withColumn(new_col, F.lit(False)).unionByName(
+            signed.withColumn(new_col, F.lit(True))
+        )
+        docs = base.exact.select(F.col("rep_id").alias("conv_id"), "doc").unionByName(reps)
 
-    # -- candidates touching the new batch ------------------------------------
-    cands = ledger.run(
-        spark, "candidates", lambda: build_candidates(signed_all, cfg, new_col="is_new")
-    )
+    # -- stage 4: candidates (the shuffle stages) ------------------------------
+    cands = ledger.run(spark, "candidates", lambda: build_candidates(flagged, cfg, new_col))
     out["candidates"] = cands
     if done("candidates"):
         return out
 
-    # -- verify (docs for the doc-level channels come from the chain) ---------
-    reps_docs = old_exact.select(
-        F.col("rep_id").alias("conv_id"), "doc"
-    ).unionByName(reps_new)
-    verified = ledger.run(
-        spark, "verify",
-        lambda: build_verify(cands, signed_all.drop("is_new"), reps_docs, cfg),
-    )
+    # -- stage 5: verify (exact Jaccard; substring pairs get exact LCS) -------
+    # JVM-side MinHash-estimate pre-filter: lane-agreement rate is an
+    # unbiased Jaccard estimate; pairs far below threshold die inside
+    # whole-stage codegen before any Python verification.  ONE join per
+    # pair side carries BOTH the signature (estimate) and the shingle set
+    # (exact Jaccard) — see build_verify.
+    verified = ledger.run(spark, "verify", lambda: build_verify(cands, signed_all, docs, cfg))
     out["verified"] = verified
     if done("verify"):
         return out
 
-    # -- containment channel (optional): pairs touching the new batch --------
-    # same-day token order over old ∪ new (lossless for any single
-    # consistent order — no frozen-frequency state), old side re-exploded
-    # JVM-side from the committed shingle arrays, only new-touching
-    # candidates expanded (containment_join new_col mode).  Old×old pairs
-    # were emitted by previous increments; like the LSH channel, this
-    # assumes the channel ran (same threshold) on every prior day.
+    # -- stage 5b (optional): containment channel -----------------------------
+    # prefix-filtered set-containment join over the committed shingle
+    # sets (operators/containment.py): quote-in-transcript pairs whose
+    # Jaccard is ~|A|/|B| and therefore invisible to every band config.
+    # Consumes the sign stage's shingles — no re-tokenization.  An
+    # increment expands only candidates touching its batch (same-day token
+    # order over old ∪ new is lossless for any single consistent order);
+    # old×old pairs were emitted when their members were new.
     containment_edge_df = None
     if cfg.enable_containment:
         from wdedup_spark.operators.containment import containment_join
@@ -880,36 +772,42 @@ def run_incremental(
             spark,
             "containment",
             lambda: containment_join(
-                signed_all, threshold=cfg.containment_threshold,
-                shingle_col="shingles", new_col="is_new",
+                flagged, threshold=cfg.containment_threshold,
+                shingle_col="shingles", new_col=new_col,
             ),
-            # this increment becomes a chain day for tomorrow: record the
-            # threshold so the validation above covers it too
+            # recorded so chain validation in run_incremental can check the
+            # threshold this day ACTUALLY committed at (base ledgers open
+            # with config_fence="", so the fence never sees it)
             extra={"containment_threshold": cfg.containment_threshold},
         )
         out["containment_pairs"] = containment_edge_df
         if done("containment"):
             return out
 
-    # -- cluster: merge into the committed assignment --------------------------
+    # -- stage 6: cluster (CC; an increment merges into the committed one) ----
     def _cluster() -> DataFrame:
         edges = verified.select("conv_a", "conv_b").unionByName(
             exact_edges.select("conv_a", "conv_b")
         )
-        if prefix_edge_df is not None:
-            edges = edges.unionByName(prefix_edge_df.select("conv_a", "conv_b"))
-        if containment_edge_df is not None:
-            edges = edges.unionByName(
-                containment_edge_df.select("conv_a", "conv_b")
-            )
-        return incremental_update(base_clusters, edges, conv.select("conv_id"))
+        for extra_edges in (prefix_edge_df, containment_edge_df):
+            if extra_edges is not None:
+                edges = edges.unionByName(extra_edges.select("conv_a", "conv_b"))
+        if base is None:
+            return cluster_assignments(conv.select("conv_id"), edges)
+        return incremental_update(base.clusters, edges, conv.select("conv_id"))
 
     clusters = ledger.run(spark, "cluster", _cluster)
     out["clusters"] = clusters
 
     if gc:
-        # candidates feeds only verify; sign/exact deltas MUST survive for
-        # the next increment in the chain
+        # reclaim intermediates whose consumers are all committed (O14).
+        # A batch run also drops sign and the sorted-corpus text copy (so
+        # an increment chain's base needs gc=False); an increment keeps
+        # them — the next day in the chain reads them.
         ledger.gc("candidates")
+        if base is None:
+            ledger.gc("sign")
+            if cfg.enable_prefix:
+                ledger.gc("prefix_corpus")
 
     return out

@@ -94,14 +94,18 @@ class _HadoopFS:
         ranged stages keep their parquet inside rng=<r>/ bucket dirs."""
         if not self.exists(path):
             return []
-        base = str(self._fs.makeQualified(self._p(path)).toString())
-        it = self._fs.listFiles(self._p(path), True)
-        out = []
-        while it.hasNext():
-            st = it.next()
-            full = str(st.getPath().toString())
-            rel = full[len(base) + 1 :] if full.startswith(base) else full
-            out.append((rel, int(st.getLen())))
+        # listStatus, not listFiles: listFiles builds LocatedFileStatus,
+        # which reads each file's permission — on the local filesystem
+        # without native Hadoop that forks an `ls -ld` per file
+        out, todo = [], [("", self._p(path))]
+        while todo:
+            prefix, p = todo.pop()
+            for st in self._fs.listStatus(p):
+                rel = prefix + str(st.getPath().getName())
+                if st.isDirectory():
+                    todo.append((rel + "/", st.getPath()))
+                else:
+                    out.append((rel, int(st.getLen())))
         return sorted(out)
 
 
@@ -163,7 +167,6 @@ class StageLedger:
         if not self.is_committed(stage) or self.is_gcd(stage):
             return
         self.fs.delete(self._out_path(stage))
-        self.fs.delete(self._out_path(stage) + ".input")  # ranged staging, if any
         self._append_entry(
             {"stage": stage, "event": "gc", "config_fence": self.config_fence, "ts": time.time()}
         )
@@ -233,7 +236,6 @@ class StageLedger:
         spark: SparkSession,
         stage: str,
         fn: Callable[[], DataFrame],
-        repartition: int | None = None,
         range_key: str | None = None,
         n_ranges: int = 0,
         extra: dict | None = None,
@@ -247,7 +249,8 @@ class StageLedger:
         ``range_key``/``n_ranges``: additionally lay the output out
         partitioned by ``rng = pmod(xxhash64(range_key), n_ranges)`` so a
         downstream ``run_ranged`` stage can partition-prune its per-range
-        input straight off this commit — no staging copy.
+        input straight off this commit.  At ``n_ranges <= 1`` the layout
+        buys nothing and is skipped (plain write).
 
         ``extra``: metadata recorded in the commit entry (e.g. the
         threshold a channel ran at) so later chain runs can validate
@@ -257,10 +260,8 @@ class StageLedger:
             return None if self.is_gcd(stage) else self.output(spark, stage)
         t0 = time.time()
         df = fn()
-        if repartition:
-            df = df.repartition(repartition)
         out = self._out_path(stage)
-        if range_key and n_ranges:
+        if range_key and n_ranges > 1:
             df = df.withColumn(
                 RANGE_COL, F.pmod(F.xxhash64(F.col(range_key)), F.lit(n_ranges))
             )
@@ -275,6 +276,11 @@ class StageLedger:
             df.repartition(par, F.col(RANGE_COL), F.col(range_key)).write.mode(
                 "overwrite"
             ).partitionBy(RANGE_COL).parquet(out)
+            if not any(n.endswith(".parquet") for n, _ in self.fs.list_files_recursive(out)):
+                # an empty partitioned write leaves no file to read a schema
+                # from (e.g. an increment whose every doc was seen before):
+                # commit one empty file that carries rng as a plain column
+                df.limit(0).write.mode("overwrite").parquet(out)
         else:
             df.write.mode("overwrite").parquet(out)
         return self._commit(stage, out, time.time() - t0, extra=extra)
@@ -283,11 +289,9 @@ class StageLedger:
         self,
         spark: SparkSession,
         stage: str,
-        input_fn: Callable[[], DataFrame],
+        input_stage: str,
         transform: Callable[[DataFrame, int], DataFrame],
-        key_col: str,
-        n_ranges: int = 16,
-        input_stage: str | None = None,
+        n_ranges: int,
         input_select: Callable[[DataFrame], DataFrame] | None = None,
     ) -> DataFrame:
         """Sub-stage recovery — the reference's ``--sync-distance`` analog
@@ -295,29 +299,31 @@ class StageLedger:
         budget; here the budget is 1/n_ranges of the stage).
 
         Protocol:
-          1. obtain a range-partitioned input: preferably the committed
-             upstream ``input_stage`` whose ``run(range_key=...)`` already
-             laid data out by ``rng`` (zero-copy: per-range reads are
-             partition-pruned scans of the committed output); otherwise
-             materialize ``input_fn()`` ONCE into ``<stage>.input/`` —
-             a cheap narrow JVM write (restarted wholesale on crash; the
-             expensive work is the transform, not this copy);
+          1. the input is the committed upstream ``input_stage``, written
+             by ``run(range_key=..., n_ranges=n_ranges)``: per-range reads
+             are partition-pruned scans of that output (zero-copy);
           2. per range r: if ``<stage>/rng=r/_SUCCESS`` exists, skip;
              else run ``transform(partition-pruned input, r)`` and write
              that bucket — each bucket is its own atomic commit;
-          3. after all buckets: top-level ``_SUCCESS`` + ledger row, then
-             any staging copy is deleted.
+          3. after all buckets: top-level ``_SUCCESS`` + ledger row.
 
-        ``input_select`` projects the pruned per-range input (applied
-        after the rng filter, before the transform).  A fence file inside
-        the output dir ties buckets to the pipeline config: stale buckets
-        from an incompatible earlier run are wiped, never resumed from.
+        ``input_select`` adapts the committed upstream schema to the
+        transform's input (applied after the rng filter).  A fence file
+        inside the output dir ties buckets to the pipeline config: stale
+        buckets from an incompatible earlier run are wiped, never resumed
+        from.
         """
         if self.is_committed(stage):
             return None if self.is_gcd(stage) else self.output(spark, stage)
         t0 = time.time()
+        if not self.is_committed(input_stage) or self.is_gcd(input_stage):
+            raise ValueError(f"input stage {input_stage!r} has no committed output")
+        staged = spark.read.parquet(self._out_path(input_stage))
+        if RANGE_COL not in staged.columns:
+            raise ValueError(
+                f"input stage {input_stage!r} was not written range-partitioned"
+            )
         out = self._out_path(stage)
-        staging = out + ".input"
         fence_file = posixpath.join(out, ".fence")
         fence_ok = (
             self.fs.exists(fence_file)
@@ -325,27 +331,8 @@ class StageLedger:
         )
         if not fence_ok:
             self.fs.delete(out)
-            self.fs.delete(staging)
             self.fs.mkdirs(out)
             self.fs.write_text(fence_file, f"{self.config_fence}:{n_ranges}")
-        from_input_stage = (
-            input_stage is not None
-            and self.is_committed(input_stage)
-            and not self.is_gcd(input_stage)  # GC'd output is gone on disk
-        )
-        if from_input_stage:
-            staged = spark.read.parquet(self._out_path(input_stage))
-            if RANGE_COL not in staged.columns:
-                raise ValueError(
-                    f"input stage {input_stage!r} was not written range-partitioned"
-                )
-        else:
-            if not self.fs.exists(posixpath.join(staging, "_SUCCESS")):
-                df = input_fn().withColumn(
-                    RANGE_COL, F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_ranges))
-                )
-                df.write.mode("overwrite").partitionBy(RANGE_COL).parquet(staging)
-            staged = spark.read.parquet(staging)
         todo = [
             r
             for r in range(n_ranges)
@@ -354,10 +341,7 @@ class StageLedger:
 
         def _run_range(r: int) -> None:
             part = staged.filter(F.col(RANGE_COL) == r).drop(RANGE_COL)
-            if input_select is not None and from_input_stage:
-                # input_select adapts the committed upstream SCHEMA to the
-                # transform's input; the staging fallback already has the
-                # input_fn() shape and must not be re-projected
+            if input_select is not None:
                 part = input_select(part)
             bucket = posixpath.join(out, f"{RANGE_COL}={r}")
             transform(part, r).write.mode("overwrite").parquet(bucket)
@@ -371,11 +355,7 @@ class StageLedger:
                 for f in [pool.submit(_run_range, r) for r in todo]:
                     f.result()
         self.fs.touch(posixpath.join(out, "_SUCCESS"))
-        result = self._commit(
-            stage, out, time.time() - t0, extra={"ranged": n_ranges}
-        )
-        self.fs.delete(staging)
-        return result
+        return self._commit(stage, out, time.time() - t0, extra={"ranged": n_ranges})
 
     def metrics(self) -> dict[str, dict]:
         return {
