@@ -3,7 +3,7 @@
 No real cluster exists in this sandbox, so (per the driver instruction)
 the same job runs on the same input at two local parallelism levels (N vs
 4N cores) in separate JVMs.  Throughput at both plus efficiency =
-(T_N / T_4N) / 4 is reported and recorded in bench_scaling_{N}_{4N}.json;
+(T_N / T_4N) / 4 is reported and recorded in history/bench_scaling_{N}_{4N}.json;
 BENCH.md summarizes.
 
 The measured job is the full transcript dedup pipeline (assemble → exact
@@ -419,7 +419,7 @@ def main() -> None:
                 "probe_calib_rate": probe_calib,
             }
             print(json.dumps(failure))
-            with open(os.path.join(repo, f"bench_scaling_{n_low}_{n_high}.json"), "w") as f:
+            with open(os.path.join(repo, "history", f"bench_scaling_{n_low}_{n_high}.json"), "w") as f:
                 f.write(json.dumps(failure) + "\n")
             sys.exit(1)
         walls = sorted(x["wall_s"] for x in pool)
@@ -497,7 +497,7 @@ def main() -> None:
             + " — medians use DIRTY runs; do not quote as clean-window numbers"
         )
     print(json.dumps(summary))
-    with open(os.path.join(repo, f"bench_scaling_{n_low}_{n_high}.json"), "w") as f:
+    with open(os.path.join(repo, "history", f"bench_scaling_{n_low}_{n_high}.json"), "w") as f:
         f.write(json.dumps(summary) + "\n")
 
 

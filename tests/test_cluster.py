@@ -38,6 +38,18 @@ def test_cc_long_path_converges(spark, small_thresh):
     assert len(got) == n
 
 
+def test_cc_raises_when_rounds_run_out(spark, monkeypatch):
+    """The distributed loop fails loudly instead of returning labels that
+    have not converged: the 33-node path needs more than one round."""
+    import wdedup_spark.operators.cluster as cl
+
+    monkeypatch.setattr(cl, "MAX_ROUNDS", 1)
+    nodes = [f"n{i:03d}" for i in range(33)]
+    edges = _edges(spark, list(zip(nodes[:-1], nodes[1:])))
+    with pytest.raises(RuntimeError, match="did not converge"):
+        cl.connected_components(edges, small_graph_edges=0)
+
+
 def test_cluster_assignments_singletons(spark):
     all_ids = spark.createDataFrame(pd.DataFrame({"conv_id": ["a", "b", "c", "z"]}))
     edges = _edges(spark, [("a", "b")])

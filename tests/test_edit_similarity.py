@@ -1,10 +1,14 @@
-"""Edit-distance verifier tests vs a plain-Python Levenshtein oracle."""
+"""Edit-distance verifier tests vs a plain-Python Levenshtein oracle.
+
+The token-level similarity is the pipeline's edit check inside
+``verify.verify_kernel``; it is read off the kernel's verdict at the
+oracle value (passes) and at the next float above it (fails)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
-from wdedup_spark.operators.verify import edit_similarity_udf
+from wdedup_spark.operators.verify import verify_kernel
 
 
 def _lev(a, b):
@@ -31,14 +35,25 @@ CASES = [
 ]
 
 
-def test_edit_similarity_matches_oracle(spark):
-    pdf = pd.DataFrame(CASES, columns=["ta", "tb"])
-    df = spark.createDataFrame(pdf)
-    got = (
-        df.select("ta", "tb", edit_similarity_udf("ta", "tb").alias("sim"))
-        .toPandas()
-        .set_index(["ta", "tb"])["sim"]
+def _edit_verified(ta, tb, edit_threshold):
+    """Does the kernel's edit channel pass (ta, tb) at ``edit_threshold``?
+    Jaccard can never pass (threshold 2) and every pair gets the edit
+    check (floor -1)."""
+    pdf = pd.DataFrame(
+        {"conv_a": ["a"], "conv_b": ["b"], "via": [np.array(["minhash"], dtype=object)],
+         "doc_a": [ta], "doc_b": [tb]}
     )
+    out = verify_kernel(pdf, 3, 2.0, 100, -1.0, edit_threshold)
+    assert all(v == ["edit"] for v in out["via"])
+    return len(out) == 1
+
+
+def _assert_similarity(ta, tb, want):
+    assert _edit_verified(ta, tb, want), (ta, tb)
+    assert not _edit_verified(ta, tb, np.nextafter(want, np.inf)), (ta, tb)
+
+
+def test_edit_similarity_matches_oracle():
     for ta, tb in CASES:
         na, nb = len(ta.split()), len(tb.split())
         if na == 0 and nb == 0:
@@ -47,28 +62,18 @@ def test_edit_similarity_matches_oracle(spark):
             want = 0.0
         else:
             want = 1.0 - _lev(ta, tb) / max(na, nb)
-        assert abs(got.loc[(ta, tb)] - want) < 1e-12, (ta, tb)
+        _assert_similarity(ta, tb, want)
 
 
-def test_edit_similarity_random_vs_oracle(spark):
+def test_edit_similarity_random_vs_oracle():
     rng = np.random.default_rng(3)
     vocab = [f"w{i}" for i in range(30)]
-    rows = []
     for _ in range(40):
         n, m = rng.integers(1, 40, 2)
-        rows.append(
-            (
-                " ".join(rng.choice(vocab, n)),
-                " ".join(rng.choice(vocab, m)),
-            )
-        )
-    pdf = pd.DataFrame(rows, columns=["ta", "tb"])
-    df = spark.createDataFrame(pdf)
-    got = df.select("ta", "tb", edit_similarity_udf("ta", "tb").alias("sim")).collect()
-    for r in got:
-        na, nb = len(r["ta"].split()), len(r["tb"].split())
-        want = 1.0 - _lev(r["ta"], r["tb"]) / max(na, nb)
-        assert abs(r["sim"] - want) < 1e-12
+        ta = " ".join(rng.choice(vocab, n))
+        tb = " ".join(rng.choice(vocab, m))
+        want = 1.0 - _lev(ta, tb) / max(n, m)
+        _assert_similarity(ta, tb, want)
 
 
 def _lev_chars(a, b):

@@ -95,6 +95,19 @@ def test_config_fence_invalidates(spark, tiny_turns, tmp_path):
     assert fences == {cfg2.fence()}
 
 
+@pytest.mark.parametrize(
+    "const", ["MAX_HAMMING", "MIN_BAND_COLLISIONS", "EDIT_MARGIN", "SYNC_MIN_ROWS_PER_RANGE"]
+)
+def test_fence_covers_pipeline_constants(monkeypatch, const):
+    """The module tuning constants are fenced like config fields: a changed
+    constant must not reuse outputs written under the old value."""
+    from wdedup_spark.plans import pipeline
+
+    before = CFG.fence()
+    monkeypatch.setattr(pipeline, const, getattr(pipeline, const) + 1)
+    assert CFG.fence() != before
+
+
 def test_skew_fixture_results_stable(spark, tmp_path):
     """F5: hot boilerplate bucket — star policy bounds pair volume while
     planted dups still cluster."""

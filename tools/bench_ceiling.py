@@ -38,7 +38,7 @@ Env:   SCALE_INPUT_DIR   turns parquet (default /tmp/scale-input-20m)
        SCALE_REPS_DIR    pre-assembled reps cache (default
                          /tmp/scale-reps-20m; built once if missing)
        CEIL_EXECUTOR_MEM_MB (default 8192)
-Writes bench_ceiling_{low}_{high}.json next to the repo root.
+Writes history/bench_ceiling_{low}_{high}.json.
 """
 
 from __future__ import annotations
@@ -237,7 +237,7 @@ def main() -> None:
             "scaling_efficiency": round(lo["wall_s"] / hi["wall_s"] / ratio, 3),
         }
     print(json.dumps(summary))
-    with open(os.path.join(REPO, f"bench_ceiling_{n_low}_{n_high}.json"), "w") as f:
+    with open(os.path.join(REPO, "history", f"bench_ceiling_{n_low}_{n_high}.json"), "w") as f:
         f.write(json.dumps(summary) + "\n")
 
 

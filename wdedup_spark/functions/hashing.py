@@ -89,22 +89,6 @@ def minhash_params(n_perms: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-def minhash_signature(shingles: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """MinHash signature: ``sig[j] = min_s (a[j]*s + b[j] mod 2^64)``.
-
-    Empty shingle set → all-max sentinel (never collides with real docs).
-    """
-    if len(shingles) == 0:
-        return np.full(len(a), np.iinfo(np.uint64).max, dtype=np.uint64)
-    # (n_shingles, n_perms) — chunk shingles to bound the temporary
-    out = np.full(len(a), np.iinfo(np.uint64).max, dtype=np.uint64)
-    CHUNK = 4096
-    for i in range(0, len(shingles), CHUNK):
-        s = shingles[i : i + CHUNK]
-        out = np.minimum(out, (s[:, None] * a[None, :] + b[None, :]).min(axis=0))
-    return out
-
-
 _BIT_SHIFTS = np.arange(64, dtype=np.uint64)
 
 
@@ -290,7 +274,7 @@ def batch_minhash(
 ) -> np.ndarray:
     """MinHash signatures for every doc: one (chunk_grams, n_perms)
     product + ``minimum.reduceat`` per chunk of docs.  Empty sets get the
-    all-max sentinel, matching ``minhash_signature``.  Returns an
+    all-max sentinel (never collides with a real doc).  Returns an
     ``(n_docs, n_perms)`` uint64 matrix."""
     n_docs = len(set_offsets) - 1
     out = np.full((n_docs, len(a)), np.iinfo(np.uint64).max, dtype=np.uint64)

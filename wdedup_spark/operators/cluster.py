@@ -67,6 +67,10 @@ def _truncate_lineage(df: DataFrame, eager: bool) -> tuple[DataFrame, DataFrame 
 #: stays far below driver memory at this threshold × safety margin.
 SMALL_GRAPH_EDGES = 2_000_000
 
+#: hash-to-min round bound: pointer jumping needs O(log n) rounds, so
+#: labels still changing after it are an error, not a result
+MAX_ROUNDS = 20
+
 
 def _driver_union_find(edge_rows, spark, id_type) -> DataFrame:
     """Small-graph fast path: exact union-find with min-id representative
@@ -107,7 +111,6 @@ def _driver_union_find(edge_rows, spark, id_type) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    max_iter: int = 20,
     a_col: str = "conv_a",
     b_col: str = "conv_b",
     small_graph_edges: int = SMALL_GRAPH_EDGES,
@@ -119,7 +122,7 @@ def connected_components(
     same way, src/main.cpp:213-214): count edges first — below
     ``small_graph_edges`` run exact union-find on the driver (one job +
     O(E α(E)) local work); above it, distributed hash-to-min with pointer
-    jumping (O(log n) rounds)."""
+    jumping (O(log n) rounds, at most ``MAX_ROUNDS``; RuntimeError past it)."""
     # eager local checkpoint BEFORE the strategy probe (r6, guide §2.4):
     # the count() below and the collect()/iteration that follows are
     # SEPARATE actions — without the checkpoint the entire upstream chain
@@ -150,7 +153,7 @@ def connected_components(
     )
     labels, prev_handle = _truncate_lineage(labels, eager=False)
 
-    for _ in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # (1) propagate: min label over closed neighborhood
         neighbor_labels = (
             sym.join(labels.withColumnRenamed("node", "dst"), "dst")
@@ -190,6 +193,10 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in {MAX_ROUNDS} hash-to-min rounds"
+        )
 
     # final labels are materialized on reliable storage; cached blocks are
     # a read-through optimization the caller doesn't need for correctness

@@ -122,6 +122,12 @@ def common_run_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="int32")
 
 
+# evaluated once per pair: substring_candidates filters right on its
+# value, and the optimizer would otherwise evaluate it a second time
+# under the pushed-down filter (see the note on jaccard_udf in verify.py)
+common_run_udf = common_run_udf.asNondeterministic()
+
+
 def substring_candidates(
     df: DataFrame,
     text_col: str = "doc",

@@ -1,13 +1,13 @@
-"""Candidate-pair verification: exact Jaccard / edit-similarity.
+"""Candidate-pair verification: exact Jaccard / edit-similarity / common run.
 
 LSH/SimHash candidates are probabilistic; verification makes the final
 pair set exact (false positives die here; false negatives are bounded by
 the band/bucket recall, tested against the O(n²) oracle).
 
-Scale: candidates join back to the *shingle-set* table (array<long>, the
-compressed representation) on id — two shuffles bounded by candidate
-count, never a cross join.  Raw text is only rejoined for the
-edit-distance variant, and only for pairs that survived Jaccard.
+``verify_pairs`` (the queries) joins candidates to the committed
+shingle-set table and runs ``jaccard_udf``.  ``verify_kernel`` (the
+pipeline) decides every channel for one Arrow batch of candidates joined
+to their documents, from one tokenization of those documents.
 """
 
 from __future__ import annotations
@@ -19,6 +19,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
+from wdedup_spark.functions import hashing
+from wdedup_spark.operators.substring import DEFAULT_KGRAM, _common_run
+
+
+def _jaccard(sa: np.ndarray, sb: np.ndarray) -> float:
+    """Exact Jaccard of two distinct-value shingle sets (empty vs empty
+    is 1.0, the [""]-shingle convention)."""
+    if len(sa) == 0 and len(sb) == 0:
+        return 1.0
+    inter = len(np.intersect1d(sa, sb, assume_unique=True))
+    return inter / (len(sa) + len(sb) - inter)
+
 
 @pandas_udf(DoubleType())
 def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
@@ -26,13 +38,9 @@ def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     numpy set ops per row; sets are pre-distinct from shingle_hashes)."""
     out = np.empty(len(a), dtype=np.float64)
     for i in range(len(a)):
-        sa = np.asarray(a.iloc[i], dtype=np.int64)
-        sb = np.asarray(b.iloc[i], dtype=np.int64)
-        if len(sa) == 0 and len(sb) == 0:
-            out[i] = 1.0
-            continue
-        inter = len(np.intersect1d(sa, sb, assume_unique=True))
-        out[i] = inter / (len(sa) + len(sb) - inter)
+        out[i] = _jaccard(
+            np.asarray(a.iloc[i], dtype=np.int64), np.asarray(b.iloc[i], dtype=np.int64)
+        )
     return pd.Series(out)
 
 
@@ -65,22 +73,6 @@ def _edit_similarity(ta: np.ndarray, tb: np.ndarray) -> float:
 
 
 @pandas_udf(DoubleType())
-def edit_similarity_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Token-level Levenshtein similarity: 1 - dist/max_len over hashed
-    tokens.  Runs only on candidate pairs that survived the cheap
-    filters; the north_rule's "edit-distance check"."""
-    out = np.zeros(len(a), dtype=np.float64)
-    from wdedup_spark.functions.hashing import TokenHasher
-
-    th = TokenHasher()
-    for i in range(len(a)):
-        ta = th.hash_tokens(a.iloc[i].split() if a.iloc[i] else [])
-        tb = th.hash_tokens(b.iloc[i].split() if b.iloc[i] else [])
-        out[i] = _edit_similarity(ta, tb)
-    return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
 def edit_similarity_bytes_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """BYTE-level Levenshtein similarity: 1 - dist/max_bytes over the
     utf-8 encoding (== character level for ASCII text).
@@ -89,7 +81,7 @@ def edit_similarity_bytes_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     utf-8 BYTES (verified: 'über'↔'uber' = 2, not 1), so this is the
     oracle-mirrorable variant of the edit channel — pair it with
     ``strlen``/``octet_length`` denominators on the SQL side.  Same
-    vectorized DP as the token-level kernel.
+    vectorized DP as the token-level check in ``verify_kernel``.
     """
     out = np.zeros(len(a), dtype=np.float64)
     for i in range(len(a)):
@@ -107,7 +99,6 @@ def edit_similarity_bytes_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 # but marking them non-deterministic forbids the duplicating rewrite —
 # one evaluation per row, identical values.
 jaccard_udf = jaccard_udf.asNondeterministic()
-edit_similarity_udf = edit_similarity_udf.asNondeterministic()
 edit_similarity_bytes_udf = edit_similarity_bytes_udf.asNondeterministic()
 
 
@@ -131,4 +122,72 @@ def verify_pairs(
         .withColumn("jaccard", jaccard_udf(F.col("sh_a"), F.col("sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("conv_a", "conv_b", "jaccard")
+    )
+
+
+def verify_kernel(
+    pdf: pd.DataFrame,
+    k: int,
+    threshold: float,
+    min_span: int,
+    edit_floor: float | None,
+    edit_threshold: float,
+) -> pd.DataFrame:
+    """Decide every verify channel for one batch of candidate pairs.
+
+    ``pdf`` holds (conv_a, conv_b, via, doc_a, doc_b); the result holds
+    the verified rows only, as (conv_a, conv_b, jaccard, via) with ``via``
+    the sorted subset of {edit, jaccard, substring} that passed and
+    ``jaccard`` null unless ``via`` contains jaccard:
+
+    * jaccard — exact k-shingle Jaccard >= ``threshold``, over the sign
+      stage's own batch kernels, so the value is bit-identical to
+      ``jaccard_udf`` over the committed ``shingles``;
+    * substring — for candidates whose ``via`` contains substring, the
+      longest common token run (``_common_run``, 16-token seeds) >=
+      ``min_span``;
+    * edit — when ``edit_floor`` is set, token Levenshtein similarity >=
+      ``edit_threshold`` for pairs that fail Jaccard but have Jaccard >=
+      ``edit_floor`` or are substring candidates.
+
+    Each distinct document of the batch is tokenized once, however many
+    pairs it is in; null documents count as empty."""
+    n = len(pdf)
+    ids = pd.concat([pdf["conv_a"], pdf["conv_b"]], ignore_index=True)
+    texts = pd.concat([pdf["doc_a"], pdf["doc_b"]], ignore_index=True)
+    # factorize codes follow first appearance, as does ~duplicated()
+    codes, _ = pd.factorize(ids)
+    flat, off = hashing.split_hash_batch(texts[~ids.duplicated()])
+    sets, so = hashing.batch_unique_sets(*hashing.batch_shingle_seq(flat, off, k))
+    ia, ib = codes[:n], codes[n:]
+
+    def toks(d: int) -> np.ndarray:
+        return flat[off[d]:off[d + 1]]
+
+    jac = np.array(
+        [_jaccard(sets[so[a]:so[a + 1]], sets[so[b]:so[b + 1]]) for a, b in zip(ia, ib)],
+        dtype=np.float64,
+    )
+    ok_jac = jac >= threshold
+    is_sub = np.fromiter((("substring" in v) for v in pdf["via"]), dtype=bool, count=n)
+    ok_sub = np.zeros(n, dtype=bool)
+    for i in np.flatnonzero(is_sub):
+        ok_sub[i] = _common_run(toks(ia[i]), toks(ib[i]), DEFAULT_KGRAM) >= min_span
+    ok_edit = np.zeros(n, dtype=bool)
+    if edit_floor is not None:
+        for i in np.flatnonzero(~ok_jac & ((jac >= edit_floor) | is_sub)):
+            ok_edit[i] = _edit_similarity(toks(ia[i]), toks(ib[i])) >= edit_threshold
+    keep = np.flatnonzero(ok_jac | ok_sub | ok_edit)
+    channels = (("edit", ok_edit), ("jaccard", ok_jac), ("substring", ok_sub))
+    return pd.DataFrame(
+        {
+            "conv_a": pdf["conv_a"].to_numpy()[keep],
+            "conv_b": pdf["conv_b"].to_numpy()[keep],
+            "jaccard": np.where(ok_jac, jac, np.nan)[keep],
+            # object dtype even when empty: Arrow cannot read a float64
+            # column as array<string>
+            "via": pd.Series(
+                [[nm for nm, ok in channels if ok[i]] for i in keep], dtype=object
+            ),
+        }
     )

@@ -3,7 +3,7 @@
 Orchestrates the checkpointed stage DAG (SURVEY.md §3):
 
   assemble → exact → sign(shingle+MinHash+SimHash) → candidates
-  (LSH ∪ SimHash ∪ substring) → verify → cluster
+  (LSH ∪ SimHash ∪ substring) → verify(Jaccard, common run, edit) → cluster
 
 mirroring the reference's driver (/root/reference/src/main.cpp:208-222:
 wprof → wmerge → wfindfirst) with the stage ledger standing in for the
@@ -16,9 +16,11 @@ Scale architecture (the 100 TB story):
 * exact dedup FIRST — near-dup stages run on distinct documents only, so
   boilerplate floods and giant exact-dup cliques never reach the LSH
   shuffle (SURVEY.md §7 "hard parts": cliques collapse to single nodes);
-* sign-before-shuffle — candidates/verify exchange signatures and ids,
-  never documents; worst-case wide-stage row is ~1 KB regardless of
-  conversation length;
+* sign-before-shuffle — candidate generation exchanges signatures and
+  ids, never documents; worst-case wide-stage row is ~1 KB regardless of
+  conversation length.  Verify is the one stage that joins documents,
+  once per pair side, and only for candidate pairs: one Arrow kernel per
+  batch then tokenizes them once and decides every channel (build_verify);
 * candidate pair volume is bounded per bucket (lsh.candidate_pairs_multi
   max_bucket + star edges), so one pathological bucket cannot explode
   the verify stage;
@@ -34,8 +36,6 @@ import posixpath
 from dataclasses import asdict, dataclass
 from functools import reduce
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -44,7 +44,7 @@ from wdedup_spark.operators.cluster import cluster_assignments, incremental_upda
 from wdedup_spark.operators.exact import add_fingerprint
 from wdedup_spark.operators.minhash import add_signatures
 from wdedup_spark.operators.simhash import simhash_chunks
-from wdedup_spark.operators.substring import common_run_udf
+from wdedup_spark.operators.verify import verify_kernel
 from wdedup_spark.sources.ledger import StageLedger
 
 
@@ -53,8 +53,8 @@ from wdedup_spark.sources.ledger import StageLedger
 #: (v2: fingerprint committed by the assemble stage; members stage removed)
 PIPELINE_VERSION = 2
 
-# Fixed tuning constants.  They are not PipelineConfig fields, so
-# cfg.fence() does not cover them: changing one must bump PIPELINE_VERSION.
+# Fixed tuning constants.  They are not PipelineConfig fields; cfg.fence()
+# hashes them with the fields, so changing one fences out old outputs.
 
 #: SimHash channel radius: pairs within this many differing bits of the
 #: 64-bit SimHash are candidates (6-block pigeonhole tables, simhash.py)
@@ -62,9 +62,10 @@ MAX_HAMMING = 3
 #: MinHash channel collision floor: >= 2 of 32 bands kills quadratic
 #: single-band noise at corpus scale; recall at threshold ~0.999998
 MIN_BAND_COLLISIONS = 2
-#: edit candidates keep a wider MinHash-estimate band than the Jaccard
-#: channel's 0.15: token-reorder near-dups (the channel's whole purpose)
-#: have depressed shingle Jaccard, so the reachable band is
+#: the edit channel checks pairs whose exact shingle Jaccard fails the
+#: threshold by at most this much (substring candidates always get the
+#: check): token-reorder near-dups (the channel's whole purpose) have
+#: depressed shingle Jaccard, so the reachable band is
 #: [threshold - EDIT_MARGIN, threshold); pairs below it are unreachable by
 #: design (documented bound, not a bug: a candidate must still collide in
 #: >= MIN_BAND_COLLISIONS LSH bands to be seen at all)
@@ -110,7 +111,11 @@ class PipelineConfig:
     # loses at most 1/sync_ranges of the stage's Python work
 
     def fence(self) -> str:
-        payload = {"v": PIPELINE_VERSION, **asdict(self)}
+        payload = {
+            "v": PIPELINE_VERSION,
+            **asdict(self),
+            "consts": [MAX_HAMMING, MIN_BAND_COLLISIONS, EDIT_MARGIN, SYNC_MIN_ROWS_PER_RANGE],
+        }
         return hashlib.sha256(json.dumps(payload, sort_keys=True).encode()).hexdigest()[:16]
 
 
@@ -240,109 +245,34 @@ def build_candidates(
     )
 
 
-def _sig_agreement_udf(n_perms: int):
-    """MinHash lane-agreement rate of two fixed-width array<long>
-    signature columns, one numpy pass per Arrow batch (r6) — replaces an
-    interpreted ``aggregate(zip_with(...))`` that cost a JVM closure
-    call per LANE per candidate pair.  Value is the identical
-    exact-integer count divided by n_perms."""
-    from pyspark.sql.functions import pandas_udf
+def build_verify(cands: DataFrame, docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
+    """The pipeline's verify stage as a reusable plan builder: ``cands``
+    joined to ``docs`` (conv_id, doc) once per pair side, then ONE
+    ``mapInPandas`` pass of ``verify.verify_kernel`` that tokenizes each
+    batch's documents once and decides the Jaccard, substring and (with
+    ``verify_edit``) edit channels.  Output (conv_a, conv_b, jaccard, via):
+    verified pairs only, ``via`` sorted, ``jaccard`` null unless ``via``
+    contains jaccard."""
 
-    @pandas_udf("double")
-    def _est(a: pd.Series, b: pd.Series) -> pd.Series:
-        if not len(a):
-            return pd.Series([], dtype=np.float64)
-        A = np.stack([np.asarray(x, dtype=np.int64) for x in a])
-        B = np.stack([np.asarray(x, dtype=np.int64) for x in b])
-        return pd.Series((A == B).sum(axis=1) / float(n_perms))
+    def side(s: str) -> DataFrame:
+        return docs.select(F.col("conv_id").alias(f"conv_{s}"), F.col("doc").alias(f"doc_{s}"))
 
-    return _est
-
-
-def build_verify(
-    cands: DataFrame, signed: DataFrame, reps: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """The pipeline's verify stage as a reusable plan builder: JVM
-    MinHash-estimate pre-filter → exact Jaccard UDF; optional edit-channel
-    rescue; substring candidates get the exact common-run check.  ``reps``
-    supplies (conv_id, doc) for the doc-level channels."""
-    both = signed.select(F.col("conv_id").alias("id"), "sig", "shingles")
-    margin = 0.15
-    estimated = (
-        cands.join(
-            both.select(
-                F.col("id").alias("conv_a"),
-                F.col("sig").alias("sig_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "conv_a",
-        )
-        .join(
-            both.select(
-                F.col("id").alias("conv_b"),
-                F.col("sig").alias("sig_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "conv_b",
-        )
-        .withColumn("est", _sig_agreement_udf(cfg.n_perms)(F.col("sig_a"), F.col("sig_b")))
-        .select("conv_a", "conv_b", "via", "est", "sh_a", "sh_b")
+    pairs = (
+        cands.join(side("a"), "conv_a")
+        .join(side("b"), "conv_b")
+        .select("conv_a", "conv_b", "via", "doc_a", "doc_b")
     )
-    from wdedup_spark.operators.verify import jaccard_udf
+    edit_floor = cfg.threshold - EDIT_MARGIN if cfg.verify_edit else None
 
-    jac = (
-        estimated.filter(
-            (F.col("est") >= cfg.threshold - margin)
-            | F.array_contains("via", "substring")
-        )
-        .withColumn("jaccard", jaccard_udf(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= cfg.threshold)
-        .select("conv_a", "conv_b", "jaccard")
-        .withColumn("via", F.lit("jaccard"))
-    )
-    out = jac
-    if cfg.verify_edit:
-        # pairs that failed Jaccard get the edit-distance check
-        # (north_rule "Jaccard/edit-distance checks"): catches
-        # token-reorder-heavy near-dups whose shingle sets diverge.
-        # Candidates come from the WIDER EDIT_MARGIN band — reordered
-        # docs have depressed shingle Jaccard, so the jac channel's
-        # 0.15 margin would filter out exactly the pairs this channel
-        # exists to rescue.
-        from wdedup_spark.operators.verify import edit_similarity_udf
+    def _verify(batches):
+        for pdf in batches:
+            yield verify_kernel(
+                pdf, cfg.k, cfg.threshold, cfg.substring_min_span, edit_floor, cfg.edit_threshold
+            )
 
-        failed = estimated.filter(
-            (F.col("est") >= cfg.threshold - EDIT_MARGIN)
-            | F.array_contains("via", "substring")  # substring-anchored
-            # candidates keep their edit shot regardless of estimate
-            # (long docs with moderate overlap can sit below the band)
-        ).select("conv_a", "conv_b").exceptAll(
-            jac.select("conv_a", "conv_b")
-        )
-        docs = reps.select(F.col("conv_id").alias("id"), "doc")
-        edit_ok = (
-            failed.join(docs.select(F.col("id").alias("conv_a"), F.col("doc").alias("doc_a")), "conv_a")
-            .join(docs.select(F.col("id").alias("conv_b"), F.col("doc").alias("doc_b")), "conv_b")
-            .withColumn("edit_sim", edit_similarity_udf(F.col("doc_a"), F.col("doc_b")))
-            .filter(F.col("edit_sim") >= cfg.edit_threshold)
-            .select("conv_a", "conv_b", F.lit(None).cast("double").alias("jaccard"))
-            .withColumn("via", F.lit("edit"))
-        )
-        out = out.unionByName(edit_ok)
-    if cfg.enable_substring:
-        sub = cands.filter(F.array_contains("via", "substring")).select("conv_a", "conv_b")
-        docs = reps.select(F.col("conv_id").alias("id"), "doc")
-        sub_ok = (
-            sub.join(docs.select(F.col("id").alias("conv_a"), F.col("doc").alias("doc_a")), "conv_a")
-            .join(docs.select(F.col("id").alias("conv_b"), F.col("doc").alias("doc_b")), "conv_b")
-            .withColumn("common_run", common_run_udf(F.col("doc_a"), F.col("doc_b")))
-            .filter(F.col("common_run") >= cfg.substring_min_span)
-            .select("conv_a", "conv_b", F.lit(None).cast("double").alias("jaccard"))
-            .withColumn("via", F.lit("substring"))
-        )
-        out = out.unionByName(sub_ok)
-    return out.groupBy("conv_a", "conv_b").agg(
-        F.max("jaccard").alias("jaccard"), F.sort_array(F.collect_set("via")).alias("via")
+    id_type = cands.schema["conv_a"].dataType.simpleString()
+    return pairs.mapInPandas(
+        _verify, f"conv_a {id_type}, conv_b {id_type}, jaccard double, via array<string>"
     )
 
 
@@ -730,10 +660,9 @@ def _run_stages(
     # with a batch flag: old ids are re-BANDED (one narrow JVM scan of the
     # committed sign tables — no Python, no re-signing) but never
     # re-PAIRED among themselves; verify reads docs along the chain
-    signed_all, flagged, new_col, docs = signed, signed, None, reps
+    flagged, new_col, docs = signed, None, reps
     if base is not None:
         new_col = "is_new"
-        signed_all = base.sign.unionByName(signed)
         flagged = base.sign.withColumn(new_col, F.lit(False)).unionByName(
             signed.withColumn(new_col, F.lit(True))
         )
@@ -745,13 +674,11 @@ def _run_stages(
     if done("candidates"):
         return out
 
-    # -- stage 5: verify (exact Jaccard; substring pairs get exact LCS) -------
-    # JVM-side MinHash-estimate pre-filter: lane-agreement rate is an
-    # unbiased Jaccard estimate; pairs far below threshold die inside
-    # whole-stage codegen before any Python verification.  ONE join per
-    # pair side carries BOTH the signature (estimate) and the shingle set
-    # (exact Jaccard) — see build_verify.
-    verified = ledger.run(spark, "verify", lambda: build_verify(cands, signed_all, docs, cfg))
+    # -- stage 5: verify (every channel decided by one Arrow kernel) ---------
+    # candidates join the documents once per pair side; one mapInPandas
+    # pass tokenizes each batch's documents once and runs exact Jaccard,
+    # the substring common run and the edit check — see build_verify.
+    verified = ledger.run(spark, "verify", lambda: build_verify(cands, docs, cfg))
     out["verified"] = verified
     if done("verify"):
         return out
