@@ -51,16 +51,9 @@ def _fan(df: DataFrame) -> DataFrame:
     """
     spark = df.sparkSession
     dp = spark.sparkContext.defaultParallelism
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes().toString()
-        )
-        max_pb = int(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-            .lower().replace("m", "000000").replace("g", "000000000")
-        )
-    except Exception:  # stats unavailable → assume small (bench tables)
-        size, max_pb = 0, 1
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    # the session's own parse of maxPartitionBytes ("32m" → 33554432)
+    max_pb = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     if size > dp * max_pb:
         return df
     return df.repartition(dp)
@@ -273,8 +266,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )
     return simhash_candidates(
-        docs, "doc", "conv_id", max_hamming=3, k=K,
-        feature="md5", max_bucket=None,
+        docs, "doc", "conv_id", max_hamming=3, k=K, max_bucket=None,
     ).select(
         F.col("conv_a").cast("long").alias("doc_a"),
         F.col("conv_b").cast("long").alias("doc_b"),
@@ -399,7 +391,7 @@ def _hist_udf(col):
 
 
 def q_cosine_highsim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sub-quadratic embedding dedup path (ann.lsh_cosine_pairs),
+    """The sub-quadratic embedding dedup path (ann.lsh_cosine_pairs_sparse),
     driver-visible at a HIGH threshold — the 100-TB configuration, unlike
     embedding_dup_pairs whose 0.45 threshold forces the exact quadratic
     operator.
@@ -851,7 +843,7 @@ def q_decontaminated(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_bench = F.pmod(F.col("doc_id"), F.lit(DECON_MOD)) == 0
     return contaminated(
         _fan(docs.filter(~is_bench)), _fan(docs.filter(is_bench)),
-        "text", "doc_id", n=DECON_N, hashed=True,
+        "text", "doc_id", n=DECON_N,
     ).select(F.col("id").cast("long").alias("doc_id"), "n_hit_grams")
 
 
@@ -943,7 +935,7 @@ def q_embedding_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/ann.exact_cosine_pairs) — a join on block ids + one numpy
     matmul per block-pair tile, never a row-level CartesianProduct.  For
     high-threshold dedup (margin available) the sub-quadratic path is
-    operators/ann.lsh_cosine_pairs."""
+    operators/ann.lsh_cosine_pairs_sparse."""
     from wdedup_spark.operators.ann import exact_cosine_pairs
 
     emb = _fan(_t(spark, sf_dir, "embeddings"))
@@ -989,7 +981,7 @@ def q_media_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("application/octet-stream").alias("mime"),
         ).alias("meta"),
     )
-    feats = extract_features(_fan(assets), hash_algo="md5")
+    feats = extract_features(_fan(assets))
     return exact_media_dups(feats).select(
         F.col("content_hash").cast("long").alias("content_hash"),
         F.col("rep_id").cast("long").alias("rep_id"),
@@ -1105,7 +1097,7 @@ def q_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]),
         )
     return lsh_bucketed_topk(
-        emb, queries, dim=row["d"], k=5, n_bits=8, plane_mode="md5"
+        emb, queries, dim=row["d"], k=5, n_bits=8
     ).select(
         F.col("query_id").cast("long").alias("query_id"),
         F.col("neighbor_id").cast("long").alias("neighbor_id"),

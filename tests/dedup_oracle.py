@@ -1,17 +1,18 @@
 """O(n²) exact pairwise-Jaccard oracle (pandas) — ground truth for recall
-tests (SURVEY.md §5 test plan item 2).  Never used by the engine itself."""
+tests (SURVEY.md §5 test plan item 2) — and the union-find closure
+oracle for the cluster stage.  Never used by the engine itself."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from wdedup_spark.functions import hashing
+from hashing_oracle import TokenHasher, shingle_hashes
 
 
 def shingle_sets(docs: pd.Series, k: int) -> list[np.ndarray]:
-    th = hashing.TokenHasher()
-    return [hashing.shingle_hashes(th.hash_tokens(t.split()), k) for t in docs]
+    th = TokenHasher()
+    return [shingle_hashes(th.hash_tokens(t.split()), k) for t in docs]
 
 
 def all_pairs_jaccard(ids: pd.Series, docs: pd.Series, k: int, threshold: float) -> pd.DataFrame:

@@ -9,8 +9,9 @@ from wdedup_spark.operators.ann import (
     brute_force_topk,
     exact_cosine_pairs,
     lsh_bucketed_topk,
-    lsh_cosine_pairs,
 )
+
+from ann_oracle import lsh_cosine_pairs
 
 DIM = 16
 
@@ -124,38 +125,40 @@ def test_lsh_bucketed_recall(spark, emb):
     by_q = {}
     for r in approx.collect():
         by_q.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    # multi-probe LSH over clustered data: recall@5 well above random
+    # multi-probe LSH over md5 planes on clustered data: recall@5 well
+    # above random — the SQL-expressible planes must not cost the
+    # operator its accuracy
     hits = sum(len(by_q.get(q, set()) & set(want[q])) for q in range(20))
     assert hits / (20 * 5) >= 0.6, f"LSH recall {hits / 100}"
 
 
 def test_lsh_bucketed_recall_md5_planes(spark, emb):
-    """The oracle-checkable plane mode (VERDICT r4 #1): md5-derived ±1
-    Rademacher planes must (a) be deterministic/seedless and (b) keep
-    multi-probe recall in the same regime as the Gaussian planes — the
-    SQL-expressibility must not cost the operator its accuracy."""
-    import numpy as np
+    """The oracle-checkable planes (VERDICT r4 #1): md5-derived ±1
+    Rademacher planes must be deterministic/seedless and follow the
+    documented rule, and ``hyperplane_signature`` must pack exactly
+    their sign bits — the bucketing the DuckDB oracle rebuilds."""
+    import hashlib
 
-    from wdedup_spark.operators.ann import md5_planes
+    from wdedup_spark.operators.ann import hyperplane_signature, md5_planes
 
     w = md5_planes(16, 4)
     assert np.array_equal(w, md5_planes(16, 4))  # deterministic
     assert set(np.unique(w)) == {-1.0, 1.0}
     # first entry pinned to the documented rule: md5('0:0') nibble parity
-    import hashlib
-
     nib = int(hashlib.md5(b"0:0").hexdigest()[0], 16)
     assert w[0, 0] == (1.0 if nib % 2 == 1 else -1.0)
 
     df, mat = emb
-    queries = df.filter("vec_id < 20")
-    approx = lsh_bucketed_topk(df, queries, dim=DIM, k=5, n_bits=8, plane_mode="md5")
-    want = _numpy_topk(mat, range(20), 5)
-    by_q = {}
-    for r in approx.collect():
-        by_q.setdefault(r["query_id"], set()).add(r["neighbor_id"])
-    hits = sum(len(by_q.get(q, set()) & set(want[q])) for q in range(20))
-    assert hits / (20 * 5) >= 0.6, f"md5-plane LSH recall {hits / 100}"
+    got = {
+        r["vec_id"]: r["ann_bucket"]
+        for r in hyperplane_signature(
+            df.selectExpr("vec_id", "transform(embedding, x -> cast(x as double)) AS v"),
+            "v", DIM, 8,
+        ).collect()
+    }
+    bits = (mat @ md5_planes(DIM, 8)) > 0
+    want = (bits * (1 << np.arange(8))).sum(axis=1)
+    assert got == {i: int(want[i]) for i in range(len(mat))}
 
 
 def test_ivf_topk_recall_and_exact_degradation(spark, emb):

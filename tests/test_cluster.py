@@ -2,7 +2,8 @@
 
 import pandas as pd
 
-from wdedup_spark import oracle
+import dedup_oracle as oracle
+import wdedup_spark.operators.cluster as cl
 from wdedup_spark.operators.cluster import cluster_assignments, connected_components
 
 
@@ -14,26 +15,22 @@ import pytest
 
 
 @pytest.mark.parametrize("small_thresh", [2_000_000, 0], ids=["driver-uf", "distributed"])
-def test_cc_basic_chain(spark, small_thresh):
+def test_cc_basic_chain(spark, small_thresh, monkeypatch):
     # chain a-b-c-d plus isolated pair e-f — both execution strategies
+    monkeypatch.setattr(cl, "SMALL_GRAPH_EDGES", small_thresh)
     edges = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d"), ("e", "f")])
-    got = {
-        r["conv_id"]: r["cluster_id"]
-        for r in connected_components(edges, small_graph_edges=small_thresh).collect()
-    }
+    got = {r["conv_id"]: r["cluster_id"] for r in connected_components(edges).collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "d": "a", "e": "e", "f": "e"}
 
 
 @pytest.mark.parametrize("small_thresh", [2_000_000, 0], ids=["driver-uf", "distributed"])
-def test_cc_long_path_converges(spark, small_thresh):
+def test_cc_long_path_converges(spark, small_thresh, monkeypatch):
     # path of 33 nodes — needs multiple hash-to-min iterations
+    monkeypatch.setattr(cl, "SMALL_GRAPH_EDGES", small_thresh)
     n = 33
     nodes = [f"n{i:03d}" for i in range(n)]
     edges = _edges(spark, list(zip(nodes[:-1], nodes[1:])))
-    got = {
-        r["conv_id"]: r["cluster_id"]
-        for r in connected_components(edges, small_graph_edges=small_thresh).collect()
-    }
+    got = {r["conv_id"]: r["cluster_id"] for r in connected_components(edges).collect()}
     assert set(got.values()) == {"n000"}
     assert len(got) == n
 
@@ -41,13 +38,12 @@ def test_cc_long_path_converges(spark, small_thresh):
 def test_cc_raises_when_rounds_run_out(spark, monkeypatch):
     """The distributed loop fails loudly instead of returning labels that
     have not converged: the 33-node path needs more than one round."""
-    import wdedup_spark.operators.cluster as cl
-
     monkeypatch.setattr(cl, "MAX_ROUNDS", 1)
+    monkeypatch.setattr(cl, "SMALL_GRAPH_EDGES", 0)
     nodes = [f"n{i:03d}" for i in range(33)]
     edges = _edges(spark, list(zip(nodes[:-1], nodes[1:])))
     with pytest.raises(RuntimeError, match="did not converge"):
-        cl.connected_components(edges, small_graph_edges=0)
+        cl.connected_components(edges)
 
 
 def test_cluster_assignments_singletons(spark):
@@ -75,13 +71,11 @@ def test_cc_matches_union_find_oracle(spark):
     assert got == want
 
 
-def test_cc_distributed_with_reliable_checkpoint(spark, tmp_path):
+def test_cc_distributed_with_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """With a checkpoint dir configured, the distributed path must use
     reliable checkpoint() (executor-loss tolerant on a real cluster) and
     produce identical components."""
     import numpy as np
-
-    from wdedup_spark.operators import cluster as cl
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
@@ -91,15 +85,10 @@ def test_cc_distributed_with_reliable_checkpoint(spark, tmp_path):
             (int(rng.integers(100, 160)), int(rng.integers(100, 160))) for _ in range(40)
         ]
         edges = spark.createDataFrame(edges_py, "conv_a long, conv_b long")
-        got = {
-            r["conv_id"]: r["cluster_id"]
-            for r in cl.connected_components(edges, small_graph_edges=0).collect()
-        }
         # oracle: driver union-find over the same edges
-        want = {
-            r["conv_id"]: r["cluster_id"]
-            for r in cl.connected_components(edges, small_graph_edges=10**9).collect()
-        }
+        want = {r["conv_id"]: r["cluster_id"] for r in cl.connected_components(edges).collect()}
+        monkeypatch.setattr(cl, "SMALL_GRAPH_EDGES", 0)
+        got = {r["conv_id"]: r["cluster_id"] for r in cl.connected_components(edges).collect()}
         assert got == want
         # the reliable path really engaged (checkpoint dir is non-empty)
         import os

@@ -9,7 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wdedup_spark.operators.decontaminate import contaminated, ngram_array
+from wdedup_spark.operators.decontaminate import contaminated
+
+from ngram_oracle import ngram_array, string_gram_hits
 
 
 def _df(spark, rows, cols=("doc_id", "text")):
@@ -99,12 +101,10 @@ def test_shuffle_fallback_matches_broadcast(spark):
 
 def test_hashed_grams_no_structural_collision(spark):
     """The affine poly constants collide 'a b b a' with 'b a a b' at k=4
-    (equal Σh and Σ j·h).  The hashed decontamination path must use the
-    mixed constants, which keep the two grams distinct — a bench doc
+    (equal Σh and Σ j·h).  The hashed gram identity must use the mixed
+    constants, which keep the two grams distinct — a bench doc
     containing only one of the pair must not flag a train doc containing
     only the other (caught by the r6 sf0.1 oracle sweep)."""
-    from wdedup_spark.operators.decontaminate import contaminated
-
     train = spark.createDataFrame(
         [(1, "group window window group"), (2, "window group group window x")],
         "doc_id long, text string",
@@ -114,13 +114,9 @@ def test_hashed_grams_no_structural_collision(spark):
     )
     got = {
         r["id"]: r["n_hit_grams"]
-        for r in contaminated(train, bench, n=4, hashed=True).collect()
+        for r in contaminated(train, bench, n=4).collect()
     }
     # doc 1 is the reversal-symmetric partner — NOT contaminated
     assert got == {2: 1}
-    # and the hashed path agrees with the exact string path
-    exact = {
-        r["id"]: r["n_hit_grams"]
-        for r in contaminated(train, bench, n=4, hashed=False).collect()
-    }
-    assert got == exact
+    # and the hashed grams agree with the exact string grams
+    assert got == string_gram_hits(train, bench, "text", "doc_id", 4)

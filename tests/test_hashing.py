@@ -6,6 +6,7 @@ import numpy as np
 
 from wdedup_spark.functions import hashing
 
+from hashing_oracle import TokenHasher, shingle_hashes, simhash, winnow
 from minhash_oracle import minhash_signature
 
 
@@ -15,14 +16,14 @@ def test_token_hash_deterministic():
 
 
 def test_token_hasher_memo_matches_direct():
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     toks = ["a", "b", "a", "c", "a"]
     h = th.hash_tokens(toks)
     assert h[0] == h[2] == h[4] == hashing.token_hash("a")
 
 
 def test_shingle_hashes_window_semantics():
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     h = th.hash_tokens(["a", "b", "c", "d"])
     seq = hashing.shingle_hashes_seq(h, 3)
     assert len(seq) == 2  # abc, bcd
@@ -37,8 +38,8 @@ def test_shingle_hashes_window_semantics():
 
 def test_minhash_identical_sets_identical_sigs():
     a, b = hashing.minhash_params(64, 42)
-    th = hashing.TokenHasher()
-    s1 = hashing.shingle_hashes(th.hash_tokens("the quick brown fox jumps".split()), 3)
+    th = TokenHasher()
+    s1 = shingle_hashes(th.hash_tokens("the quick brown fox jumps".split()), 3)
     sig1 = minhash_signature(s1, a, b)
     sig2 = minhash_signature(s1.copy(), a, b)
     assert (sig1 == sig2).all()
@@ -61,17 +62,17 @@ def test_minhash_similarity_estimate():
 
 
 def test_simhash_near_texts_near_hamming():
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     t1 = ("w%d " % i for i in range(300))
     base = list("tok%d" % i for i in range(300))
-    h1 = hashing.simhash(th.hash_tokens(base))
+    h1 = simhash(th.hash_tokens(base))
     edited = base.copy()
     edited[5] = "CHANGED"
-    h2 = hashing.simhash(th.hash_tokens(edited))
+    h2 = simhash(th.hash_tokens(edited))
     ham = bin(h1 ^ h2).count("1")
     assert ham <= 12
     unrelated = ["z%d" % i for i in range(300)]
-    h3 = hashing.simhash(th.hash_tokens(unrelated))
+    h3 = simhash(th.hash_tokens(unrelated))
     assert bin(h1 ^ h3).count("1") > 15
 
 
@@ -86,9 +87,7 @@ def test_to_i64_roundtrip():
 
 def test_winnow_guarantee():
     """Docs sharing a span >= w+k-1 tokens share >= 1 fingerprint."""
-    from wdedup_spark.operators.substring import winnow
-
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     shared = ["s%d" % i for i in range(63)]  # exactly w+k-1 = 63
     d1 = ["a%d" % i for i in range(100)] + shared + ["b%d" % i for i in range(50)]
     d2 = ["c%d" % i for i in range(37)] + shared + ["d%d" % i for i in range(80)]

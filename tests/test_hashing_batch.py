@@ -1,6 +1,7 @@
 """Parity: the r6 whole-batch vectorized kernels must be bit-identical to
-the per-doc reference kernels on every edge shape (empty docs, docs
-shorter than k, duplicate-heavy docs, long docs)."""
+the per-doc reference kernels (tests/hashing_oracle.py) on every edge
+shape (empty docs, docs shorter than k, duplicate-heavy docs, long
+docs)."""
 
 from __future__ import annotations
 
@@ -8,8 +9,9 @@ import numpy as np
 import pytest
 
 from wdedup_spark.functions import hashing
-from wdedup_spark.operators.substring import winnow, winnow_from_grams
+from wdedup_spark.operators.substring import winnow_from_grams
 
+from hashing_oracle import TokenHasher, shingle_hashes, simhash, winnow
 from minhash_oracle import minhash_signature
 
 K = 3
@@ -37,7 +39,7 @@ def _docs():
 def test_split_hash_batch_matches_tokenhasher():
     docs = _docs()
     flat, off = hashing.split_hash_batch(docs)
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     for i, d in enumerate(docs):
         ref = th.hash_tokens(d.split() if d else [])
         np.testing.assert_array_equal(flat[off[i]:off[i + 1]], ref)
@@ -48,7 +50,7 @@ def test_batch_shingle_seq_matches(k):
     docs = _docs()
     flat, off = hashing.split_hash_batch(docs)
     grams, go = hashing.batch_shingle_seq(flat, off, k)
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     for i, d in enumerate(docs):
         ref = hashing.shingle_hashes_seq(th.hash_tokens(d.split() if d else []), k)
         np.testing.assert_array_equal(grams[go[i]:go[i + 1]], ref)
@@ -59,9 +61,9 @@ def test_batch_unique_sets_matches():
     flat, off = hashing.split_hash_batch(docs)
     grams, go = hashing.batch_shingle_seq(flat, off, K)
     sets, so = hashing.batch_unique_sets(grams, go)
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     for i, d in enumerate(docs):
-        ref = hashing.shingle_hashes(th.hash_tokens(d.split() if d else []), K)
+        ref = shingle_hashes(th.hash_tokens(d.split() if d else []), K)
         np.testing.assert_array_equal(sets[so[i]:so[i + 1]], ref)
 
 
@@ -72,9 +74,9 @@ def test_batch_minhash_matches():
     grams, go = hashing.batch_shingle_seq(flat, off, K)
     sets, so = hashing.batch_unique_sets(grams, go)
     sigs = hashing.batch_minhash(sets, so, a, b)
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     for i, d in enumerate(docs):
-        sset = hashing.shingle_hashes(th.hash_tokens(d.split() if d else []), K)
+        sset = shingle_hashes(th.hash_tokens(d.split() if d else []), K)
         np.testing.assert_array_equal(sigs[i], minhash_signature(sset, a, b))
 
 
@@ -90,15 +92,15 @@ def test_batch_simhash_matches():
     flat, off = hashing.split_hash_batch(docs)
     grams, go = hashing.batch_shingle_seq(flat, off, K)
     sims = hashing.batch_simhash(grams, go)
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     for i, d in enumerate(docs):
         seq = hashing.shingle_hashes_seq(th.hash_tokens(d.split() if d else []), K)
-        assert int(sims[i]) == hashing.simhash(seq)
+        assert int(sims[i]) == simhash(seq)
 
 
 def test_winnow_from_grams_matches_winnow():
     docs = _docs()
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     for d in docs:
         h = th.hash_tokens(d.split() if d else [])
         ref = winnow(h, 16, 48)

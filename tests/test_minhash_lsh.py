@@ -5,7 +5,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from wdedup_spark import oracle
+import dedup_oracle as oracle
 from wdedup_spark.operators.assemble import assemble_conversations
 from wdedup_spark.operators.lsh import minhash_lsh_candidates
 from wdedup_spark.operators.minhash import add_signatures

@@ -7,7 +7,8 @@ import shutil
 import pandas as pd
 import pytest
 
-from wdedup_spark import oracle, synth
+import dedup_oracle as oracle
+from wdedup_spark import synth
 from wdedup_spark.plans.pipeline import PipelineConfig, run_pipeline
 
 CFG = PipelineConfig()

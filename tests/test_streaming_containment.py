@@ -111,7 +111,7 @@ def _signed(df):
     ).select("conv_id", "shingles")
 
 
-def test_freq_order_keeps_hot_token_out_of_prefixes(spark):
+def test_freq_order_keeps_hot_token_out_of_prefixes(spark, monkeypatch):
     """VERDICT r4 #3: under the broadcast frequency order, a planted hot
     token must never enter a prefix posting.  The fixture plants a hot
     token that SORTS FIRST ('AAA...' before every 'r...' rare token) —
@@ -119,8 +119,11 @@ def test_freq_order_keeps_hot_token_out_of_prefixes(spark):
     hot = "AAA HOT AAA"
     rows = [(f"d{i}", [hot] + [f"r{i}_{j}" for j in range(30)]) for i in range(20)]
     signed = spark.createDataFrame(rows, "conv_id string, shingles array<string>")
-    idx_val = containment_index(signed, T, freq_top=0)  # value order
+    import wdedup_spark.streaming.containment_stream as cs
+
     idx_freq = containment_index(signed, T)             # freq order
+    monkeypatch.setattr(cs, "FREQ_TOP", 0)
+    idx_val = containment_index(signed, T)              # value order
     assert idx_freq.freqs == {hot: 20}  # only df>=2 tokens enter the map
     n_val = idx_val.postings.filter(
         (idx_val.postings.side == "prefix") & (idx_val.postings.tk == hot)

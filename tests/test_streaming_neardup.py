@@ -167,3 +167,38 @@ def test_stream_neardup_from_pipeline_workdir(spark, tmp_path):
     assert got.get(("new-exact", "conv-b")) == 1.0
     assert got.get(("new-near", "conv-a"), 0.0) >= 0.65
     assert not any(cid == "new-novel" for cid, _ in got)
+
+
+def test_probe_bands_like_the_index(spark):
+    """The probe is ``band_buckets`` with the signature passed through:
+    one row per (id, band), its bucket equal to the index's — and equal to
+    xxhash64 over the band's signature SLICE, the value a hand-built
+    struct-array banding would compute."""
+    from wdedup_spark.operators.lsh import band_buckets
+
+    n_perms, n_bands = 16, 4
+    rows = n_perms // n_bands
+    signed = spark.createDataFrame(
+        [(f"c{i}", [i * 1000 + j for j in range(n_perms)]) for i in range(3)],
+        "conv_id string, sig array<long>",
+    )
+    plain = band_buckets(signed, n_perms, n_bands=n_bands)
+    carried = band_buckets(signed, n_perms, n_bands=n_bands, passthrough=["sig"])
+    assert carried.columns == ["band", "bucket", "id", "sig"]
+    got = {(r["id"], r["band"]): (r["bucket"], list(r["sig"])) for r in carried.collect()}
+    assert {k: v[0] for k, v in got.items()} == {
+        (r["id"], r["band"]): r["bucket"] for r in plain.collect()
+    }
+    sliced = signed.select(
+        "conv_id",
+        "sig",
+        F.posexplode(
+            F.array(*[
+                F.xxhash64(F.lit(b), F.slice("sig", b * rows + 1, rows))
+                for b in range(n_bands)
+            ])
+        ).alias("band", "bucket"),
+    ).collect()
+    assert len(got) == len(sliced) == 3 * n_bands
+    for r in sliced:
+        assert got[(r["conv_id"], r["band"])] == (r["bucket"], list(r["sig"]))

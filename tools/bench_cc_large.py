@@ -7,7 +7,7 @@ needs O(diameter)=1000 rounds); pointer jumping must converge in
 ~log2(1000) ~= 10.  Full-result correctness is asserted, not sampled:
 every node's cluster must equal its segment head.
 
-Usage: python tools/bench_cc_large.py [n_nodes] [seg_len]
+Usage: SPARK_GRAFT_CPUS=<cores> python tools/bench_cc_large.py [n_nodes] [seg_len]
 Prints one JSON line for BENCH.md.
 """
 import json
@@ -27,7 +27,9 @@ from wdedup_spark.session import spark_session
 def main() -> None:
     n_nodes = int(sys.argv[1]) if len(sys.argv) > 1 else 6_000_000
     seg = int(sys.argv[2]) if len(sys.argv) > 2 else 1000
-    spark = spark_session(app_name="cc-large", master="local[32]")
+    # session default: local[$SPARK_GRAFT_CPUS], so small hosts are not
+    # oversubscribed
+    spark = spark_session(app_name="cc-large")
     spark.sparkContext.setLogLevel("ERROR")
     ckpt = tempfile.mkdtemp(prefix="cc-ckpt-")
     spark.sparkContext.setCheckpointDir(ckpt)

@@ -7,9 +7,13 @@ downstream math is numpy ``uint64`` with C wrap-around semantics.  blake2b
 is keyed-seedable, stable across processes/platforms (unlike Python's
 ``hash``), and implemented in C.
 
-Everything here is batch-vectorized: one call processes a whole Arrow
-batch; the per-batch token memo exploits Zipfian token distributions
-(the hot tokens hash once per batch, not once per occurrence).
+The kernels work on whole Arrow batches: ``split_hash_batch`` tokenizes
+and hashes a batch in one pass (blake2b once per distinct token), and
+the ``batch_*`` kernels shingle and sign every document of it in a
+handful of numpy passes.  ``shingle_hashes_seq`` is the one per-document
+kernel the engine keeps: the common-run verifier seeds on the grams of a
+single candidate pair.  The per-document references the batch kernels
+are tested against live in tests/hashing_oracle.py.
 """
 
 from __future__ import annotations
@@ -26,27 +30,9 @@ _C3 = np.uint64(0x94D049BB133111EB)
 U64 = np.uint64
 
 
-def token_hash(tok: str, _memo: dict | None = None) -> int:
+def token_hash(tok: str) -> int:
     """Stable 64-bit hash of one token."""
     return int.from_bytes(blake2b(tok.encode("utf-8"), digest_size=8).digest(), "little")
-
-
-class TokenHasher:
-    """Batch-scoped memoizing token hasher."""
-
-    def __init__(self) -> None:
-        self._memo: dict[str, int] = {}
-
-    def hash_tokens(self, tokens: list[str]) -> np.ndarray:
-        memo = self._memo
-        out = np.empty(len(tokens), dtype=np.uint64)
-        for i, t in enumerate(tokens):
-            h = memo.get(t)
-            if h is None:
-                h = token_hash(t)
-                memo[t] = h
-            out[i] = h
-        return out
 
 
 def shingle_hashes_seq(token_h: np.ndarray, k: int) -> np.ndarray:
@@ -61,19 +47,12 @@ def shingle_hashes_seq(token_h: np.ndarray, k: int) -> np.ndarray:
         return np.empty(0, dtype=np.uint64)
     if n < k:
         k = n
-    consts = (_C1 * (np.arange(1, k + 1, dtype=np.uint64) * _C2 + _C3)) | U64(1)
+    consts = _poly_consts(k)
     m = n - k + 1
     acc = np.zeros(m, dtype=np.uint64)
     for j in range(k):  # k is small (3-16); loop over window offset, vector over positions
         acc += token_h[j : j + m] * consts[j]
-    acc *= _C1
-    acc ^= acc >> U64(31)
-    return acc
-
-
-def shingle_hashes(token_h: np.ndarray, k: int) -> np.ndarray:
-    """Distinct k-shingle hashes (the shingle *set* for Jaccard/MinHash)."""
-    return np.unique(shingle_hashes_seq(token_h, k))
+    return _finalize(acc)
 
 
 def minhash_params(n_perms: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -89,33 +68,14 @@ def minhash_params(n_perms: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-_BIT_SHIFTS = np.arange(64, dtype=np.uint64)
-
-
-def simhash(token_h: np.ndarray, weights: np.ndarray | None = None) -> int:
-    """64-bit SimHash: weighted bitwise majority of token hashes
-    (Charikar 2002).  Returns a Python int in [0, 2^64)."""
-    if len(token_h) == 0:
-        return 0
-    vals, counts = np.unique(token_h, return_counts=True)
-    w = counts.astype(np.int64) if weights is None else weights
-    bits = ((vals[:, None] >> _BIT_SHIFTS[None, :]) & U64(1)).astype(np.int64)
-    v = (bits * w[:, None]).sum(axis=0) * 2 - w.sum()
-    sig = np.uint64(0)
-    for i in range(64):
-        if v[i] > 0:
-            sig |= U64(1) << U64(i)
-    return int(sig)
-
-
 # ---------------------------------------------------------------------------
-# Batch (whole-Arrow-batch) kernels — round 6 (guide §4.2): the per-doc
-# Python loops above cost ~30-50 µs of interpreter overhead per document,
-# which dominates the sign stage once the corpus is large.  These kernels
+# Batch (whole-Arrow-batch) kernels — round 6 (guide §4.2): a per-document
+# Python loop costs ~30-50 µs of interpreter overhead per document, which
+# dominates the sign stage once the corpus is large.  These kernels
 # process ALL documents of a batch in a handful of numpy passes over
-# flattened ragged arrays; outputs are bit-identical to the per-doc
-# kernels (same token_hash, same polynomial combination, same minhash
-# params), verified by tests/test_hashing_batch.py.
+# flattened ragged arrays; outputs are bit-identical to the per-document
+# references in tests/hashing_oracle.py (same token_hash, same polynomial
+# combination, same minhash params), verified by tests/test_hashing_batch.py.
 # ---------------------------------------------------------------------------
 
 
@@ -298,14 +258,15 @@ def batch_minhash(
     return out
 
 
+_BIT_SHIFTS = np.arange(64, dtype=np.uint64)
 _SIMHASH_WEIGHTS = U64(1) << _BIT_SHIFTS
 
 
 def batch_simhash(grams_flat: np.ndarray, gram_offsets: np.ndarray) -> np.ndarray:
-    """SimHash for every doc from its ALL-occurrence gram hashes.
-    Identical to ``simhash`` (unique+counts weighting == summing bits over
-    occurrences).  Returns an int64-viewable uint64 vector (0 for empty
-    docs)."""
+    """SimHash for every doc from its ALL-occurrence gram hashes: the
+    bitwise majority over every occurrence (the count-weighted majority
+    over distinct grams).  Returns an int64-viewable uint64 vector (0 for
+    empty docs)."""
     n_docs = len(gram_offsets) - 1
     out = np.zeros(n_docs, dtype=np.uint64)
     counts = np.diff(gram_offsets)

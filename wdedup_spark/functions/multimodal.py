@@ -21,7 +21,7 @@ sign-before-shuffle shape as MinHash over text).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from hashlib import blake2b
+from hashlib import blake2b, md5
 
 import numpy as np
 import pandas as pd
@@ -78,23 +78,16 @@ def _feature_from_bytes(content: bytes) -> np.ndarray:
     return v / np.linalg.norm(v)
 
 
-def _content_hash(content: bytes, algo: str) -> int:
-    """Signed-i64 content hash.  algo="md5" takes the first 8 md5 digest
-    bytes big-endian (reinterpreted signed) — bit-identical to DuckDB's
+def _content_hash(content: bytes) -> int:
+    """Signed-i64 content hash: the first 8 md5 digest bytes big-endian
+    (reinterpreted signed) — bit-identical to DuckDB's
     ('0x' || substr(md5(s),1,16))::UBIGINT, so media dedup is
-    oracle-checkable; "blake2" is the keyed-seedable default."""
-    if algo == "md5":
-        from hashlib import md5
-
-        u = int.from_bytes(md5(content).digest()[:8], "big")
-        return u - (1 << 64) if u >= (1 << 63) else u
-    return (
-        int.from_bytes(blake2b(content, digest_size=8).digest(), "little", signed=False)
-        - (1 << 63)
-    )
+    oracle-checkable."""
+    u = int.from_bytes(md5(content).digest()[:8], "big")
+    return u - (1 << 64) if u >= (1 << 63) else u
 
 
-def extract_features(assets: DataFrame, batch_hint: int = 1024, hash_algo: str = "blake2") -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """mapInPandas feature extraction: assets(ASSET_SCHEMA) →
     FEATURE_SCHEMA.  Streams Arrow batches; never materializes a whole
     partition."""
@@ -102,7 +95,7 @@ def extract_features(assets: DataFrame, batch_hint: int = 1024, hash_algo: str =
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = [_feature_from_bytes(bytes(c)) for c in pdf["content"]]
-            hashes = [_content_hash(bytes(c), hash_algo) for c in pdf["content"]]
+            hashes = [_content_hash(bytes(c)) for c in pdf["content"]]
             yield pd.DataFrame(
                 {
                     "asset_id": pdf["asset_id"],

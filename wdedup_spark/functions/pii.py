@@ -42,12 +42,11 @@ def _col(text: Column | str) -> Column:
     return F.col(text) if isinstance(text, str) else text
 
 
-def redact(text: Column | str,
-           patterns: dict[str, str] | None = None) -> Column:
+def redact(text: Column | str) -> Column:
     """Replace every PII match with ``<NAME>`` (e.g. ``<EMAIL>``), in
-    pattern order.  One fused chain of regexp_replace calls."""
+    ``PII_PATTERNS`` order.  One fused chain of regexp_replace calls."""
     c = _col(text)
-    for name, pat in (patterns or PII_PATTERNS).items():
+    for name, pat in PII_PATTERNS.items():
         c = F.regexp_replace(c, pat, f"<{name.upper()}>")
     return c
 
@@ -58,9 +57,7 @@ def pii_count(text: Column | str, pattern: str) -> Column:
     return F.size(F.regexp_extract_all(_col(text), F.lit(pattern), F.lit(0)))
 
 
-def pii_counts(text: Column | str,
-               patterns: dict[str, str] | None = None) -> dict[str, Column]:
-    """Per-type match-count Columns, e.g. for a select/agg over the
-    corpus before deciding to redact vs drop."""
-    return {name: pii_count(text, pat)
-            for name, pat in (patterns or PII_PATTERNS).items()}
+def pii_counts(text: Column | str) -> dict[str, Column]:
+    """Per-type match-count Columns (one per ``PII_PATTERNS`` entry), e.g.
+    for a select/agg over the corpus before deciding to redact vs drop."""
+    return {name: pii_count(text, pat) for name, pat in PII_PATTERNS.items()}

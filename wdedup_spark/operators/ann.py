@@ -1,18 +1,25 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search and near-dup pairs over embedding columns
+(array<float>).
 
-Two strategies, same result contract:
+Top-k search, one ranked contract (``topk.grouped_topk``) over three
+candidate strategies:
 
-* ``brute_force_topk`` — exact cosine top-k: queries (a small set)
-  broadcast against the corpus, score JVM-side via ``F.zip_with`` +
-  ``F.aggregate`` (whole-stage codegen — no Python), top-k per query via a
-  window rank over (score desc, vec_id).  This is the baseline: one
-  broadcast, one narrow map, one shuffle of k rows per query.
+* ``brute_force_topk`` — exact cosine top-k: the query matrix rides in
+  the kernel closure and each corpus batch is scored with one numpy GEMM,
+  emitting only rows that can still make the top k.
 
-* ``lsh_bucketed_topk`` — the scale path: random-hyperplane (sign) LSH
-  buckets shrink the scored corpus per query; exact cosine re-rank within
-  the union of the query's buckets.  Recall < 1 by construction; bucket
-  count/width trade recall for cost.  At 100 TB this is the difference
-  between scanning the corpus per query and scanning ~corpus/2^bits.
+* ``lsh_bucketed_topk`` — random-hyperplane (sign) LSH buckets shrink the
+  scored corpus per query; exact cosine re-rank within the union of the
+  query's buckets.  Recall < 1 by construction; bucket width trades
+  recall for cost.  At 100 TB this is the difference between scanning
+  the corpus per query and scanning ~corpus/2^bits.
+
+* ``ivf_topk`` — coarse-quantizer (IVF) lists trained by distributed
+  Lloyd rounds; each query re-ranks only its probed lists.
+
+All-pairs near-dups: ``exact_cosine_pairs`` (blocked GEMM, any
+threshold) and ``lsh_cosine_pairs_sparse`` (hyperplane LSH over sparse
+vectors, high thresholds).
 
 Embeddings are cast to double before arithmetic: deterministic, and
 matches the DuckDB oracle's double-precision math.
@@ -24,9 +31,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from wdedup_spark.operators.topk import grouped_topk
+
+#: seed of ``lsh_cosine_pairs_sparse``'s Gaussian plane block
+PLANE_SEED = 42
 
 
 def _cosine(a, b):
@@ -56,6 +65,16 @@ def _dot_udf():
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _ranked(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score) rows, one per pair → the top-k
+    contract every search here returns: rank by (score desc, neighbor_id
+    asc), score rounded to 9 places."""
+    return grouped_topk(
+        scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")],
+        k, rank_col="rank",
+    ).select("query_id", "neighbor_id", F.round("score", 9).alias("score"), "rank")
 
 
 def brute_force_topk(
@@ -122,12 +141,7 @@ def brute_force_topk(
     scored = corpus.select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cvec")
     ).mapInPandas(_score, out_schema)
-    # one ranked-top-k contract repo-wide (operators/topk.py): same
-    # window + row_number + filter this function used to hand-roll
-    return grouped_topk(
-        scored, ["query_id"], [F.desc("score"), F.asc("neighbor_id")],
-        k, rank_col="rank",
-    ).select("query_id", "neighbor_id", F.round("score", 9).alias("score"), "rank")
+    return _ranked(scored, k)
 
 
 def exact_cosine_pairs(
@@ -166,7 +180,8 @@ def exact_cosine_pairs(
       GEMM work amortizes the ~ms task overhead.
 
     For thresholds with a real margin (true near-dup dedup at t >= 0.8),
-    prefer ``lsh_cosine_pairs`` — sub-quadratic with a quantified recall.
+    prefer ``lsh_cosine_pairs_sparse`` — sub-quadratic with a quantified
+    recall.
     Raw cosine is returned unrounded; callers round/filter JVM-side so
     engine/oracle rounding semantics stay in one place.
     """
@@ -250,8 +265,8 @@ def md5_planes(dim: int, n_bits: int) -> np.ndarray:
     first hex nibble of ``md5('<d>:<b>')`` is odd).  Sign-LSH with
     Rademacher entries is a valid cosine LSH family (the same
     concentration argument as Gaussian planes, cf. Achlioptas'
-    database-friendly random projections), so recall behavior matches the
-    seeded path's up to constants."""
+    database-friendly random projections), so recall behaves like
+    Gaussian planes' up to constants."""
     import hashlib
 
     w = np.empty((dim, n_bits))
@@ -267,22 +282,15 @@ def hyperplane_signature(
     vec_col: str,
     dim: int,
     n_bits: int = 16,
-    seed: int = 42,
-    plane_mode: str = "seeded",
 ) -> DataFrame:
-    """Random-hyperplane LSH signature (sign bits packed into a long),
-    computed with a vectorized pandas UDF (numpy matmul per Arrow batch).
-
-    ``plane_mode``: "seeded" (numpy Gaussian, default) or "md5"
-    (hash-derived ±1 entries — SQL-mirrorable, see ``md5_planes``)."""
+    """Random-hyperplane LSH signature (sign bits packed into a long) over
+    the ``md5_planes`` — SQL-mirrorable, so the bucketing is
+    oracle-checkable — computed with a vectorized pandas UDF (numpy
+    matmul per Arrow batch)."""
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import LongType
 
-    if plane_mode == "md5":
-        planes = md5_planes(dim, n_bits)
-    else:
-        rng = np.random.default_rng(seed)
-        planes = rng.standard_normal((dim, n_bits))
+    planes = md5_planes(dim, n_bits)
 
     @pandas_udf(LongType())
     def _sig(vecs: pd.Series) -> pd.Series:
@@ -294,81 +302,6 @@ def hyperplane_signature(
     return df.withColumn("ann_bucket", _sig(F.col(vec_col)))
 
 
-def lsh_cosine_pairs(
-    df: DataFrame,
-    threshold: float,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = 10,
-    n_tables: int = 16,
-    seed: int = 42,
-    max_bucket: int | None = 4096,
-    min_collisions: int = 1,
-) -> DataFrame:
-    """Embedding near-dup pairs (cosine >= threshold) sub-quadratically:
-    random-hyperplane LSH tables → within-bucket pairs → exact cosine
-    verify.  The 100-TB path for HIGH thresholds.
-
-    Recall: a pair at angle θ agrees per hyperplane with p = 1 − θ/π, so
-    P(caught) = 1 − (1 − p^n_bits)^n_tables.  Defaults (10 bits × 16
-    tables): cosine 0.95 → ~0.9988, 0.9 → ~0.978, 0.85 → ~0.916.  For
-    deterministic-in-practice recall size the tables to the threshold —
-    e.g. 6 bits × 32 tables gives 0.9 → ~1−1e−7 and 0.85 → ~0.999994 at
-    ~16× the bucket density (wider buckets → more verify work; the exact
-    verify keeps precision at 1 regardless).  Below ~0.8 the margin math
-    stops working — use ``exact_cosine_pairs``, which is what the
-    all-pairs oracle checks.  False positives never survive (exact
-    verify); bucket blowups are bounded by max_bucket like every other
-    candidate channel.
-
-    min_collisions: require >= this many table collisions before a pair
-    reaches the verify join.  Each verified candidate ships BOTH dense
-    vectors through a shuffle (~2·dim·8 bytes/row), so background noise
-    (n² · q^min_collisions-ish for per-table collision rate q) is the
-    cost driver at many-table configs — a floor of 2-3 suppresses it by
-    orders of magnitude while multi-collision recall for true near-dups
-    stays ~1 (they collide in ~q·n_tables tables in expectation).
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    from wdedup_spark.operators.lsh import candidate_pairs
-
-    e = df.select(F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v"))
-
-    # ONE fused Arrow pass computes every table's bucket key (one matmul
-    # against the (dim, n_tables*n_bits) plane block), vs n_tables
-    # separate UDF evaluations each re-shipping the vectors
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((dim, n_tables * n_bits))
-    weights = 1 << np.arange(n_bits, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def _sigs(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes) > 0  # (batch, n_tables*n_bits)
-        keys = (
-            bits.reshape(len(m), n_tables, n_bits) * weights[None, None, :]
-        ).sum(axis=2)
-        return pd.Series(list(keys))
-
-    banded = e.select("id", _sigs(F.col("v")).alias("keys")).select(
-        "id", F.posexplode("keys").alias("band", "bucket")
-    ).select("band", "bucket", "id")
-    cands = candidate_pairs(banded, max_bucket, min_collisions).select(
-        F.col("conv_a").alias("vec_a"), F.col("conv_b").alias("vec_b")
-    )
-    va = e.select(F.col("id").alias("vec_a"), F.col("v").alias("va"))
-    vb = e.select(F.col("id").alias("vec_b"), F.col("v").alias("vb"))
-    return (
-        cands.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .withColumn("cosine", _cosine(F.col("va"), F.col("vb")))
-        .filter(F.col("cosine") >= threshold)
-        .select("vec_a", "vec_b", "cosine")
-    )
-
-
 def lsh_cosine_pairs_sparse(
     df: DataFrame,
     threshold: float,
@@ -378,33 +311,40 @@ def lsh_cosine_pairs_sparse(
     val_col: str = "vals",
     n_bits: int = 10,
     n_tables: int = 16,
-    seed: int = 42,
     max_bucket: int | None = 4096,
     min_collisions: int = 1,
 ) -> DataFrame:
-    """``lsh_cosine_pairs`` for SPARSE vectors — parallel (index, value)
-    arrays instead of a dense ``array<double>`` — with the same recall
-    math and the same (vec_a, vec_b, cosine) contract.
+    """Embedding near-dup pairs (cosine >= threshold) sub-quadratically
+    over SPARSE vectors — parallel (index, value) arrays: random-hyperplane
+    LSH tables → within-bucket pairs → exact cosine verify.  The 100-TB
+    path for HIGH thresholds.  Output: (vec_a, vec_b, cosine).
 
-    Why a separate entry point: for feature-hashed text histograms the
-    dense representation is almost all zeros (a few hundred shingle
-    buckets out of dim 2048+), and the dense path's real cost is not
-    arithmetic but MATERIALIZATION — building, checkpointing, and
-    shipping n·dim·8 bytes of vectors that the verify join then carries
-    twice per candidate (measured at sf0.1: the dense vecs stage alone
-    was ~2-7 s of a ~13 s query; VERDICT r3 #5's scatter-loop diagnosis
-    turned out to be Arrow output serialization, not Python looping).
-    Here the dense form exists only INSIDE the signature UDF, one Arrow
-    batch at a time:
+    Recall: a pair at angle θ agrees per hyperplane with p = 1 − θ/π, so
+    P(caught) = 1 − (1 − p^n_bits)^n_tables.  Defaults (10 bits × 16
+    tables): cosine 0.95 → ~0.9988, 0.9 → ~0.978, 0.85 → ~0.916.  Below
+    ~0.8 the margin math stops working — use ``exact_cosine_pairs``.
+    ``min_collisions`` requires that many table collisions before a pair
+    reaches the verify join, which suppresses background bucket noise at
+    many-table configs.
+
+    Why sparse: for feature-hashed text histograms the dense
+    representation is almost all zeros (a few hundred shingle buckets
+    out of dim 2048+), and a dense path's real cost is not arithmetic
+    but MATERIALIZATION — building, checkpointing, and shipping n·dim·8
+    bytes of vectors that the verify join then carries twice per
+    candidate (measured at sf0.1: the dense vecs stage alone was ~2-7 s
+    of a ~13 s query).  Here the dense form exists only INSIDE the
+    signature UDF, one Arrow batch at a time:
 
     * signatures: batch scatter (``m[row, idx] = val``) straight into the
       batch matrix, then ONE fused GEMM against the (dim, n_tables·n_bits)
-      plane block — identical bits to the dense path by construction;
-    * verify: exact sparse dot over SHARED indices per candidate pair
-      (``np.intersect1d`` on the pre-grouped, hence unique, index arrays —
-      the same shared-bucket identity the DuckDB oracle uses), norms
-      JVM-side from the value arrays.  Candidates ship ~nnz·16 bytes per
-      side instead of dim·8.
+      plane block — the same bits as a dense matmul over the densified
+      vectors (tests/ann_oracle.py keeps that dense path as the parity
+      reference);
+    * verify: exact dot per candidate pair, each chunk of pairs
+      scattered into two dense (chunk, dim) blocks inside the kernel (see
+      ``_pair_dot``), norms JVM-side from the value arrays.  Candidates
+      ship ~nnz·16 bytes per side instead of dim·8.
 
     Scale: the candidate generator is the shared skew-safe
     ``candidate_pairs`` (window-gated buckets, collision floor); the
@@ -421,7 +361,7 @@ def lsh_cosine_pairs_sparse(
         F.transform(F.col(val_col), lambda x: x.cast("double")).alias("vv"),
     )
 
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(PLANE_SEED)
     planes = rng.standard_normal((dim, n_tables * n_bits))
     weights = 1 << np.arange(n_bits, dtype=np.int64)
     if n_tables * (1 << n_bits) > 2**31 - 1:
@@ -652,13 +592,8 @@ def ivf_topk(
     # no dedup aggregate needed (unlike lsh_bucketed_topk's overlapping
     # multi-probe buckets): each corpus vector lives in exactly one list
     # and a query's probe lists are distinct, so (query, neighbor) pairs
-    # are already unique — straight to the window rank
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 9).alias("score"), "rank")
-    )
+    # are already unique — straight to the ranked top-k
+    return _ranked(scored, k)
 
 
 def lsh_bucketed_topk(
@@ -669,23 +604,18 @@ def lsh_bucketed_topk(
     n_bits: int = 12,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
-    plane_mode: str = "seeded",
 ) -> DataFrame:
     """Approximate top-k: score only corpus vectors in the query's LSH
-    bucket (plus Hamming-1 neighbor buckets for recall).
-
-    ``plane_mode="md5"`` swaps the seeded Gaussian planes for the
-    hash-derived Rademacher planes (``md5_planes``) — identical plan,
-    SQL-expressible buckets, so the whole query becomes oracle-checkable
-    (the move the cosine channel made for its feature hashing)."""
+    bucket (plus Hamming-1 neighbor buckets for recall).  The planes are
+    the hash-derived Rademacher planes (``md5_planes``), so the buckets
+    are SQL-expressible and the whole query is oracle-checkable."""
     c = hyperplane_signature(
         corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cvec")),
-        "cvec", dim, n_bits, seed, plane_mode,
+        "cvec", dim, n_bits,
     )
     q = hyperplane_signature(
         queries.select(F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qvec")),
-        "qvec", dim, n_bits, seed, plane_mode,
+        "qvec", dim, n_bits,
     )
     # probe own bucket + all Hamming-1 buckets (multi-probe LSH)
     probes = F.array(
@@ -698,11 +628,7 @@ def lsh_bucketed_topk(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("score", _cosine(F.col("qvec"), F.col("cvec")))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 9).alias("score"), "rank")
+    # a neighbor reached through several probed buckets scores once
+    return _ranked(
+        scored.groupBy("query_id", "neighbor_id").agg(F.max("score").alias("score")), k
     )

@@ -113,14 +113,13 @@ def connected_components(
     edges: DataFrame,
     a_col: str = "conv_a",
     b_col: str = "conv_b",
-    small_graph_edges: int = SMALL_GRAPH_EDGES,
 ) -> DataFrame:
     """edges(conv_a, conv_b) → (conv_id, cluster_id) for every node that
     appears in an edge; cluster_id = min conv_id of the component.
 
     Adaptive strategy (the reference picks DP vs simple merge planning the
-    same way, src/main.cpp:213-214): count edges first — below
-    ``small_graph_edges`` run exact union-find on the driver (one job +
+    same way, src/main.cpp:213-214): count edges first — up to
+    ``SMALL_GRAPH_EDGES`` run exact union-find on the driver (one job +
     O(E α(E)) local work); above it, distributed hash-to-min with pointer
     jumping (O(log n) rounds, at most ``MAX_ROUNDS``; RuntimeError past it)."""
     # eager local checkpoint BEFORE the strategy probe (r6, guide §2.4):
@@ -135,7 +134,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     n_edges = distinct_edges.count()
-    if n_edges <= small_graph_edges:
+    if n_edges <= SMALL_GRAPH_EDGES:
         spark = edges.sparkSession
         rows = [(r["conv_a"], r["conv_b"]) for r in distinct_edges.collect()]
         id_type = distinct_edges.schema["conv_a"].dataType

@@ -14,66 +14,43 @@ Scale shape (the 100-TB configuration):
   thousands of docs vs billions) — its distinct gram set is broadcast, so
   the contamination test is a map-side hash probe inside whole-stage
   codegen: the training corpus is never shuffled to find hits;
-* training grams are generated JVM-side (split + transform + slice —
-  no Python), and only HITS reach the one aggregation shuffle, keyed by
+* each side's grams come from one whole-batch Arrow kernel
+  (``gram_hash_array_udf``): a gram's identity is its 64-bit shingle
+  hash, so the broadcast probe ships 8 bytes per gram instead of a
+  string, and only HITS reach the one aggregation shuffle, keyed by
   doc_id with map-side partial counts;
-* for a benchmark too large to broadcast, drop ``broadcast_bench=False``
+* for a benchmark too large to broadcast, pass ``broadcast_bench=False``
   to fall back to a plain shuffled join on the gram hash — same plan
   class as the exact-dedup digest groupBy.
 
-Gram identity is the joined token string (not a hash), so the DuckDB
-oracle mirrors it bit-for-bit; at production scale swap the join key for
-``xxhash64(gram)`` to ship 8 bytes instead of strings — the plan shape
-is unchanged.
+Results equal the exact string-gram definition up to 64-bit hash
+collisions (tests/ngram_oracle.py keeps that definition as the
+reference); the DuckDB oracle states it over joined token strings.
 """
 
 from __future__ import annotations
 
-import pandas as pd  # resolves the pandas_udf "pd.Series" hints (postponed annotations)
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
-from wdedup_spark.functions.text import tokens
-
-
-def ngram_array(text: Column | str, n: int, distinct: bool = True) -> Column:
-    """N-token grams of a whitespace-tokenized text, as joined strings;
-    empty array when the doc has fewer than ``n`` tokens (a doc shorter
-    than the gram width cannot be contaminated by this rule).
-
-    ``distinct=True`` (the decontamination shape) deduplicates grams
-    within the doc; ``distinct=False`` keeps ALL occurrences — the
-    repetition-statistics shape (operators/quality.py), which must count
-    a 50×-repeated sentence as ~all the doc's mass, not one gram.  One
-    shared expression so a tokenization or bound fix lands in both
-    operators (review r5)."""
-    toks = tokens(text)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(toks) - n),
-        lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
-    )
-    if distinct:
-        grams = F.array_distinct(grams)
-    return F.when(F.size(toks) >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+from wdedup_spark.functions import hashing
 
 
 def gram_hash_array_udf(n: int):
     """text → array<long> of the doc's DISTINCT n-gram hashes (blake2b
     token hashes combined polynomially — the engine's standard shingle
-    kernel at width n), with the ``ngram_array`` edge contract: fewer
-    than ``n`` tokens → empty array.  Whole-batch vectorized (r6).
+    kernel at width n); fewer than ``n`` tokens → empty array (a doc
+    shorter than the gram width cannot be contaminated by the rule).
+    Whole-batch vectorized (r6).
 
     Uses the MIXED position constants (``hashing._poly_consts_mixed``):
     the hash is the gram's IDENTITY here, and the default affine
     constants collide with certainty on reversal-symmetric patterns
     ("a b b a" vs "b a a b" — caught by the r6 sf0.1 oracle sweep;
     tests/test_decontaminate.py pins the case)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from wdedup_spark.functions import hashing
 
     @pandas_udf("array<long>")
     def _g(texts: pd.Series) -> pd.Series:
@@ -102,36 +79,22 @@ def contaminated(
     id_col: str = "doc_id",
     n: int = 8,
     broadcast_bench: bool = True,
-    hashed: bool = False,
 ) -> DataFrame:
     """→ ``(id, n_hit_grams)``: training docs sharing ≥1 n-gram with the
     benchmark corpus, with the count of DISTINCT shared grams (the
     severity signal a contamination report wants).
 
-    ``hashed=True`` (r6): gram identity becomes the engine's 64-bit
-    shingle hash instead of the joined token string — the module
-    docstring's "swap the join key for a hash at production scale" knob,
-    now implemented.  Cuts the dominant cost (building every gram STRING
-    in an interpreted transform, on both sides — measured at sf1.0:
-    2.6 s per side → ~0.3 s) and ships 8 bytes per gram into the
-    broadcast probe.  Results are identical modulo 64-bit hash
-    collisions, the same caveat class the verify kernels already carry
-    (they intersect hashed shingle sets)."""
-    if hashed:
-        g = gram_hash_array_udf(n)
-        train_grams = train.select(
-            F.col(id_col).alias("id"), F.explode(g(F.col(text_col))).alias("gram")
-        )
-        bench_grams = bench.select(
-            F.explode(g(F.col(text_col))).alias("gram")
-        ).distinct()
-    else:
-        train_grams = train.select(
-            F.col(id_col).alias("id"), F.explode(ngram_array(text_col, n)).alias("gram")
-        )
-        bench_grams = bench.select(
-            F.explode(ngram_array(text_col, n)).alias("gram")
-        ).distinct()
+    Gram identity is the engine's 64-bit shingle hash (r6): building
+    every gram STRING in an interpreted transform on both sides was the
+    dominant cost (measured at sf1.0: 2.6 s per side → ~0.3 s hashed).
+    Results are identical modulo 64-bit hash collisions, the same caveat
+    class the verify kernels already carry (they intersect hashed
+    shingle sets)."""
+    g = gram_hash_array_udf(n)
+    train_grams = train.select(
+        F.col(id_col).alias("id"), F.explode(g(F.col(text_col))).alias("gram")
+    )
+    bench_grams = bench.select(F.explode(g(F.col(text_col))).alias("gram")).distinct()
     if broadcast_bench:
         bench_grams = F.broadcast(bench_grams)
     return (
@@ -139,4 +102,3 @@ def contaminated(
         .groupBy("id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hit_grams"))
     )
-

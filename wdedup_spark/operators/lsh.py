@@ -33,41 +33,37 @@ DEFAULT_MAX_BUCKET = 256
 
 def band_buckets(
     df: DataFrame,
+    n_perms: int,
     sig_col: str = "sig",
     id_col: str = "conv_id",
     n_bands: int = DEFAULT_NUM_BANDS,
-    n_perms: int | None = None,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
     """(id, sig[n_perms]) → (band, bucket, id[, passthrough...]) — one row
     per band.
 
-    bucket = xxhash64(band index, signature slice) computed JVM-side.
-    ``passthrough`` columns ride along unchanged (the incremental
-    pipeline's is-new flag) — cheaper than re-joining them onto the
-    banded exchange.
+    bucket = xxhash64(band index, the band's signature lanes) computed
+    JVM-side.  ``passthrough`` columns ride along unchanged (the
+    incremental pipeline's is-new flag, the streaming probe's signature)
+    — cheaper than re-joining them onto the banded exchange.
     """
-    n_perms_val = n_perms
-    if n_perms_val is None:
-        # static from the first row is wrong at scale; require caller or infer lazily
-        raise ValueError("pass n_perms explicitly (signature width)")
-    rows = n_perms_val // n_bands
-    if rows * n_bands != n_perms_val:
-        raise ValueError(f"n_perms={n_perms_val} not divisible by n_bands={n_bands}")
+    rows = n_perms // n_bands
+    if rows * n_bands != n_perms:
+        raise ValueError(f"n_perms={n_perms} not divisible by n_bands={n_bands}")
     # explode the band INDEX first, then one small per-row hash expression
     # (r6): the previous form built an array of n_bands structs each
     # hashing an array slice — a giant expression tree that fell out of
     # efficient codegen and cost 14× more per row (measured 2.9 s → 0.2 s
-    # at 50k docs × 32 bands).  The bucket is xxhash64 over the band's
-    # signature LANES (element_at), not over a sliced sub-array — a
-    # different 64-bit value but the identical equality relation, which
-    # is all a bucket key is.
+    # at 50k docs × 32 bands).  Hashing the band's lanes (element_at)
+    # gives the same 64-bit value as hashing the sliced sub-array: Spark's
+    # xxhash64 folds an array element by element, seeded by the previous
+    # value, exactly like a list of columns.
     extra = passthrough or []
     sig = F.col(sig_col)
     bidx = F.col("band")
     lanes = [F.element_at(sig, bidx * rows + j + 1) for j in range(rows)]
     return df.select(
-        F.col(id_col).alias("id"), *extra, sig,
+        F.col(id_col).alias("id"), *extra, *([] if sig_col in extra else [sig]),
         F.explode(F.sequence(F.lit(0), F.lit(n_bands - 1))).alias("band"),
     ).select(
         "band", F.xxhash64(bidx, *lanes).alias("bucket"), "id", *extra
@@ -243,7 +239,5 @@ def minhash_lsh_candidates(
     n_perms: int = 128,
     n_bands: int = DEFAULT_NUM_BANDS,
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    min_collisions: int = 1,
 ) -> DataFrame:
-    banded = band_buckets(signed, sig_col, id_col, n_bands, n_perms)
-    return candidate_pairs(banded, max_bucket, min_collisions)
+    return candidate_pairs(band_buckets(signed, n_perms, sig_col, id_col, n_bands), max_bucket)

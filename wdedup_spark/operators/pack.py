@@ -49,7 +49,6 @@ def pack_plan(
     seq_len: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    count_col: str | None = None,
     n_partitions: int | None = None,
 ) -> DataFrame:
     """→ ``(id, n_tokens, tok_start, seq_start, seq_off, seq_end)`` per
@@ -59,16 +58,15 @@ def pack_plan(
     (== ``seq_start`` for empty documents, which occupy no tokens).
 
     Stream order is ascending ``id_col`` — the caller's contract for
-    reproducible packing.  ``count_col`` supplies a precomputed token
-    count (e.g. a real BPE count); default is the whitespace proxy.
+    reproducible packing.  Token counts are the whitespace proxy
+    (``text.token_count``).
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
     spark = df.sparkSession
     counted = df.select(
         F.col(id_col).alias("id"),
-        (F.col(count_col) if count_col else token_count(text_col))
-        .cast("long").alias("n_tokens"),
+        token_count(text_col).cast("long").alias("n_tokens"),
     )
     par = n_partitions or max(spark.sparkContext.defaultParallelism, 2)
     ranged = (

@@ -38,7 +38,7 @@ from pyspark.sql.functions import pandas_udf
 def _ngram_count_stats(texts: pd.Series, n: int):
     """Per-doc n-gram occurrence stats for a whole Arrow batch:
     ``(n_grams, top_gram_n, dup_mass)`` int64 arrays.  Docs with fewer
-    than ``n`` tokens report 0 grams (the ``ngram_array`` contract).
+    than ``n`` tokens report 0 grams.
 
     Exact-identity trick: tokens are factorized once per batch (C-level
     string hashing); an n-gram's identity is the TUPLE of its token

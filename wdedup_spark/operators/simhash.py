@@ -5,14 +5,16 @@ already high but which SimHash finds far cheaper: one 64-bit signature per
 document vs 128 lanes.
 
 Bucketing uses the pigeonhole principle: split the 64-bit signature into
-``d + 1`` chunks — two signatures within Hamming distance d agree on at
-least one chunk exactly.  Candidates = equal (chunk index, chunk value);
-the exact Hamming check is JVM-side ``bit_count(a XOR b) <= d`` — no
-Python in the verification of this path at all.
+``N_BLOCKS`` blocks — two signatures within Hamming distance d agree
+exactly on at least ``N_BLOCKS - d`` of them.  Candidates = equal
+(block combination, block values); the exact Hamming check is JVM-side
+``bit_count(a XOR b) <= d`` — no Python in the verification of this
+path at all.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -22,9 +24,11 @@ from wdedup_spark.functions import hashing
 from wdedup_spark.operators.lsh import candidate_pairs
 
 DEFAULT_HAMMING = 3
+#: pigeonhole blocks per 64-bit signature (``simhash_chunks``)
+N_BLOCKS = 6
 
 
-def simhash_udf(k: int = 3, feature: str = "poly"):
+def simhash_udf(k: int = 3):
     """text → 64-bit SimHash (LongType) over k-shingle features.
 
     Features are k-gram hashes, not unigrams: with Zipfian vocabularies a
@@ -33,24 +37,20 @@ def simhash_udf(k: int = 3, feature: str = "poly"):
     <= 3).  Shingle features keep the signature discriminative while
     char-level edits (fixture D2) still move only ~k·edits features.
 
-    ``feature``: "poly" (default) = blake2b token hashes combined
-    polynomially — the fast pipeline kernel; "md5" = md5 of the shingle
-    string — bit-for-bit reproducible by DuckDB SQL, used by the
-    oracle-verified query path (hashing.md5_shingle_hashes).
+    A feature is the md5 of the shingle STRING (``hashing.md5_shingle_hashes``),
+    so DuckDB SQL reproduces the signature bit for bit.  The features are
+    built per document; the bit majorities of the whole batch are one
+    ``hashing.batch_simhash`` pass.  (The pipeline's own SimHash is a
+    channel of the fused sign kernel, over blake2b polynomial features.)
     """
 
     @pandas_udf("long")
     def _simhash(texts: pd.Series) -> pd.Series:
-        th = hashing.TokenHasher()
-        out = []
-        for t in texts:
-            toks = t.split() if t else []
-            if feature == "md5":
-                feats = hashing.md5_shingle_hashes(toks, k)
-            else:
-                feats = hashing.shingle_hashes_seq(th.hash_tokens(toks), k)
-            out.append(hashing.to_i64(hashing.simhash(feats)))
-        return pd.Series(out, dtype="int64")
+        feats = [hashing.md5_shingle_hashes(t.split() if t else [], k) for t in texts]
+        offsets = np.zeros(len(feats) + 1, dtype=np.int64)
+        np.cumsum([len(f) for f in feats], out=offsets[1:])
+        flat = np.concatenate(feats) if feats else np.empty(0, dtype=np.uint64)
+        return pd.Series(hashing.to_i64(hashing.batch_simhash(flat, offsets)))
 
     return _simhash
 
@@ -60,7 +60,6 @@ def add_simhash(
     text_col: str = "doc",
     out_col: str = "simhash",
     k: int = 3,
-    feature: str = "poly",
 ) -> DataFrame:
     # (r6 negative result, kept for the record: computing the md5
     # features JVM-side — md5+conv inside a higher-order transform
@@ -68,7 +67,7 @@ def add_simhash(
     # lambda bodies are interpreted per WINDOW and never reach codegen.
     # The Python loop stays; the split-size floor in session.py now fans
     # it across every core, which is where its wall actually went.)
-    return df.withColumn(out_col, simhash_udf(k, feature)(F.col(text_col)))
+    return df.withColumn(out_col, simhash_udf(k)(F.col(text_col)))
 
 
 def simhash_chunks(
@@ -76,14 +75,13 @@ def simhash_chunks(
     sim_col: str = "simhash",
     id_col: str = "conv_id",
     max_hamming: int = DEFAULT_HAMMING,
-    n_blocks: int = 6,
     passthrough: list[str] | None = None,
 ) -> DataFrame:
     """Multi-block pigeonhole tables (Manku, Jain, Sarma — "Detecting
     Near-Duplicates for Web Crawling", WWW 2007): split the 64-bit
-    signature into ``n_blocks`` blocks; two signatures within Hamming
-    distance d agree exactly on some (n_blocks - d)-subset of blocks, so
-    each C(n_blocks, n_blocks-d) combination becomes one table keyed on
+    signature into ``N_BLOCKS`` blocks; two signatures within Hamming
+    distance d agree exactly on some (N_BLOCKS - d)-subset of blocks, so
+    each C(N_BLOCKS, N_BLOCKS-d) combination becomes one table keyed on
     those blocks' concatenation.
 
     vs the naive d+1 × 16-bit chunk scheme: 16-bit buckets saturate by the
@@ -93,6 +91,7 @@ def simhash_chunks(
     """
     from itertools import combinations
 
+    n_blocks = N_BLOCKS
     if n_blocks <= max_hamming:
         raise ValueError("need more blocks than the Hamming budget")
     base = 64 // n_blocks
@@ -140,7 +139,6 @@ def simhash_candidates(
     max_hamming: int = DEFAULT_HAMMING,
     max_bucket: int | None = 256,
     k: int = 3,
-    feature: str = "poly",
 ) -> DataFrame:
     """→ (conv_a, conv_b) pairs with Hamming(simhash) <= max_hamming.
 
@@ -151,11 +149,11 @@ def simhash_candidates(
     all-pairs definition); a cap bounds pathological buckets at scale
     with star edges, at the cost of completeness inside them.
     """
-    # checkpoint: the signature pass (Python md5/hash kernels) feeds the
+    # checkpoint: the signature pass (Python md5 features) feeds the
     # banding AND both sides of the exact-distance verify join — without
     # this it executes three times per query (r6)
     signed = (
-        add_simhash(df, text_col, k=k, feature=feature)
+        add_simhash(df, text_col, k=k)
         .select(F.col(id_col).alias(id_col), "simhash")
         .localCheckpoint(eager=False)
     )

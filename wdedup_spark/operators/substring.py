@@ -36,8 +36,8 @@ DEFAULT_WINDOW = 48  # guarantee: spans >= 48+16-1 = 63 tokens are detected
 
 
 def winnow_from_grams(grams: np.ndarray, w: int) -> np.ndarray:
-    """Distinct winnowing fingerprints of a precomputed k-gram hash
-    sequence (the batch kernels supply the grams; see ``winnow``)."""
+    """Distinct winnowing fingerprints of one document's k-gram hash
+    sequence (the batch kernels supply the grams)."""
     n = len(grams)
     if n == 0:
         return np.empty(0, dtype=np.uint64)
@@ -47,11 +47,6 @@ def winnow_from_grams(grams: np.ndarray, w: int) -> np.ndarray:
     # numpy min over a strided view — O(n*w) worst case but w is constant)
     view = np.lib.stride_tricks.sliding_window_view(grams, w)
     return np.unique(view.min(axis=1))
-
-
-def winnow(token_h: np.ndarray, k: int, w: int) -> np.ndarray:
-    """Distinct winnowing fingerprints of a token-hash sequence."""
-    return winnow_from_grams(hashing.shingle_hashes_seq(token_h, k), w)
 
 
 def fingerprint_udf(k: int = DEFAULT_KGRAM, w: int = DEFAULT_WINDOW):
@@ -112,14 +107,21 @@ def _common_run(ta: np.ndarray, tb: np.ndarray, k: int) -> int:
 @pandas_udf(IntegerType())
 def common_run_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Longest common token run between two texts (exact for runs >= the
-    seed width; see _common_run).  Runs only on anchor-surviving pairs."""
-    out = np.zeros(len(a), dtype=np.int32)
-    th = hashing.TokenHasher()
-    for i in range(len(a)):
-        ta = th.hash_tokens(a.iloc[i].split() if a.iloc[i] else [])
-        tb = th.hash_tokens(b.iloc[i].split() if b.iloc[i] else [])
-        out[i] = _common_run(ta, tb, DEFAULT_KGRAM)
-    return pd.Series(out, dtype="int32")
+    seed width; see _common_run).  Runs only on anchor-surviving pairs.
+    Both sides of the batch are tokenized and hashed in one
+    ``split_hash_batch`` pass; null texts count as empty."""
+    n = len(a)
+    flat, off = hashing.split_hash_batch(pd.concat([a, b], ignore_index=True))
+    return pd.Series(
+        np.fromiter(
+            (
+                _common_run(flat[off[i]:off[i + 1]], flat[off[n + i]:off[n + i + 1]], DEFAULT_KGRAM)
+                for i in range(n)
+            ),
+            dtype=np.int32,
+            count=n,
+        )
+    )
 
 
 # evaluated once per pair: substring_candidates filters right on its

@@ -35,7 +35,7 @@ def _jaccard(sa: np.ndarray, sb: np.ndarray) -> float:
 @pandas_udf(DoubleType())
 def jaccard_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Exact Jaccard of two array<long> shingle-set columns (vectorized
-    numpy set ops per row; sets are pre-distinct from shingle_hashes)."""
+    numpy set ops per row; the sign stage's sets are already distinct)."""
     out = np.empty(len(a), dtype=np.float64)
     for i in range(len(a)):
         out[i] = _jaccard(

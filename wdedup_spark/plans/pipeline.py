@@ -163,8 +163,7 @@ def build_candidates(
     streams = [
         tag(
             band_buckets(
-                signed, "sig", "conv_id", cfg.n_bands, cfg.n_perms,
-                passthrough=passthrough,
+                signed, cfg.n_perms, n_bands=cfg.n_bands, passthrough=passthrough,
             ),
             CH_MINHASH,
         )

@@ -14,14 +14,14 @@ same losslessness) at the cost of unoptimized posting lists: a hot
 boilerplate token can land in a value-ordered prefix and fatten its
 posting list to O(corpus).  Round 5 (VERDICT r4 #3) restores the
 frequency optimization WITHOUT state: the index build collects the
-corpus's top-``freq_top`` hot tokens (df ≥ 2) into a bounded driver map
+corpus's top-``FREQ_TOP`` hot tokens (df ≥ 2) into a bounded driver map
 that ships to executors inside the ordering UDF's closure; both sides
 order by ``(freqs.get(tk, 0), tk)`` — unmapped (rare/unseen) tokens
 sort first by value, mapped hot tokens sort last by ascending df.  That
 is still a single consistent total order (losslessness intact), still
 stateless on the stream (the map is static, broadcast once per query),
 and hot tokens now structurally cannot enter a prefix unless a set
-consists of nothing else.  The map is bounded by ``freq_top`` — at
+consists of nothing else.  The map is bounded by ``FREQ_TOP`` — at
 100 TB only the head of the token df distribution matters for posting
 length, so capping it loses nothing.
 
@@ -63,6 +63,11 @@ from pyspark.sql.types import DataType
 
 from wdedup_spark.operators.containment import containment_udf, prefix_bound_len
 from wdedup_spark.operators.minhash import add_shingles
+
+#: hot-token map bound for the index's frequency order (0 = pure token
+#: value order): at 100 TB only the head of the df distribution matters
+#: for posting length
+FREQ_TOP = 100_000
 
 
 def freq_order_udf(freqs: dict, arr_type: DataType):
@@ -137,14 +142,13 @@ def containment_index(
     id_col: str = "conv_id",
     shingle_col: str = "shingles",
     k: int = 3,
-    freq_top: int = 100_000,
 ) -> ContainmentIndex:
     """Build the static side from a (batch) signed table — in production
     the committed sign stage outputs, exactly like ``index_for_stream``.
 
     ``k`` is recorded (not applied — ``signed`` is already shingled) so
     the probe can validate its own shingling against the index's.
-    ``freq_top`` bounds the hot-token map (0 = pure value order, the
+    ``FREQ_TOP`` bounds the hot-token map (0 = pure value order, the
     round-4 behavior)."""
     t = float(threshold)
     if not (0.0 < t <= 1.0):
@@ -153,21 +157,19 @@ def containment_index(
         F.col(id_col).alias("index_id"),
         F.array_distinct(F.col(shingle_col)).alias("dsh"),
     )
-    freqs: dict = {}
-    if freq_top > 0:
-        # document frequency over the distinct sets; only df >= 2 tokens
-        # can inflate a posting list, and only the head of the df
-        # distribution matters — a bounded driver map, never the corpus
-        rows = (
-            distinct.select(F.explode("dsh").alias("tk"))
-            .groupBy("tk")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") >= 2)
-            .orderBy(F.desc("df"), "tk")
-            .limit(freq_top)
-            .collect()
-        )
-        freqs = {r["tk"]: r["df"] for r in rows}
+    # document frequency over the distinct sets; only df >= 2 tokens
+    # can inflate a posting list, and only the head of the df
+    # distribution matters — a bounded driver map, never the corpus
+    rows = (
+        distinct.select(F.explode("dsh").alias("tk"))
+        .groupBy("tk")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") >= 2)
+        .orderBy(F.desc("df"), "tk")
+        .limit(FREQ_TOP)
+        .collect()
+    )
+    freqs = {r["tk"]: r["df"] for r in rows}
     atype = distinct.schema["dsh"].dataType
     sets = (
         distinct.select("index_id", _ordered_sets(F.col("dsh"), freqs, atype).alias("sh"))

@@ -5,16 +5,18 @@ The batch pipeline owns corpus-vs-corpus dedup; the streaming question a
 near-duplicate of anything already indexed?".  That decomposes into
 stateless, streaming-legal pieces:
 
-  sign (fused pandas UDF, per-row)        — same kernel as batch
-  LSH band (JVM xxhash64, per-row)        — same banding as batch
+  sign (fused pandas UDF, per batch)      — same kernel as batch
+  LSH band (``lsh.band_buckets``)          — the index's own banding
   stream-static equi-join on (band,bucket) — Spark's supported shape
   MinHash lane-agreement estimate filter  — JVM zip_with/aggregate
 
 No streaming state is needed at all (no aggregation, no watermark): every
 micro-batch row is signed, banded, probed against the broadcast/static
-index, and emitted with its Jaccard estimate.  Exact verification of the
-flagged pairs (Python Jaccard / edit) stays downstream in batch — the
-same split the batch pipeline makes between candidates and verify.
+index, and emitted with its Jaccard estimate.  The estimate is a cheap
+stream-side filter only; exact verification of the flagged pairs (the
+batch verify stage computes exact Jaccard for every candidate) stays
+downstream in batch — the same split the batch pipeline makes between
+candidates and verify.
 
 The static side is the ledger's committed ``sign`` stage output — the
 streaming path literally reuses the batch pipeline's checkpointed tables
@@ -34,7 +36,7 @@ from wdedup_spark.operators.minhash import add_signatures
 def index_for_stream(signed: DataFrame, n_perms: int = 128, n_bands: int = 32) -> DataFrame:
     """Static probe index from the batch ``sign`` stage output:
     one row per (band, bucket, index id, signature)."""
-    banded = band_buckets(signed, "sig", "conv_id", n_bands, n_perms)
+    banded = band_buckets(signed, n_perms, n_bands=n_bands)
     sigs = signed.select(F.col("conv_id").alias("id"), F.col("sig").alias("index_sig"))
     return banded.join(sigs, "id").select(
         "band", "bucket", F.col("id").alias("index_id"), "index_sig"
@@ -53,35 +55,23 @@ def stream_neardup_flags(
     """docs stream (conv_id, doc) × static index → flagged near-dup rows
     (conv_id, index_id, est).
 
-    ``est`` is the MinHash lane-agreement Jaccard estimate — the same
-    JVM pre-filter the batch verify stage uses; pairs may appear once per
-    colliding band (no in-stream aggregation: keeps the query stateless
-    and append-only), so downstream consumers dedup on (conv_id,
-    index_id) when exact-verifying.
+    ``est`` is the MinHash lane-agreement Jaccard estimate, a JVM
+    pre-filter ahead of downstream exact verification; pairs may appear
+    once per colliding band (no in-stream aggregation: keeps the query
+    stateless and append-only), so downstream consumers dedup on
+    (conv_id, index_id) when exact-verifying.
     """
     signed = add_signatures(
         docs, "doc", k=k, n_perms=n_perms, seed=seed,
         enable_simhash=False, enable_substring=False,
     ).select("conv_id", "sig")
-    # banding carries the signature along (explode of per-row structs):
-    # everything before the stream-static join stays narrow and
-    # stateless — a self-join on the stream would be an (unsupported
-    # and unnecessary) stream-stream join
-    rows = n_perms // n_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(F.lit(b), F.slice(F.col("sig"), b * rows + 1, rows)).alias(
-                    "bucket"
-                ),
-            )
-            for b in range(n_bands)
-        ]
+    # the index's own banding, carrying the signature along: everything
+    # before the stream-static join stays narrow and stateless — a
+    # self-join on the stream would be an (unsupported and unnecessary)
+    # stream-stream join
+    probe = band_buckets(signed, n_perms, n_bands=n_bands, passthrough=["sig"]).select(
+        F.col("id").alias("stream_id"), "sig", "band", "bucket"
     )
-    probe = signed.select(
-        F.col("conv_id").alias("stream_id"), "sig", F.explode(bands).alias("bb")
-    ).select("stream_id", "sig", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     est = (
         probe.join(index, ["band", "bucket"])
         .filter(F.col("stream_id") != F.col("index_id"))
