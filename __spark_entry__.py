@@ -688,8 +688,9 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_prefix_subsumed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-subsumption dedup (agent-transcript retry/continuation
     case): per-doc boolean — is this text a PROPER prefix of another
-    doc's text?  Distributed as range-partition + per-slice backward
-    scan + O(partitions) boundary stitch (operators/prefixdedup.py);
+    doc's text?  Runs the pipeline's sorted-run engine over the distinct
+    texts (pinned range sort, per-slice scan, next-slice bounds —
+    operators/prefixdedup.py) and joins every doc back on its text;
     witness is the subsuming doc — deterministically the min-(text, id)
     proper extension, mirrored by the oracle's LATERAL min."""
     from wdedup_spark.operators.prefixdedup import prefix_subsumed

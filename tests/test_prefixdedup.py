@@ -55,9 +55,10 @@ def test_equal_run_not_subsumed_without_extension(spark):
 
 
 def test_boundary_stitch_across_partitions(spark):
-    # many partitions over few rows forces runs and their extensions into
-    # different range slices; equal runs spanning whole partitions
-    # exercise the skip-equal-slices walk
+    # duplicate-heavy input over many partitions: 20 copies of one text
+    # collapse to one run row, so its extension sits in a later range
+    # slice and the answer crosses a slice boundary; every copy must get
+    # the same (subsumed, witness) answer
     docs = [(i, "p q r") for i in range(20)] + [(100, "p q r s"), (101, "a")]
     _check(spark, docs, n_partitions=8)
 
@@ -119,26 +120,25 @@ def _pinned_run(spark, docs, n_partitions):
     return corpus, corpus_bounds(corpus).localCheckpoint(eager=True)
 
 
+def _oracle_edges(docs) -> set:
+    """Canonical (witness, prefix) edges from the plain-Python oracle."""
+    return {(w, i) for i, (sub, w) in oracle(docs).items() if sub}
+
+
 def test_edges_from_sorted_matches_operator(spark):
     docs = [(str(i), t) for i, t in enumerate(
         ["ab", "abc", "abd", "b", "ba", "bab", "q", "qq", "qqq", "z"]
     )]
     corpus, bounds = _pinned_run(spark, docs, 4)
     got = {(r.conv_a, r.conv_b) for r in edges_from_sorted(corpus, bounds).collect()}
-    want = {
-        (r.conv_a, r.conv_b)
-        for r in prefix_edges(
-            spark.createDataFrame(docs, ["conv_id", "doc"]), "doc", "conv_id"
-        ).collect()
-    }
-    assert got == want
+    assert got == _oracle_edges(docs)
 
 
 def test_cross_run_edges_randomized_vs_full_operator(spark):
     """Two-day split of a random prefix-rich corpus: the union of per-day
     within-run edges plus cross-run probe edges must (a) flag EXACTLY the
-    full operator's subsumed set, (b) contain every canonical
-    smallest-extension edge, (c) contain only true proper-prefix pairs —
+    full recompute's subsumed set and (b) contain every canonical
+    smallest-extension edge (both from the plain-Python oracle), (c) contain only true proper-prefix pairs —
     the documented coarser-clusters contract."""
     rng = random.Random(75)
     texts: set[str] = set()
@@ -159,14 +159,8 @@ def test_cross_run_edges_randomized_vs_full_operator(spark):
             .unionByName(cross_prefix_edges(new_df, [old_run], "doc", "conv_id"))
         )
         got = {(r.conv_a, r.conv_b) for r in edges.collect()}
-        union_df = spark.createDataFrame(old + new, ["conv_id", "doc"])
-        full_sub = {
-            r.id for r in prefix_subsumed(union_df).collect() if r.subsumed
-        }
-        canonical = {
-            (r.conv_a, r.conv_b) for r in prefix_edges(union_df).collect()
-        }
-        assert {b for _, b in got} == full_sub, "subsumed-set parity"
+        canonical = _oracle_edges(old + new)
+        assert {b for _, b in got} == {b for _, b in canonical}, "subsumed-set parity"
         assert canonical <= got, "canonical witness edges present"
         for a, b in got:  # soundness: every emitted edge is a true pair
             assert docs[a] != docs[b] and docs[a].startswith(docs[b])
@@ -202,6 +196,16 @@ def test_slice_guard_rows_cap_trips_loudly(spark, monkeypatch):
     )
     with pytest.raises(Exception, match="range slice holds .* rows"):
         px.prefix_subsumed(df, "doc", "conv_id", n_partitions=2).count()
+
+
+def test_slice_guard_cross_prefix_edges_trips_loudly(spark, monkeypatch):
+    import wdedup_spark.operators.prefixdedup as px
+
+    run = _pinned_run(spark, [(f"o{i}", f"doc {i}") for i in range(10)], 1)
+    new_df = spark.createDataFrame([("n1", "doc 5 x")], ["conv_id", "doc"])
+    monkeypatch.setattr(px, "MAX_SLICE_ROWS", 3)
+    with pytest.raises(Exception, match="cross_prefix_edges: range slice holds .* rows"):
+        px.cross_prefix_edges(new_df, [run], "doc", "conv_id").count()
 
 
 def test_slice_guard_bytes_cap_trips_loudly(spark, monkeypatch):

@@ -71,6 +71,20 @@ def test_common_run_matches_naive_dp(xs, ys, k):
         assert got == 0
 
 
+def test_common_run_repeated_token_run():
+    """A run of one repeated token shares a single distinct 16-gram, yet
+    the common run is the whole stretch: the bound on ``_common_run`` is
+    the longest stretch of consecutive shared-gram positions + k - 1,
+    not the shared distinct-gram count + k - 1."""
+    th = TokenHasher()
+    a = th.hash_tokens(["x"] + ["ok"] * 100 + ["y"])
+    b = th.hash_tokens(["ok"] * 120)
+    ga = shingle_hashes(a, 16)
+    gb = shingle_hashes(b, 16)
+    assert len(np.intersect1d(ga, gb)) == 1
+    assert _common_run(a, b, 16) == 100
+
+
 @settings(max_examples=30, deadline=None)
 @given(st.integers(min_value=0, max_value=200), st.integers(min_value=63, max_value=120))
 def test_winnow_shared_span_guarantee(prefix_len, span_len):
@@ -93,28 +107,6 @@ def test_to_i64_roundtrip_property(vals):
     for v in vals:
         signed = hashing.to_i64(v)
         assert signed % (1 << 64) == v % (1 << 64)
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.tuples(st.text("ab", max_size=4), st.integers(0, 9)), max_size=30)
-)
-def test_succ_run_property(pairs):
-    """prefixdedup._succ_run: for each position of a sorted slice, the
-    (text, id) of the first row of the next distinct-text run."""
-    from wdedup_spark.operators.prefixdedup import _succ_run
-
-    pairs = sorted(pairs)
-    texts = [t for t, _ in pairs]
-    ids = [i for _, i in pairs]
-    got = _succ_run(texts, ids)
-    for i in range(len(pairs)):
-        want = None
-        for j in range(i + 1, len(pairs)):
-            if texts[j] != texts[i]:
-                want = (texts[j], ids[j])
-                break
-        assert got[i] == want
 
 
 @settings(max_examples=200, deadline=None)

@@ -103,9 +103,8 @@ def main(argv: list[str] | None = None) -> int:
         threshold=args.threshold, seed=args.seed, max_bucket=args.max_bucket,
         enable_simhash=not args.no_simhash, enable_substring=not args.no_substring,
         substring_min_span=args.min_span, sync_ranges=args.sync_ranges,
-        enable_prefix=getattr(args, "prefix", False),
-        enable_containment=getattr(args, "containment", False),
-        containment_threshold=getattr(args, "containment_threshold", 0.9),
+        enable_prefix=args.prefix, enable_containment=args.containment,
+        containment_threshold=args.containment_threshold,
     )
     turns = read_turns(spark, args.input)
     if args.cmd == "dedup-incr":

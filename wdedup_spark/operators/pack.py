@@ -15,7 +15,7 @@ Plan shape (distributed prefix sum, the textbook two-phase scan):
 1. range-partition the (id, n_tokens) projection by id — an exchange of
    two longs per document; ``localCheckpoint`` PINS the sampled partition
    boundaries (RangePartitioner samples per job; the totals pass and the
-   cumsum pass must see the SAME pids — same hazard prefixdedup.py:90-98
+   cumsum pass must see the SAME pids — same hazard prefixdedup.sorted_corpus
    documents, verified empirically there);
 2. within-partition running totals: ``Window.partitionBy(pid)
    .orderBy(id)`` — parallel across partitions.  (Catalyst can't know

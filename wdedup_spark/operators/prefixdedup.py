@@ -9,32 +9,28 @@ grows (a 10-turn prefix of a 500-turn transcript has Jaccard ~0.02), and
 exact dedup sees two distinct digests — yet a training pipeline wants
 the subsumed prefix gone.
 
-The distributed design is the reference's sort-then-scan idiom (O5
-sort+emit, /root/reference/src/wprof.cpp:143-156: duplicates become
-neighbors under a total order) lifted to a cluster:
+One engine, the reference's sort-then-scan idiom (O5 sort+emit, the
+reference's src/wprof.cpp:143-156: duplicates become neighbors under a
+total order) lifted to a cluster, over DISTINCT texts:
 
 * strings sharing prefix ``A`` occupy the contiguous interval
   ``[A, A~)`` in lexicographic order, so ``A`` is a proper prefix of
-  SOME other document iff the next DISTINCT text in global sort order
-  starts with ``A`` — and that successor is then the lexicographically
+  SOME other document iff the next text in global sort order starts
+  with ``A`` — and that successor is then the lexicographically
   SMALLEST proper extension, which doubles as the subsumption witness;
-* ``repartitionByRange(text)`` + ``sortWithinPartitions`` realizes the
-  global order with each partition holding a contiguous slice — one
-  range-exchange shuffle, Spark's own sampled range partitioner
-  balancing the slices;
-* each partition answers its rows locally with ONE backward pass over
-  its Arrow batches (no pairwise work: O(rows) comparisons total);
-* rows whose successor lies across a partition boundary (the trailing
-  run of equal texts in each slice) are stitched with per-partition
-  summaries — a few short strings per partition collected to the driver
-  (bounded by partition count, never by data) and rebroadcast, the
-  same economy as the ledger's footer-only row counts.
+* ``sorted_corpus`` realizes the global order as a sorted RUN: one
+  ``repartitionByRange(text)`` exchange, each range slice holding a
+  contiguous interval, Spark's sampled range partitioner balancing them;
+* ``corpus_bounds`` records each slice's first row — O(slices) rows —
+  so ``edges_from_sorted`` answers every row with one forward scan per
+  slice, the last row's successor being the next slice's first row (no
+  pairwise work: O(rows) comparisons total).
 
-The sorted corpus is localCheckpoint'ed before the two passes: Spark's
-RangePartitioner re-samples per job, so without pinning, the summary
-pass and the scan pass would see different partition boundaries and the
-stitch would be wrong (not just slow).  The corpus text therefore
-crosses the wire once and is materialized once.
+A run must be PINNED before its bounds and its scan read it:
+RangePartitioner re-samples per job, so unpinned, the two jobs would see
+different slicings.  ``prefix_subsumed`` pins with ``localCheckpoint``
+for its one call; the pipeline commits the run to parquet, which also
+lets later days probe it (``cross_prefix_edges``) instead of re-sorting.
 """
 
 from __future__ import annotations
@@ -66,210 +62,19 @@ def _caps() -> tuple[int, int]:
 
 
 def _slice_guard(pdf: "pd.DataFrame", where: str, caps: tuple[int, int]) -> None:
-    rows_cap, bytes_cap = caps
-    if len(pdf) > rows_cap:
-        raise ValueError(
-            f"{where}: range slice holds {len(pdf)} rows "
-            f"(cap {rows_cap}); the range partitioning degenerated — "
-            "raise n_partitions or pre-split the corpus"
-        )
-    nbytes = int(pdf["text"].str.len().sum())
-    if nbytes > bytes_cap:
-        raise ValueError(
-            f"{where}: range slice holds ~{nbytes} text bytes "
-            f"(cap {bytes_cap}); the range partitioning degenerated — "
-            "raise n_partitions or pre-split the corpus"
-        )
-
-
-def _succ_run(texts: list, ids: list) -> list:
-    """For each position in a (text, id)-ascending slice, the (text, id)
-    of the FIRST row of the next DISTINCT-text run (None past the end) —
-    one reverse scan."""
-    n = len(texts)
-    out: list = [None] * n
-    for i in range(n - 1, -1, -1):
-        if i + 1 < n:
-            out[i] = (
-                (texts[i + 1], ids[i + 1]) if texts[i + 1] != texts[i] else out[i + 1]
+    held = ((len(pdf), "rows"), (int(pdf["text"].str.len().sum()), "text bytes"))
+    for (n, unit), cap in zip(held, caps):
+        if n > cap:
+            raise ValueError(
+                f"{where}: range slice holds {n} {unit} (cap {cap}); the range "
+                "partitioning degenerated — raise n_partitions or pre-split "
+                "the corpus"
             )
-    return out
-
-
-def prefix_subsumed(
-    df: DataFrame,
-    text_col: str = "doc",
-    id_col: str = "conv_id",
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """→ ``(id, subsumed, witness)``: ``subsumed`` iff the document's
-    text is a PROPER prefix of some other document's text (equal texts
-    are exact duplicates — the exact stage's job, not this one's);
-    ``witness`` is then the subsuming document — deterministically the
-    min-id row of the lexicographically smallest proper extension —
-    usable directly as a (prefix → witness) dedup edge for the cluster
-    stage.  ``witness`` is null when not subsumed.
-    """
-    spark = df.sparkSession
-    caps = _caps()
-    rows = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
-    # null text has no prefix relation to anything: answer it directly
-    # (subsumed=false, no witness) instead of letting None reach the
-    # pandas scans; the union keeps the contract total over input rows
-    nulls = rows.filter(F.col("text").isNull()).select(
-        "id",
-        F.lit(False).alias("subsumed"),
-        F.lit(None).cast(rows.schema["id"].dataType).alias("witness"),
-    )
-    rows = rows.filter(F.col("text").isNotNull())
-    par = n_partitions or max(spark.sparkContext.defaultParallelism, 2)
-    # localCheckpoint PINS the range partitioning: RangePartitioner
-    # samples per JOB (seeded by rdd id), so without it the summary pass
-    # and the scan pass would see DIFFERENT partition boundaries and the
-    # stitch map would be applied to slices it wasn't computed from
-    # (verified empirically: two actions on the same repartitionByRange
-    # produced different bounds at 200k rows).  Cost: one materialized
-    # copy on executor storage for the operator's duration — on a real
-    # cluster with a checkpoint dir, checkpoint() gives the same pinning
-    # with executor-loss tolerance.
-    ranged = (
-        rows.repartitionByRange(par, "text", "id")
-        .sortWithinPartitions("text", "id")
-        .localCheckpoint(eager=True)
-        .withColumn("pid", F.spark_partition_id())
-    )
-
-    # pass 1 — per-partition summaries for the boundary stitch: first
-    # (text, id), last text, and the first (text, id) differing from the
-    # first text (None when the whole slice is one run).  One summary row
-    # per partition to the driver — bounded by partition count, never data.
-    id_field = ranged.schema["id"].dataType
-    summary_schema = T.StructType(
-        [
-            T.StructField("pid", T.IntegerType()),
-            T.StructField("first_text", T.StringType()),
-            T.StructField("first_id", id_field),
-            T.StructField("last_text", T.StringType()),
-            T.StructField("fd_text", T.StringType()),
-            T.StructField("fd_id", id_field),
-        ]
-    )
-
-    def summarize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        first = last = fd = pid = None
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                pid = int(pdf["pid"].iloc[0])
-                first = (pdf["text"].iloc[0], pdf["id"].iloc[0])
-            last = pdf["text"].iloc[-1]
-            if fd is None:
-                ne = pdf[pdf["text"] != first[0]]
-                if len(ne):
-                    fd = (ne["text"].iloc[0], ne["id"].iloc[0])
-        if pid is not None:
-            yield pd.DataFrame(
-                {"pid": pd.Series([pid], dtype="object"),
-                 "first_text": [first[0]],
-                 "first_id": pd.Series([first[1]], dtype="object"),
-                 "last_text": [last],
-                 "fd_text": [fd[0] if fd else None],
-                 "fd_id": pd.Series([fd[1] if fd else None], dtype="object")}
-            )
-
-    summaries = {r.pid: r for r in ranged.mapInPandas(summarize, summary_schema).collect()}
-    # Global successor run for each partition's TRAILING equal-run
-    # (text == last_text): walk later partitions, skipping slices
-    # entirely equal to it.
-    boundary_succ: dict[int, tuple | None] = {}
-    pids = sorted(summaries)
-    for idx, p in enumerate(pids):
-        t = summaries[p].last_text
-        succ = None
-        for q in pids[idx + 1:]:
-            s = summaries[q]
-            if s.first_text != t:
-                succ = (s.first_text, s.first_id)
-                break
-            if s.fd_text is not None:
-                succ = (s.fd_text, s.fd_id)
-                break
-        boundary_succ[p] = succ
-    bc = spark.sparkContext.broadcast(boundary_succ)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id", id_field),
-            T.StructField("subsumed", T.BooleanType()),
-            T.StructField("witness", id_field),
-        ]
-    )
-
-    # pass 2 — one backward scan per partition; mapInPandas streams the
-    # partition's batches but the scan needs the whole sorted slice, so
-    # concatenate (bounded by the range partitioner's slice sizing, the
-    # same per-partition bound every sort-based operator carries).
-    def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = list(it)
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        _slice_guard(pdf, "prefix_subsumed", caps)
-        texts = pdf["text"].tolist()
-        succ = _succ_run(texts, pdf["id"].tolist())
-        tail = bc.value.get(int(pdf["pid"].iloc[0]))
-        sub, wit = [], []
-        for t, s in zip(texts, succ):
-            nxt = s if s is not None else tail
-            hit = nxt is not None and nxt[0].startswith(t)
-            sub.append(hit)
-            wit.append(nxt[1] if hit else None)
-        yield pd.DataFrame(
-            {"id": pdf["id"], "subsumed": sub,
-             "witness": pd.Series(wit, dtype="object")}
-        )
-
-    return ranged.mapInPandas(scan, out_schema).unionByName(nulls)
 
 
 # ---------------------------------------------------------------------------
-# Committed-artifact flow (pipeline + cross-day increments)
+# Sorted-run engine: one run, its slice bounds, one scan per slice
 # ---------------------------------------------------------------------------
-#
-# The in-memory operator above pins its range partitioning with a
-# localCheckpoint because it lives for one job.  The PIPELINE instead
-# commits the sorted corpus to parquet — the committed files ARE the pin
-# — which is what makes the prefix channel incrementable: a later day's
-# batch answers its cross-corpus prefix questions by PROBING the pinned
-# slices (predecessor/successor lookups) instead of re-sorting the
-# corpus.  The chain invariant that makes two probes per new document
-# sufficient (mirror of wdedup's sort-once-scan-once economy,
-# /root/reference/src/wprof.cpp:143-156):
-#
-# * a committed doc Q is NEWLY subsumed by new doc N only if Q is N's
-#   immediate committed predecessor — any committed doc strictly between
-#   Q and N lies in [Q, Q~) too, so it starts with Q and subsumed Q on
-#   the day the later of the two arrived;
-# * a new doc P is subsumed by the committed corpus iff some run's
-#   successor of P starts with P — the global committed successor IS
-#   some run's successor, and every committed doc between P and a
-#   witness is itself a witness.
-#
-# Per-run soundness needs no cross-run combine: a per-run predecessor/
-# successor that satisfies startswith is a TRUE proper-prefix pair, and
-# redundant true edges are harmless to connected components.  The
-# full-recompute canonical edge (smallest-proper-extension witness) is
-# always among the emitted edges — when the later of (prefix, canonical
-# witness) arrived, nothing committed or batched could sit between them
-# (it would be a smaller extension) — so incremental components are a
-# COARSENING of the full recompute's: same subsumed set, same canonical
-# edges, plus early-witness edges a full recompute would re-point at a
-# later-arriving smaller extension.  (Caveat documented in
-# plans/pipeline.py and pinned by tests/test_pipeline_prefix.py.)
-#
-# All of this assumes DISTINCT texts — guaranteed by exact-first (the
-# channel runs on exact-stage representatives).
 
 
 def sorted_corpus(
@@ -279,13 +84,14 @@ def sorted_corpus(
     n_partitions: int | None = None,
 ) -> DataFrame:
     """Range-sorted corpus artifact ``(id, text, slice)`` — ONE range
-    exchange; committing this to parquet pins the slicing for every later
-    probe (the durable analog of the operator's localCheckpoint).  Null
-    texts are excluded (no prefix relation).
+    exchange.  Null texts are excluded (no prefix relation).
 
-    The caller MUST pin the result (ledger commit / checkpoint) before
-    using it in more than one job: RangePartitioner re-samples per job,
-    so unpinned, bounds and scans would see different slicings."""
+    The caller MUST pin the result (ledger commit / localCheckpoint)
+    before using it in more than one job: RangePartitioner re-samples
+    per job, so unpinned, bounds and scans would see different slicings
+    (seen: two actions on one unpinned repartitionByRange gave different
+    bounds at 200k rows).  A parquet commit also pins the slicing for
+    every later probe."""
     spark = df.sparkSession
     rows = df.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("text")
@@ -310,27 +116,30 @@ def corpus_bounds(corpus: DataFrame) -> DataFrame:
 
 
 def _bounds_list(bounds: DataFrame) -> list:
-    """Driver-side bounds, first_text-ascending — bounded by slice count
-    (the stitch-summary economy), never by data."""
+    """Driver-side bounds, first_text-ascending — bounded by slice count,
+    never by data."""
     return sorted(bounds.collect(), key=lambda r: r.first_text)
+
+
+def _next_first(blist: list) -> dict:
+    """slice → ``(first_text, first_id)`` of the next non-empty slice in
+    text order: the run successor of the slice's last row.  The last
+    slice has no entry (``.get`` → None)."""
+    return {
+        int(b.slice): (n.first_text, n.first_id) for b, n in zip(blist, blist[1:])
+    }
 
 
 def edges_from_sorted(corpus: DataFrame, bounds: DataFrame) -> DataFrame:
     """Subsumption edges ``(conv_a=witness, conv_b=prefix)`` WITHIN one
-    committed sorted run: per slice, one forward scan; the last row's
+    pinned sorted run: per slice, one forward scan; the last row's
     successor is the next slice's first row (broadcast bounds).  Texts
-    are distinct (exact-first), so successor == next row."""
+    are distinct (exact-first in the pipeline, the text collapse in
+    ``prefix_subsumed``), so successor == next row."""
     spark = corpus.sparkSession
     caps = _caps()
     id_field = corpus.schema["id"].dataType
-    blist = _bounds_list(bounds)
-    nxt = {
-        int(b.slice): (blist[i + 1].first_text, blist[i + 1].first_id)
-        if i + 1 < len(blist)
-        else None
-        for i, b in enumerate(blist)
-    }
-    bc = spark.sparkContext.broadcast(nxt)
+    bc = spark.sparkContext.broadcast(_next_first(_bounds_list(bounds)))
     schema = T.StructType(
         [T.StructField("conv_a", id_field), T.StructField("conv_b", id_field)]
     )
@@ -349,6 +158,78 @@ def edges_from_sorted(corpus: DataFrame, bounds: DataFrame) -> DataFrame:
         return pd.DataFrame({"conv_a": a, "conv_b": b})
 
     return corpus.groupBy("slice").applyInPandas(scan, schema)
+
+
+def prefix_subsumed(
+    df: DataFrame,
+    text_col: str = "doc",
+    id_col: str = "conv_id",
+    n_partitions: int | None = None,
+) -> DataFrame:
+    """→ ``(id, subsumed, witness)`` for every input row: ``subsumed``
+    iff the document's text is a PROPER prefix of some other document's
+    text (equal texts are exact duplicates — the exact stage's job, not
+    this one's); ``witness`` is then the subsuming document —
+    deterministically the min-id row of the lexicographically smallest
+    proper extension — usable directly as a (prefix → witness) dedup edge
+    for the cluster stage.  ``witness`` is null when not subsumed.
+
+    The sorted-run engine over the DISTINCT texts, each represented by
+    its min id (the witness tie-break), pinned with ``localCheckpoint``
+    for the bounds and scan jobs.  Every input row takes its text's
+    answer through a left join on text, so equal texts share one answer
+    and null texts (outside the run) come back unsubsumed.
+    """
+    rows = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("text"))
+    reps = rows.groupBy("text").agg(F.min("id").alias("id"))
+    corpus = sorted_corpus(reps, "text", "id", n_partitions).localCheckpoint(
+        eager=True
+    )
+    witness = (
+        edges_from_sorted(corpus, corpus_bounds(corpus))
+        .join(corpus.select(F.col("id").alias("conv_b"), "text"), "conv_b")
+        .select("text", F.col("conv_a").alias("witness"))
+    )
+    return rows.join(witness, "text", "left").select(
+        "id", F.col("witness").isNotNull().alias("subsumed"), "witness"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Committed-artifact flow (pipeline + cross-day increments)
+# ---------------------------------------------------------------------------
+#
+# The pipeline commits each day's sorted run and its bounds to parquet —
+# the committed files ARE the pin — which is what makes the prefix
+# channel incrementable: a later day's batch answers its cross-corpus
+# prefix questions by PROBING the pinned slices (predecessor/successor
+# lookups) instead of re-sorting the corpus.  The chain invariant that
+# makes two probes per new document sufficient (mirror of wdedup's
+# sort-once-scan-once economy, the reference's src/wprof.cpp:143-156):
+#
+# * a committed doc Q is NEWLY subsumed by new doc N only if Q is N's
+#   immediate committed predecessor — any committed doc strictly between
+#   Q and N lies in [Q, Q~) too, so it starts with Q and subsumed Q on
+#   the day the later of the two arrived;
+# * a new doc P is subsumed by the committed corpus iff some run's
+#   successor of P starts with P — the global committed successor IS
+#   some run's successor, and every committed doc between P and a
+#   witness is itself a witness.
+#
+# Per-run soundness needs no cross-run combine: a per-run predecessor/
+# successor that satisfies startswith is a TRUE proper-prefix pair, and
+# redundant true edges are harmless to connected components.  The
+# full-recompute canonical edge (smallest-proper-extension witness) is
+# always among the emitted edges — when the later of (prefix, canonical
+# witness) arrived, nothing committed or batched could sit between them
+# (it would be a smaller extension) — so incremental components are a
+# COARSENING of the full recompute's: same subsumed set, same canonical
+# edges, plus early-witness edges a full recompute would re-point at a
+# later-arriving smaller extension.  (Caveat documented in
+# plans/pipeline.py and pinned by tests/test_pipeline_prefix.py.)
+#
+# All of this assumes DISTINCT texts — guaranteed by exact-first (the
+# channel runs on exact-stage representatives).
 
 
 def cross_prefix_edges(
@@ -386,13 +267,7 @@ def cross_prefix_edges(
             continue
         firsts = [b.first_text for b in blist]
         slices = [int(b.slice) for b in blist]
-        nxt = {
-            slices[i]: (blist[i + 1].first_text, blist[i + 1].first_id)
-            if i + 1 < len(blist)
-            else None
-            for i in range(len(blist))
-        }
-        bc = spark.sparkContext.broadcast((firsts, slices, nxt))
+        bc = spark.sparkContext.broadcast((firsts, slices, _next_first(blist)))
         route_schema = T.StructType(
             [
                 T.StructField("id", id_field),

@@ -75,8 +75,10 @@ def _common_run(ta: np.ndarray, tb: np.ndarray, k: int) -> int:
     run of L-k+1 consecutive matching k-grams, tracked per diagonal in
     O(#gram-matches) — the seed-and-extend idea (BLAST-style) instead of
     O(n·m) DP.  Runs shorter than k tokens report 0 (callers use
-    min_span >> k).  Cheap upper-bound pre-filter: |shared distinct
-    grams| + k - 1 bounds the best possible run.
+    min_span >> k).  Upper bound on the result: the longest stretch of
+    consecutive positions whose gram is shared, plus k - 1.  The count
+    of shared distinct grams bounds nothing: a run of one repeated token
+    shares a single distinct gram however long it is.
     """
     if len(ta) == 0 or len(tb) == 0:
         return 0
