@@ -664,7 +664,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )
     # checkpointed because containment_join consumes the sets for the
-    # frequency pass, the ordered re-collect AND both verify sides
+    # hot-token map, the ordered sets AND both verify sides
     signed = (
         add_shingles(docs, "doc", k=K)
         .select("conv_id", "shingles")

@@ -150,3 +150,26 @@ def test_cli_dedup_incr_honours_sync_ranges(spark, tmp_path, monkeypatch):
     sign = os.path.join(day_wd, "sign")
     assert sorted(d for d in os.listdir(sign) if d.startswith("rng=")) == ["rng=0", "rng=1"]
     assert os.path.exists(os.path.join(day_wd, "cluster", "_SUCCESS"))
+
+
+@pytest.mark.parametrize("cmd", ["dedup", "dedup-incr"])
+def test_cli_defaults_are_pipeline_config_defaults(cmd):
+    """Each pipeline flag's default is its PipelineConfig field's, so a
+    bare `cli dedup` runs exactly PipelineConfig()."""
+    from wdedup_spark import cli
+
+    argv = [cmd, "--input", "i", "--workdir", "w"]
+    args = cli.build_parser().parse_args(argv + (["--base", "b"] if cmd == "dedup-incr" else []))
+    cfg = PipelineConfig()
+    fields = {
+        "k": "k", "n_perms": "n_perms", "n_bands": "n_bands",
+        "threshold": "threshold", "seed": "seed", "max_bucket": "max_bucket",
+        "containment_threshold": "containment_threshold",
+        "min_span": "substring_min_span", "sync_ranges": "sync_ranges",
+    }
+    for dest, name in fields.items():
+        assert getattr(args, dest) == getattr(cfg, name), dest
+    flags = (not args.no_simhash, not args.no_substring, args.prefix, args.containment)
+    assert flags == (
+        cfg.enable_simhash, cfg.enable_substring, cfg.enable_prefix, cfg.enable_containment,
+    )

@@ -5,6 +5,7 @@ corpora, and a losslessness check of the candidate filter itself."""
 from __future__ import annotations
 
 import random
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,7 +57,7 @@ def test_exact_threshold_boundary_no_float_loss(spark):
     _run(spark, sets, 0.9)
 
 
-def test_randomized_vs_oracle(spark):
+def _random_sets() -> dict[int, set]:
     rng = random.Random(3)
     sets: dict[int, set] = {}
     for i in range(50):
@@ -68,8 +69,33 @@ def test_randomized_vs_oracle(spark):
             sets[i] = set(rng.sample(sorted(base), keep))  # subset -> containment 1
         else:
             sets[i] = set(base)
+    return sets
+
+
+def test_randomized_vs_oracle(spark):
+    sets = _random_sets()
     for t in (0.7, 0.9, 1.0):
         _run(spark, sets, t)
+
+
+@pytest.mark.parametrize("freq_top", [0, 5])
+def test_truncated_hot_token_map_stays_lossless(spark, monkeypatch, freq_top):
+    """The order is lossless for ANY consistent total order, so the batch
+    join must equal the oracle when the hot-token map is empty (pure
+    value order) or holds fewer tokens than have df >= 2 — on the
+    randomized corpus and on a token-df flood: token -1 in every set,
+    which sorts first by value and so enters every value-ordered
+    prefix."""
+    import wdedup_spark.operators.containment as c
+
+    sets = _random_sets()
+    df = Counter(tk for s in sets.values() for tk in s)
+    assert sum(n >= 2 for n in df.values()) > freq_top  # the map truncates
+    monkeypatch.setattr(c, "FREQ_TOP", freq_top)
+    flood = {i: s | {-1} for i, s in sets.items()}
+    for t in (0.7, 1.0):
+        _run(spark, sets, t)
+        _run(spark, flood, t)
 
 
 def test_empty_and_singleton_sets(spark):
@@ -92,16 +118,23 @@ def test_prefix_bound_production_expression_vs_exact(spark):
     grid = spark.range(1, 3001).selectExpr("id as sz").crossJoin(
         spark.range(1, 101).selectExpr("id as t_pct")
     )
-    rows = []
     for t_pct in (1, 7, 50, 80, 85, 90, 95, 99, 100):
+        t = t_pct / 100.0
         got = (
             grid.filter(F.col("t_pct") == t_pct)
-            .select("sz", prefix_bound_len(F.col("sz"), t_pct / 100.0).alias("plen"))
+            .select(
+                "sz",
+                prefix_bound_len(F.col("sz"), t, 1).alias("plen"),
+                prefix_bound_len(F.col("sz"), t, 2).alias("plen2"),
+            )
             .collect()
         )
         for r in got:
-            want = r.sz - math.ceil(Fraction(t_pct, 100) * r.sz) + 1
+            alpha = math.ceil(Fraction(t_pct, 100) * r.sz)
+            want = r.sz - alpha + 1
             assert r.plen == want, (r.sz, t_pct, r.plen, want)
+            want2 = r.sz - alpha + min(2, alpha)
+            assert r.plen2 == want2, (r.sz, t_pct, r.plen2, want2)
 
 
 def test_candidate_filter_is_lossless_before_verify(spark):

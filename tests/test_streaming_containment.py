@@ -119,10 +119,10 @@ def test_freq_order_keeps_hot_token_out_of_prefixes(spark, monkeypatch):
     hot = "AAA HOT AAA"
     rows = [(f"d{i}", [hot] + [f"r{i}_{j}" for j in range(30)]) for i in range(20)]
     signed = spark.createDataFrame(rows, "conv_id string, shingles array<string>")
-    import wdedup_spark.streaming.containment_stream as cs
+    import wdedup_spark.operators.containment as c
 
     idx_freq = containment_index(signed, T)             # freq order
-    monkeypatch.setattr(cs, "FREQ_TOP", 0)
+    monkeypatch.setattr(c, "FREQ_TOP", 0)
     idx_val = containment_index(signed, T)              # value order
     assert idx_freq.freqs == {hot: 20}  # only df>=2 tokens enter the map
     n_val = idx_val.postings.filter(
@@ -191,10 +191,10 @@ def test_probe_below_index_threshold_rejected(spark, index):
 
 def test_freq_order_udf_null_and_empty_arrays(spark):
     """Review r5: a null shingle array reaching freq_order_udf crashed
-    np.fromiter (len(None)); nulls must pass through as nulls (the JVM
-    array_sort path's semantics — size(null) = -1 filters downstream)
-    and empty arrays as empty, with non-null rows still freq-ordered."""
-    from wdedup_spark.streaming.containment_stream import freq_order_udf
+    np.fromiter (len(None)); nulls must pass through as nulls
+    (size(null) = -1 filters downstream) and empty arrays as empty, with
+    non-null rows still freq-ordered."""
+    from wdedup_spark.operators.containment import freq_order_udf
     from pyspark.sql import functions as F
     from pyspark.sql.types import ArrayType, StringType
 

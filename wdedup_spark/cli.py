@@ -27,14 +27,17 @@ STAGES = ["assemble", "exact", "prefix", "sign", "candidates", "verify",
 
 
 def _add_pipeline_args(d: argparse.ArgumentParser) -> None:
+    from wdedup_spark.plans.pipeline import PipelineConfig
+
+    cfg = PipelineConfig()
     d.add_argument("--input", required=True, help="turns table: parquet path or Iceberg name")
     d.add_argument("--workdir", required=True, help="stage-output / ledger directory")
-    d.add_argument("--k", type=int, default=3)
-    d.add_argument("--n-perms", type=int, default=128)
-    d.add_argument("--n-bands", type=int, default=32)
-    d.add_argument("--threshold", type=float, default=0.8)
-    d.add_argument("--seed", type=int, default=42)
-    d.add_argument("--max-bucket", type=int, default=256)
+    d.add_argument("--k", type=int, default=cfg.k)
+    d.add_argument("--n-perms", type=int, default=cfg.n_perms)
+    d.add_argument("--n-bands", type=int, default=cfg.n_bands)
+    d.add_argument("--threshold", type=float, default=cfg.threshold)
+    d.add_argument("--seed", type=int, default=cfg.seed)
+    d.add_argument("--max-bucket", type=int, default=cfg.max_bucket)
     d.add_argument("--no-simhash", action="store_true")
     d.add_argument("--no-substring", action="store_true")
     d.add_argument("--prefix", action="store_true",
@@ -47,9 +50,10 @@ def _add_pipeline_args(d: argparse.ArgumentParser) -> None:
                         "transcript pairs (containment >= threshold over "
                         "shingle sets; dedup-incr expands only pairs "
                         "touching the new batch)")
-    d.add_argument("--containment-threshold", type=float, default=0.9)
-    d.add_argument("--min-span", type=int, default=100)
-    d.add_argument("--sync-ranges", type=int, default=8,
+    d.add_argument("--containment-threshold", type=float,
+                   default=cfg.containment_threshold)
+    d.add_argument("--min-span", type=int, default=cfg.substring_min_span)
+    d.add_argument("--sync-ranges", type=int, default=cfg.sync_ranges,
                    help="sub-stage commit granularity for the sign stage — the "
                         "reference's --sync-distance analog (wcli.cpp:109-112): "
                         "a crash mid-sign loses at most 1/N of the stage "

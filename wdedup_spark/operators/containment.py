@@ -17,17 +17,20 @@ Similarity Search", WWW'07; PPJoin, Xiao et al. WWW'08):
   ONLY those prefix tokens per set, and probing with EVERY token of
   candidate larger sets, is lossless.
 
-Plan shape (all JVM until the exact verify):
+Plan shape (all JVM except the ordering UDF and the exact verify):
 
-* global token frequencies: one aggregate over the exploded sets;
-* per-set frequency-ascending order: one groupBy(id) re-collect (the
-  only place a whole set sits in one aggregation buffer — bounded by
-  document size, same bound the signing stage carries);
+* token order: ``hot_token_freqs`` collects the top-``FREQ_TOP`` tokens
+  with df ≥ 2 into a bounded driver map, and ``freq_order_udf`` sorts
+  each set per row by ``(freqs.get(tk, 0), tk)`` — rare tokens first by
+  value, hot tokens last by ascending df.  One consistent total order
+  (losslessness needs nothing more), no frequency join and no
+  ``groupBy(id)`` re-collect; the streaming probe
+  (streaming/containment_stream.py) orders through the same pair;
 * candidate generation: inverted-index equi-join ``prefix(tk) ⨝
   tokens(tk)`` with ``size_index ≤ size_probe`` — the index side posts
   each set's RAREST tokens, so posting lists are short by construction
-  (the whole point of frequency ordering: hot tokens almost never make
-  a prefix);
+  (the whole point of frequency ordering: hot tokens cannot make a
+  prefix unless a set consists of nothing else);
 * exact containment verify on the surviving pairs only (vectorized
   intersect over the pre-distinct arrays).
 
@@ -44,7 +47,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType
+from pyspark.sql.types import DataType, DoubleType
+
+#: hot-token map bound for the token order (0 = pure token value order):
+#: at 100 TB only the head of the df distribution matters for posting
+#: length, so capping the map loses nothing
+FREQ_TOP = 100_000
 
 
 @pandas_udf(DoubleType())
@@ -99,21 +107,95 @@ def containment_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 # join needs.  The double eval is tolerated here; see verify.py for the
 # kernels where the marker is a measured win.)
 
-def prefix_bound_len(sz_col, t: float):
-    """Lossless prefix length |X| − ⌈t·|X|⌉ + 1 (≥ 1) as a Column.
+def min_overlap(sz_col, t: float):
+    """Integral minimum intersection α = ⌈t·|X|⌉ of a size-|X| set at
+    threshold ``t``, as a Column.
 
     round-before-ceil: in binary floating point ``0.9*10 ==
-    9.000000000000002`` and a naive ceil would shrink the prefix below
-    the lossless bound exactly at threshold-boundary overlaps.  The ONE
-    copy of this numeric trick — the streaming probe imports it, and a
-    Spark-grid test pins this very expression against exact rational
-    arithmetic (tests/test_containment.py)."""
-    return (sz_col - F.ceil(F.round(sz_col * t, 6)) + 1).cast("int")
+    9.000000000000002`` and a naive ceil would raise α — and shrink the
+    prefix below the lossless bound — exactly at threshold-boundary
+    overlaps.  The ONE copy of this numeric trick; a Spark-grid test
+    pins the prefix bound built on it against exact rational arithmetic
+    (tests/test_containment.py)."""
+    return F.ceil(F.round(sz_col * t, 6))
+
+
+def prefix_bound_len(sz_col, t: float, l_prefix: int):
+    """Lossless l-prefix length |X| − α + min(l, α) as a Column: with
+    α = ``min_overlap``, any pair with |A∩B| ≥ α shares at least
+    min(l, α) tokens of this prefix (the pigeonhole extended by l − 1,
+    cf. the adaptive-prefix framework of Wang/Li/Feng, SIGMOD'12).  The
+    streaming probe uses the plain 1-prefix; the batch join demands
+    l = 2 shared prefix tokens."""
+    alpha = min_overlap(sz_col, t)
+    return (sz_col - alpha + F.least(F.lit(l_prefix), alpha)).cast("int")
+
+
+def hot_token_freqs(sets: DataFrame, col: str) -> dict:
+    """The bounded hot-token map of the token order: document frequency
+    of the top-``FREQ_TOP`` tokens with df ≥ 2 in the pre-distinct array
+    column ``col``, collected to the driver.  Only df ≥ 2 tokens can be
+    shared, so only they can inflate a posting list, and only the head
+    of their distribution matters — a bounded driver map, never the
+    corpus (the bounded build side of "Design Trade-offs for a Robust
+    Dynamic Hybrid Hash Join", VLDB 2022)."""
+    # toPandas, not collect: the Arrow transfer builds no per-token Row
+    # (dupheavy's 83k-token map: 0.7 s against 1.4 s, 4-core host)
+    top = (
+        sets.select(F.explode(col).alias("tk"))
+        .groupBy("tk")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") >= 2)
+        .orderBy(F.desc("df"), "tk")
+        .limit(FREQ_TOP)
+        .toPandas()
+    )
+    return dict(zip(top["tk"].tolist(), top["df"].tolist()))
+
+
+def freq_order_udf(freqs: dict, arr_type: DataType):
+    """Vectorized ordering UDF: each (pre-distinct) token array sorted by
+    the single consistent total order ``(freqs.get(tk, 0), tk)`` — rare
+    and unseen tokens first (value order among themselves), hot tokens
+    last by ascending document frequency; an empty map is plain value
+    order.  When every df ≥ 2 token is in the map this is exactly the
+    ``(df, tk)`` order, since df = 1 tokens sort first by value under
+    both keys.  One flattened (row, df, token) sort per Arrow batch,
+    regrouped by offsets — no per-row Python sort.  ``arr_type`` is the
+    input array type (tokens may be strings or hashed longs — the sign
+    stage emits longs)."""
+
+    @pandas_udf(arr_type)
+    def _ordered(arr: pd.Series) -> pd.Series:
+        n = len(arr)
+        if n == 0:
+            return pd.Series([], dtype=object)
+        # null arrays stay null (size(null) = -1 is filtered downstream,
+        # never a crash here)
+        vals = [x if x is not None else [] for x in arr]
+        lens = np.fromiter((len(x) for x in vals), dtype=np.int64, count=n)
+        if lens.sum() == 0:
+            return arr
+        flat = pd.DataFrame(
+            {
+                "r": np.repeat(np.arange(n, dtype=np.int64), lens),
+                "tk": np.concatenate([np.asarray(x) for x in vals if len(x)]),
+            }
+        )
+        flat["df"] = flat["tk"].map(freqs).fillna(0).astype(np.int64)
+        flat = flat.sort_values(["r", "df", "tk"], kind="stable")
+        bounds = np.cumsum(lens)[:-1]
+        parts = np.split(flat["tk"].to_numpy(), bounds)
+        return pd.Series(
+            [None if x is None else p for x, p in zip(arr, parts)]
+        )
+
+    return _ordered
 
 
 def containment_join(
     shingled: DataFrame,
-    threshold: float = 0.9,
+    threshold: float,
     id_col: str = "conv_id",
     shingle_col: str = "shingles",
     new_col: str | None = None,
@@ -125,12 +207,12 @@ def containment_join(
 
     ``new_col``: incremental mode — ``shingled`` carries a boolean batch
     flag and only pairs TOUCHING a flagged set are generated (old×old
-    pairs were emitted by previous increments).  The token order is
-    recomputed over old ∪ new each day — the prefix filter is lossless
+    pairs were emitted by previous increments).  The hot-token map is
+    rebuilt over old ∪ new each day — the prefix filter is lossless
     for ANY single consistent total order, so no frozen-frequency state
-    needs committing; the old side costs one narrow JVM re-explode of
-    the committed shingle arrays (the same economy as the LSH channel's
-    re-banding), never re-tokenization or Python."""
+    needs committing; the old side re-reads and re-orders the committed
+    shingle arrays per row (the same economy as the LSH channel's
+    re-banding), never re-tokenizes."""
     t = float(threshold)
     if not (0.0 < t <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {t}")
@@ -140,50 +222,30 @@ def containment_join(
         *flag,
     )
     sized = sets.withColumn("sz", F.size("sh")).filter(F.col("sz") > 0)
-    tok = sized.select(
-        "id", "sz", F.explode("sh").alias("tk"), *(["nw"] if new_col else [])
-    )
-
-    # global ascending frequency; ties broken by token value so every
-    # set is ordered by the SAME total order (required for the filter)
-    freq = tok.groupBy("tk").agg(F.count(F.lit(1)).alias("df"))
+    order = freq_order_udf(hot_token_freqs(sized, "sh"), sets.schema["sh"].dataType)
     # checkpoint: the ordered sets feed BOTH the prefix index and (r6)
-    # the position-carrying probe side
-    ordered = (
-        tok.join(freq, "tk")
-        .groupBy("id")
-        .agg(
-            F.first("sz").alias("sz"),
-            *( [F.first("nw").alias("nw")] if new_col else [] ),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("df", "tk"))), lambda s: s.tk
-            ).alias("otoks"),
-        )
-        .localCheckpoint(eager=False)
-    )
+    # the position-carrying probe side — without it the ordering UDF
+    # runs once per side
+    ordered = sized.select(
+        "id", "sz", *(["nw"] if new_col else []), order(F.col("sh")).alias("otoks")
+    ).localCheckpoint(eager=False)
     # l-PREFIX candidate generation (r6).  The plain 1-prefix filter is
     # nearly unselective on corpora whose "rare" tokens still have
     # document frequency in the tens: at sf1.0 it admitted 16.9M
     # candidate pairs — ~1.3% of ALL pairs — and the exact array verify
-    # on them was the whole query's cost.  The l-prefix generalization
-    # (the pigeonhole extended by l−1: with prefix length
-    # |S| − α + l, any pair with |A∩B| ≥ α shares ≥ l tokens of the
-    # prefix — cf. the adaptive-prefix framework of Wang/Li/Feng,
-    # SIGMOD'12) lets us demand l=2 shared prefix tokens via a count
-    # aggregate, which kills the one-shared-token junk mass before
-    # anything ships a set array.  α = ceil(t·|S|) is the integral
-    # minimum intersection (round-before-ceil guard as everywhere);
+    # on them was the whole query's cost.  Demanding l=2 shared prefix
+    # tokens (prefix_bound_len) via a count aggregate kills the
+    # one-shared-token junk mass before anything ships a set array;
     # sets with α < l fall back to l_eff = α, so tiny sets keep the
     # plain lossless bound.
     L_PREFIX = 2
-    alpha = F.ceil(F.round(F.col("sz") * t, 6))
-    l_eff = F.least(F.lit(L_PREFIX), alpha)
-    plen = (F.col("sz") - alpha + l_eff).cast("int")
     prefix = ordered.select(
         F.col("id").alias("id_i"),
         F.col("sz").alias("sz_i"),
         *( [F.col("nw").alias("nw_i")] if new_col else [] ),
-        F.posexplode(F.slice("otoks", 1, plen)).alias("pos_i", "tk"),
+        F.posexplode(
+            F.slice("otoks", 1, prefix_bound_len(F.col("sz"), t, L_PREFIX))
+        ).alias("pos_i", "tk"),
     )
     probe = ordered.select(
         F.col("id").alias("id_p"), F.col("sz").alias("sz_p"),
@@ -196,7 +258,7 @@ def containment_join(
     # of a pair with |A∩B| ≥ α satisfies
     #   α <= j + min(sz_i − 1 − pos_i, sz_p − 1 − pos_p)
     # because both lists share one global total order.
-    alpha_i = F.ceil(F.round(F.col("sz_i") * t, 6))
+    alpha_i = min_overlap(F.col("sz_i"), t)
     l_eff_i = F.least(F.lit(L_PREFIX), alpha_i)
     matched = prefix.join(probe, "tk").filter(
         (F.col("sz_i") <= F.col("sz_p"))
@@ -214,15 +276,12 @@ def containment_join(
     # count shared prefix tokens per DIRECTED (smaller, larger) pair and
     # demand l_eff of them; equal-size pairs appear in both directions
     # with the same count, and least/greatest + distinct then emits each
-    # unordered pair once, exactly as before
+    # unordered pair once
     counted = matched.groupBy("id_i", "id_p").agg(
-        F.count(F.lit(1)).alias("_cnt"), F.min("sz_i").alias("_szi")
+        F.count(F.lit(1)).alias("_cnt"), F.min(l_eff_i).alias("_l")
     )
     cands = (
-        counted.filter(
-            F.col("_cnt")
-            >= F.least(F.lit(L_PREFIX), F.ceil(F.round(F.col("_szi") * t, 6)))
-        )
+        counted.filter(F.col("_cnt") >= F.col("_l"))
         .select(
             F.least("id_i", "id_p").alias("conv_a"),
             F.greatest("id_i", "id_p").alias("conv_b"),

@@ -6,24 +6,18 @@ stream side is per-row and stateless (shingle, order, slice-flag,
 explode), and the corpus is reached through ONE stream-static equi-join.
 
 Order choice: the prefix filter (operators/containment.py) is lossless
-under ANY single consistent total token order.  The batch operator
-orders by exact global frequency (shortest postings), but computing
-corpus frequencies for a stream row would need a stream-side
-aggregation — stateful.  Round 4 used TOKEN VALUE order (zero state,
-same losslessness) at the cost of unoptimized posting lists: a hot
-boilerplate token can land in a value-ordered prefix and fatten its
-posting list to O(corpus).  Round 5 (VERDICT r4 #3) restores the
-frequency optimization WITHOUT state: the index build collects the
-corpus's top-``FREQ_TOP`` hot tokens (df ≥ 2) into a bounded driver map
-that ships to executors inside the ordering UDF's closure; both sides
-order by ``(freqs.get(tk, 0), tk)`` — unmapped (rare/unseen) tokens
-sort first by value, mapped hot tokens sort last by ascending df.  That
-is still a single consistent total order (losslessness intact), still
-stateless on the stream (the map is static, broadcast once per query),
-and hot tokens now structurally cannot enter a prefix unless a set
-consists of nothing else.  The map is bounded by ``FREQ_TOP`` — at
-100 TB only the head of the token df distribution matters for posting
-length, so capping it loses nothing.
+under ANY single consistent total token order, and batch and stream
+share ONE: ``hot_token_freqs`` builds a bounded driver map of the
+corpus's top-``FREQ_TOP`` hot tokens (df ≥ 2) and ``freq_order_udf``
+sorts each set per row by ``(freqs.get(tk, 0), tk)`` — unmapped
+(rare/unseen) tokens first by value, mapped hot tokens last by ascending
+df.  The map is built once at index time and ships to executors inside
+the UDF's closure, so the stream side stays stateless (exact corpus
+frequencies for a stream row would need a stream-side aggregation), and
+hot tokens structurally cannot enter a prefix unless a set consists of
+nothing else.  Plain value order (an empty map) would let a hot
+boilerplate token land in every value-ordered prefix and fatten its
+posting list to O(corpus).
 
 The index records its build ``threshold`` AND shingle ``k``
 (ADVICE r4): the prefix postings are sized for the threshold, and the
@@ -54,66 +48,16 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DataType
 
-from wdedup_spark.operators.containment import containment_udf, prefix_bound_len
+from wdedup_spark.operators.containment import (
+    containment_udf,
+    freq_order_udf,
+    hot_token_freqs,
+    prefix_bound_len,
+)
 from wdedup_spark.operators.minhash import add_shingles
-
-#: hot-token map bound for the index's frequency order (0 = pure token
-#: value order): at 100 TB only the head of the df distribution matters
-#: for posting length
-FREQ_TOP = 100_000
-
-
-def freq_order_udf(freqs: dict, arr_type: DataType):
-    """Vectorized ordering UDF: each (pre-distinct) token array sorted by
-    the single consistent total order ``(freqs.get(tk, 0), tk)`` — rare
-    and unseen tokens first (value order among themselves), hot tokens
-    last by ascending document frequency.  One flattened
-    (row, df, token) sort per Arrow batch, regrouped by offsets — no
-    per-row Python sort.  ``arr_type`` is the input array type (tokens
-    may be strings or hashed longs — the sign stage emits longs)."""
-
-    @pandas_udf(arr_type)
-    def _ordered(arr: pd.Series) -> pd.Series:
-        n = len(arr)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        # null arrays stay null (the round-4 array_sort path's semantics:
-        # size(null) = -1 is filtered downstream, never a crash here)
-        vals = [x if x is not None else [] for x in arr]
-        lens = np.fromiter((len(x) for x in vals), dtype=np.int64, count=n)
-        if lens.sum() == 0:
-            return arr
-        flat = pd.DataFrame(
-            {
-                "r": np.repeat(np.arange(n, dtype=np.int64), lens),
-                "tk": np.concatenate([np.asarray(x) for x in vals if len(x)]),
-            }
-        )
-        flat["df"] = flat["tk"].map(freqs).fillna(0).astype(np.int64)
-        flat = flat.sort_values(["r", "df", "tk"], kind="stable")
-        bounds = np.cumsum(lens)[:-1]
-        parts = np.split(flat["tk"].to_numpy(), bounds)
-        return pd.Series(
-            [None if x is None else p for x, p in zip(arr, parts)]
-        )
-
-    return _ordered
-
-
-def _ordered_sets(distinct_arr, freqs: dict, arr_type: DataType):
-    """The shared ordering Column: the freq UDF when a hot-token map
-    exists, plain JVM ``array_sort`` otherwise (the two orders coincide
-    when the map is empty — key (0, tk) degenerates to value order)."""
-    if freqs:
-        return freq_order_udf(freqs, arr_type)(distinct_arr)
-    return F.array_sort(distinct_arr)
 
 
 @dataclass(frozen=True)
@@ -138,7 +82,7 @@ class ContainmentIndex:
 
 def containment_index(
     signed: DataFrame,
-    threshold: float = 0.9,
+    threshold: float,
     id_col: str = "conv_id",
     shingle_col: str = "shingles",
     k: int = 3,
@@ -147,9 +91,7 @@ def containment_index(
     the committed sign stage outputs, exactly like ``index_for_stream``.
 
     ``k`` is recorded (not applied — ``signed`` is already shingled) so
-    the probe can validate its own shingling against the index's.
-    ``FREQ_TOP`` bounds the hot-token map (0 = pure value order, the
-    round-4 behavior)."""
+    the probe can validate its own shingling against the index's."""
     t = float(threshold)
     if not (0.0 < t <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {t}")
@@ -157,26 +99,14 @@ def containment_index(
         F.col(id_col).alias("index_id"),
         F.array_distinct(F.col(shingle_col)).alias("dsh"),
     )
-    # document frequency over the distinct sets; only df >= 2 tokens
-    # can inflate a posting list, and only the head of the df
-    # distribution matters — a bounded driver map, never the corpus
-    rows = (
-        distinct.select(F.explode("dsh").alias("tk"))
-        .groupBy("tk")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= 2)
-        .orderBy(F.desc("df"), "tk")
-        .limit(FREQ_TOP)
-        .collect()
-    )
-    freqs = {r["tk"]: r["df"] for r in rows}
-    atype = distinct.schema["dsh"].dataType
+    freqs = hot_token_freqs(distinct, "dsh")
+    order = freq_order_udf(freqs, distinct.schema["dsh"].dataType)
     sets = (
-        distinct.select("index_id", _ordered_sets(F.col("dsh"), freqs, atype).alias("sh"))
+        distinct.select("index_id", order(F.col("dsh")).alias("sh"))
         .withColumn("sz", F.size("sh"))
         .filter(F.col("sz") > 0)
     )
-    plen = prefix_bound_len(F.col("sz"), t)
+    plen = prefix_bound_len(F.col("sz"), t, 1)
     exploded = sets.select(
         "index_id",
         F.col("sz").alias("index_sz"),
@@ -248,18 +178,18 @@ def stream_containment_flags(
     # hot-token map — per-row, stateless, same total order as the
     # postings were built under.
     shingled = add_shingles(docs, "doc", k=k)
-    atype = shingled.schema["shingles"].dataType
+    order = freq_order_udf(index.freqs, shingled.schema["shingles"].dataType)
     signed = (
         shingled.select(
             F.col("conv_id").alias("stream_id"),
-            _ordered_sets(F.array_distinct("shingles"), index.freqs, atype).alias("sh"),
+            order(F.array_distinct("shingles")).alias("sh"),
         )
         .withColumn("sz", F.size("sh"))
         .filter(F.col("sz") > 0)
     )
     exploded = signed.select(
         "stream_id", "sh", "sz",
-        prefix_bound_len(F.col("sz"), t).alias("plen"),
+        prefix_bound_len(F.col("sz"), t, 1).alias("plen"),
         F.posexplode("sh").alias("pos", "tk"),
     )
     cands = (
