@@ -123,7 +123,8 @@ def q_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _signed_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Shared candidate scaffolding: documents → fused shingle+MinHash
-    signatures → uncapped LSH candidates.  Returns (signed, cands);
+    signatures → uncapped LSH candidates.  Returns (docs, cands) with
+    ``docs`` the (conv_id, doc) frame the candidates were signed from;
     every driver query that needs MinHash candidates goes through here so
     the shingle/signature config lives in exactly one place."""
     from wdedup_spark.operators.lsh import minhash_lsh_candidates
@@ -132,22 +133,25 @@ def _signed_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Dat
     docs = _fan(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )
-    # fused kernel: shingles + MinHash in one tokenization pass; checkpoint
-    # because both the banding path and the verify join consume it
+    # fused kernel: shingles + MinHash in one tokenization pass
     signed = add_signatures(
         docs, "doc", k=K, n_perms=N_PERMS,
         enable_simhash=False, enable_substring=False,
-    ).drop("doc").localCheckpoint(eager=False)
+    ).drop("doc")
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
                                    max_bucket=None)
-    return signed, cands
+    return docs, cands
 
 
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash candidates verified against their documents by the
+    pipeline's verify engine (exact k=K shingle Jaccard >= JACCARD_T)."""
     from wdedup_spark.operators.verify import verify_pairs
 
-    signed, cands = _signed_candidates(spark, sf_dir)
-    return verify_pairs(cands, signed, threshold=JACCARD_T)
+    docs, cands = _signed_candidates(spark, sf_dir)
+    tagged = cands.withColumn("via", F.array(F.lit("minhash")))
+    # no substring candidates: min_span is never read
+    return verify_pairs(tagged, docs, K, JACCARD_T, min_span=0)
 
 
 def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -314,7 +318,7 @@ def q_edit_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from wdedup_spark.operators.verify import edit_similarity_bytes_udf
 
-    _signed, cands = _signed_candidates(spark, sf_dir)
+    _docs, cands = _signed_candidates(spark, sf_dir)
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )

@@ -39,11 +39,18 @@ def _signed(conv):
     )
 
 
+def _verified(cands, conv):
+    """MinHash candidates through the verify engine, against ``conv``'s
+    documents (no substring candidates: min_span is never read)."""
+    tagged = cands.withColumn("via", F.array(F.lit("minhash")))
+    return verify_pairs(tagged, conv.select("conv_id", "doc"), K, THRESHOLD, min_span=0)
+
+
 def test_lsh_verified_recall(spark, conv, oracle_pairs_high, tiny):
     signed = _signed(conv)
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
                                    max_bucket=None)
-    verified = verify_pairs(cands, signed, threshold=THRESHOLD)
+    verified = _verified(cands, conv)
     got = {(r["conv_a"], r["conv_b"]) for r in verified.collect()}
     want = {
         (r.conv_a, r.conv_b) for r in oracle_pairs_high.itertuples(index=False)
@@ -65,7 +72,7 @@ def test_verified_jaccard_values_match_oracle(spark, conv, oracle_pairs_high):
     signed = _signed(conv)
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
                                    max_bucket=None)
-    verified = verify_pairs(cands, signed, threshold=THRESHOLD).toPandas()
+    verified = _verified(cands, conv).toPandas()
     want = {
         (r.conv_a, r.conv_b): r.jaccard for r in oracle_pairs_high.itertuples(index=False)
     }

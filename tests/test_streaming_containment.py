@@ -41,6 +41,16 @@ def index(spark, corpus):
     return containment_index(signed, T)
 
 
+def test_index_pins_ordered_sets(index):
+    """A stream runs its static side again every micro-batch, so the
+    index must not re-run the ordering UDF per consumer: both static
+    frames read the pinned ordered sets."""
+    for df in (index.postings, index.sets):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln and "_ordered" in ln]
+        assert evals == [], plan
+
+
 def test_stream_containment_both_directions(spark, tmp_path, corpus, index):
     docs, long, short = corpus
     new_docs = [

@@ -1,6 +1,6 @@
-"""The pipeline's verify stage: ``verify.verify_kernel`` against a per-row
-oracle built from the standalone UDFs, the plan ``build_verify`` runs it
-in, and the one-evaluation plans of the marked per-row UDFs."""
+"""The verify engine: ``verify.verify_kernel`` against a per-row oracle
+built from the standalone UDFs, the plan ``verify.verify_pairs`` runs it
+in, and the one-evaluation plans of the verifying queries."""
 
 from __future__ import annotations
 
@@ -13,8 +13,8 @@ import pytest
 
 from wdedup_spark.operators.minhash import sign_udf
 from wdedup_spark.operators.substring import common_run_udf
-from wdedup_spark.operators.verify import jaccard_udf, verify_kernel
-from wdedup_spark.plans.pipeline import EDIT_MARGIN, PipelineConfig, build_verify
+from wdedup_spark.operators.verify import jaccard_udf, verify_kernel, verify_pairs
+from wdedup_spark.plans.pipeline import EDIT_MARGIN, PipelineConfig
 
 from test_edit_similarity import _lev
 
@@ -101,7 +101,7 @@ def _oracle(pdf, edit_floor):
         if is_sub and run[i] >= MIN_SPAN:
             via.append("substring")
         if via:
-            want[(r.conv_a, r.conv_b)] = (jac[i] if ok_jac else None, via)
+            want[(r.conv_a, r.conv_b)] = (jac[i] if ok_jac else None, run[i] if is_sub else None, via)
     return want
 
 
@@ -116,14 +116,19 @@ def test_kernel_matches_per_row_oracle(spark, edit_floor):
     want = _oracle(pdf, edit_floor)
     got_df = verify_kernel(pdf, K, THRESHOLD, MIN_SPAN, edit_floor, EDIT_T)
     got = {
-        (r.conv_a, r.conv_b): (None if np.isnan(r.jaccard) else r.jaccard, r.via)
+        (r.conv_a, r.conv_b): (
+            None if np.isnan(r.jaccard) else r.jaccard,
+            None if pd.isna(r.common_run) else int(r.common_run),
+            r.via,
+        )
         for r in got_df.itertuples(index=False)
     }
     assert len(got) == len(got_df)
-    # bit-identical Jaccard values, identical channel lists
+    # bit-identical Jaccard values, the common run on every substring
+    # candidate (null elsewhere), identical channel lists
     assert got == want
     # the fixture reaches every channel, and the edit-off run never edits
-    vias = {v for _, vs in want.values() for v in vs}
+    vias = {v for _, _, vs in want.values() for v in vs}
     assert vias == {"jaccard", "substring"} | ({"edit"} if edit_floor is not None else set())
 
 
@@ -143,7 +148,7 @@ def test_kernel_verdicts_do_not_depend_on_batching():
 def test_kernel_empty_batch():
     pdf = _pairs(_corpus()).iloc[:0]
     out = verify_kernel(pdf, K, THRESHOLD, MIN_SPAN, 0.35, EDIT_T)
-    assert list(out.columns) == ["conv_a", "conv_b", "jaccard", "via"]
+    assert list(out.columns) == ["conv_a", "conv_b", "jaccard", "common_run", "via"]
     assert len(out) == 0
     # an empty batch still converts to the stage's Arrow schema
     pa.Array.from_pandas(out["via"], type=pa.list_(pa.string()))
@@ -176,28 +181,51 @@ def test_build_verify_plan_shape(spark, verify_edit):
         "conv_a string, conv_b string, via array<string>",
     )
     cfg = PipelineConfig(verify_edit=verify_edit)
-    verified = build_verify(cands, docs, cfg)
+    edit_floor = cfg.threshold - EDIT_MARGIN if verify_edit else None
+    verified = verify_pairs(
+        cands, docs, cfg.k, cfg.threshold, cfg.substring_min_span, edit_floor, cfg.edit_threshold
+    )
     nodes = _nodes(_plan(verified))
     assert sum(n.endswith("Join") for n in nodes) == 2, nodes
     assert nodes.count("MapInPandas") == 1, nodes
     assert "ArrowEvalPython" not in nodes, nodes
     assert not [n for n in nodes if "Aggregate" in n or n in ("Union", "Except")], nodes
     # and it runs: the 30-token docs overlap in 29 of 30 tokens (27 of 29
-    # shingles); a pair without jaccard in via carries a NULL, not a NaN
-    rows = {(r.conv_a, r.conv_b): (r.jaccard, list(r.via)) for r in verified.collect()}
+    # shingles); a pair without jaccard in via carries a NULL, not a NaN,
+    # and only substring candidates carry a common run
+    rows = {
+        (r.conv_a, r.conv_b): (r.jaccard, r.common_run, list(r.via)) for r in verified.collect()
+    }
     assert rows == {
-        ("c0", "c1"): (27 / 29, ["jaccard"]),
-        ("c1", "c2"): (27 / 29, ["jaccard"]),
-        ("c6", "c7"): (None, ["substring"]),
+        ("c0", "c1"): (27 / 29, None, ["jaccard"]),
+        ("c1", "c2"): (27 / 29, 29, ["jaccard"]),
+        ("c6", "c7"): (None, 110, ["substring"]),
     }
 
 
+def test_substring_query_drops_jaccard_only_pairs(spark):
+    """The kernel keeps Jaccard passes too, so the substring query must
+    filter on the run: identical copies shorter than ``min_span`` share an
+    anchor and every k-gram (Jaccard 1.0) yet are no substring pair."""
+    from wdedup_spark.operators.substring import substring_candidates
+
+    def run(n_tokens):
+        doc = " ".join(f"t{j}" for j in range(n_tokens))
+        docs = spark.createDataFrame([(0, doc), (1, doc)], "conv_id long, doc string")
+        out = substring_candidates(docs, min_span=100, max_bucket=None).collect()
+        return [(r.conv_a, r.conv_b, r.common_run) for r in out]
+
+    assert run(90) == []
+    assert run(110) == [(0, 1, 110)]
+
+
 def test_marked_udfs_evaluate_once(spark, tmp_path):
-    """The asNondeterministic markers keep each per-row UDF to one
-    ArrowEvalPython node although a filter sits right on its value."""
+    """Each verifier runs once per pair although a filter sits right on
+    its value: the verify engine is one MapInPandas node with no per-row
+    UDF beside it, and the asNondeterministic marker keeps the byte-level
+    edit UDF to one ArrowEvalPython node."""
     import __spark_entry__ as entrymod
     from wdedup_spark.operators.substring import substring_candidates
-    from wdedup_spark.operators.verify import verify_pairs
 
     texts = [" ".join(f"t{j}" for j in range(i, i + 120)) for i in range(6)]
 
@@ -207,14 +235,16 @@ def test_marked_udfs_evaluate_once(spark, tmp_path):
             if "ArrowEvalPython" in line and udf_name in line
         )
 
-    shingled = spark.createDataFrame(
-        [(i, [i, i + 1]) for i in range(4)], "conv_id long, shingles array<long>"
-    )
-    pairs = spark.createDataFrame([(0, 1), (1, 2)], "conv_a long, conv_b long")
-    assert evals(verify_pairs(pairs, shingled), "jaccard_udf") == 1
+    def one_kernel(df):
+        nodes = _nodes(_plan(df))
+        return nodes.count("MapInPandas") == 1 and "ArrowEvalPython" not in nodes
 
     docs = spark.createDataFrame(list(enumerate(texts)), "conv_id long, doc string")
-    assert evals(substring_candidates(docs, max_bucket=None), "common_run_udf") == 1
+    pairs = spark.createDataFrame(
+        [(0, 1, ["minhash"]), (1, 2, ["minhash"])], "conv_a long, conv_b long, via array<string>"
+    )
+    assert one_kernel(verify_pairs(pairs, docs, 3, 0.8, 100))
+    assert one_kernel(substring_candidates(docs, max_bucket=None))
 
     pd.DataFrame({"doc_id": range(6), "text": texts}).to_parquet(tmp_path / "documents.parquet")
     edit = entrymod.queries()["edit_dup_pairs"](spark, str(tmp_path))

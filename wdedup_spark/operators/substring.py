@@ -10,7 +10,7 @@ content-defined, alignment-free sample with the guarantee
 
 Pipeline shape mirrors the LSH path exactly (anchor = band bucket):
   fingerprint (narrow, pandas UDF) → explode anchors → bucket groupBy →
-  candidate pairs → verify longest common token run (pandas UDF).
+  candidate pairs → verify longest common token run (verify.verify_pairs).
 
 vs a true distributed suffix array (per-partition suffix arrays + k-mer
 anchor join across partitions, SURVEY.md §2.1): winnowing gives the same
@@ -109,7 +109,8 @@ def _common_run(ta: np.ndarray, tb: np.ndarray, k: int) -> int:
 @pandas_udf(IntegerType())
 def common_run_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Longest common token run between two texts (exact for runs >= the
-    seed width; see _common_run).  Runs only on anchor-surviving pairs.
+    seed width; see _common_run): the per-row reference for the common
+    run ``verify.verify_kernel`` decides substring candidates with.
     Both sides of the batch are tokenized and hashed in one
     ``split_hash_batch`` pass; null texts count as empty."""
     n = len(a)
@@ -124,12 +125,6 @@ def common_run_udf(a: pd.Series, b: pd.Series) -> pd.Series:
             count=n,
         )
     )
-
-
-# evaluated once per pair: substring_candidates filters right on its
-# value, and the optimizer would otherwise evaluate it a second time
-# under the pushed-down filter (see the note on jaccard_udf in verify.py)
-common_run_udf = common_run_udf.asNondeterministic()
 
 
 def substring_candidates(
@@ -152,8 +147,8 @@ def substring_candidates(
     star edges.
     """
     # checkpoint: the winnowing pass feeds the anchor explode AND both
-    # sides of the common-run verify join — without this it executes
-    # three times per query (r6)
+    # sides of the verify join — without this it executes three times
+    # per query (r6)
     fp = df.select(
         F.col(id_col).alias("id"), F.col(text_col).alias("doc"),
         fingerprint_udf(k, w)(F.col(text_col)).alias("anchors"),
@@ -161,13 +156,17 @@ def substring_candidates(
     anchored = fp.select("id", F.explode("anchors").alias("bucket")).withColumn(
         "band", F.lit(0)
     )
-    cands = candidate_pairs(anchored, max_bucket)
-    docs = fp.select("id", "doc")
-    verified = (
-        cands.join(docs.select(F.col("id").alias("conv_a"), F.col("doc").alias("doc_a")), "conv_a")
-        .join(docs.select(F.col("id").alias("conv_b"), F.col("doc").alias("doc_b")), "conv_b")
-        .withColumn("common_run", common_run_udf(F.col("doc_a"), F.col("doc_b")))
+    # local import: verify imports this module's _common_run
+    from wdedup_spark.operators.verify import verify_pairs
+
+    cands = candidate_pairs(anchored, max_bucket).withColumn(
+        "via", F.array(F.lit("substring"))
+    )
+    docs = fp.select(F.col("id").alias("conv_id"), "doc")
+    # the kernel also keeps Jaccard passes (threshold 1.0: identical
+    # k-gram sets), so the run filter decides
+    return (
+        verify_pairs(cands, docs, k, 1.0, min_span)
         .filter(F.col("common_run") >= min_span)
         .select("conv_a", "conv_b", "common_run")
     )
-    return verified

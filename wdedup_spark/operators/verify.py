@@ -4,10 +4,10 @@ LSH/SimHash candidates are probabilistic; verification makes the final
 pair set exact (false positives die here; false negatives are bounded by
 the band/bucket recall, tested against the O(n²) oracle).
 
-``verify_pairs`` (the queries) joins candidates to the committed
-shingle-set table and runs ``jaccard_udf``.  ``verify_kernel`` (the
-pipeline) decides every channel for one Arrow batch of candidates joined
-to their documents, from one tokenization of those documents.
+One engine decides every candidate pair, for the pipeline and the
+queries alike: ``verify_pairs`` joins candidates to their documents and
+runs ``verify_kernel`` in one ``mapInPandas`` pass.  ``jaccard_udf`` and
+``substring.common_run_udf`` are only its per-row references.
 """
 
 from __future__ import annotations
@@ -92,37 +92,13 @@ def edit_similarity_bytes_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-# r6 (guide §4.4): these kernels sit directly under their own threshold
+# r6 (guide §4.4): this kernel sits directly under its own threshold
 # filter (withColumn + filter + select); the optimizer pushes the filter
 # below the projection and evaluates the UDF TWICE per surviving row
-# (two ArrowEvalPython nodes in the r5 plans).  They are pure functions,
-# but marking them non-deterministic forbids the duplicating rewrite —
+# (two ArrowEvalPython nodes in the r5 plans).  It is a pure function,
+# but marking it non-deterministic forbids the duplicating rewrite —
 # one evaluation per row, identical values.
-jaccard_udf = jaccard_udf.asNondeterministic()
 edit_similarity_bytes_udf = edit_similarity_bytes_udf.asNondeterministic()
-
-
-def verify_pairs(
-    pairs: DataFrame,
-    shingled: DataFrame,
-    id_col: str = "conv_id",
-    shingle_col: str = "shingles",
-    threshold: float = 0.8,
-) -> DataFrame:
-    """(conv_a, conv_b) × (id, shingles) → pairs with exact jaccard >= t.
-
-    Output: (conv_a, conv_b, jaccard).
-    """
-    sh = shingled.select(F.col(id_col).alias("id"), F.col(shingle_col).alias("sh"))
-    a = sh.select(F.col("id").alias("conv_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("conv_b"), F.col("sh").alias("sh_b"))
-    return (
-        pairs.join(a, "conv_a")
-        .join(b, "conv_b")
-        .withColumn("jaccard", jaccard_udf(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("jaccard") >= threshold)
-        .select("conv_a", "conv_b", "jaccard")
-    )
 
 
 def verify_kernel(
@@ -136,9 +112,10 @@ def verify_kernel(
     """Decide every verify channel for one batch of candidate pairs.
 
     ``pdf`` holds (conv_a, conv_b, via, doc_a, doc_b); the result holds
-    the verified rows only, as (conv_a, conv_b, jaccard, via) with ``via``
-    the sorted subset of {edit, jaccard, substring} that passed and
-    ``jaccard`` null unless ``via`` contains jaccard:
+    the verified rows only, as (conv_a, conv_b, jaccard, common_run, via)
+    with ``via`` the sorted subset of {edit, jaccard, substring} that
+    passed, ``jaccard`` null unless ``via`` contains jaccard and
+    ``common_run`` null unless the candidate's ``via`` contains substring:
 
     * jaccard — exact k-shingle Jaccard >= ``threshold``, over the sign
       stage's own batch kernels, so the value is bit-identical to
@@ -170,9 +147,10 @@ def verify_kernel(
     )
     ok_jac = jac >= threshold
     is_sub = np.fromiter((("substring" in v) for v in pdf["via"]), dtype=bool, count=n)
-    ok_sub = np.zeros(n, dtype=bool)
+    run = np.zeros(n, dtype=np.int32)
     for i in np.flatnonzero(is_sub):
-        ok_sub[i] = _common_run(toks(ia[i]), toks(ib[i]), DEFAULT_KGRAM) >= min_span
+        run[i] = _common_run(toks(ia[i]), toks(ib[i]), DEFAULT_KGRAM)
+    ok_sub = is_sub & (run >= min_span)
     ok_edit = np.zeros(n, dtype=bool)
     if edit_floor is not None:
         for i in np.flatnonzero(~ok_jac & ((jac >= edit_floor) | is_sub)):
@@ -184,10 +162,46 @@ def verify_kernel(
             "conv_a": pdf["conv_a"].to_numpy()[keep],
             "conv_b": pdf["conv_b"].to_numpy()[keep],
             "jaccard": np.where(ok_jac, jac, np.nan)[keep],
+            "common_run": pd.arrays.IntegerArray(run[keep], ~is_sub[keep]),
             # object dtype even when empty: Arrow cannot read a float64
             # column as array<string>
             "via": pd.Series(
                 [[nm for nm, ok in channels if ok[i]] for i in keep], dtype=object
             ),
         }
+    )
+
+
+def verify_pairs(
+    cands: DataFrame,
+    docs: DataFrame,
+    k: int,
+    threshold: float,
+    min_span: int,
+    edit_floor: float | None = None,
+    edit_threshold: float | None = None,
+) -> DataFrame:
+    """``cands`` (conv_a, conv_b, via) joined to ``docs`` (conv_id, doc)
+    once per pair side, then ONE ``mapInPandas`` pass of
+    ``verify_kernel``: its verified rows and columns.  ``edit_threshold``
+    is read only with ``edit_floor``."""
+
+    def side(s: str) -> DataFrame:
+        return docs.select(F.col("conv_id").alias(f"conv_{s}"), F.col("doc").alias(f"doc_{s}"))
+
+    pairs = (
+        cands.join(side("a"), "conv_a")
+        .join(side("b"), "conv_b")
+        .select("conv_a", "conv_b", "via", "doc_a", "doc_b")
+    )
+
+    def _verify(batches):
+        for pdf in batches:
+            yield verify_kernel(pdf, k, threshold, min_span, edit_floor, edit_threshold)
+
+    id_type = cands.schema["conv_a"].dataType.simpleString()
+    return pairs.mapInPandas(
+        _verify,
+        f"conv_a {id_type}, conv_b {id_type}, jaccard double, common_run int, "
+        "via array<string>",
     )

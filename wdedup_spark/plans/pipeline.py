@@ -20,7 +20,8 @@ Scale architecture (the 100 TB story):
   ids, never documents; worst-case wide-stage row is ~1 KB regardless of
   conversation length.  Verify is the one stage that joins documents,
   once per pair side, and only for candidate pairs: one Arrow kernel per
-  batch then tokenizes them once and decides every channel (build_verify);
+  batch then tokenizes them once and decides every channel
+  (verify.verify_pairs, the queries' verifier too);
 * candidate pair volume is bounded per bucket (lsh.candidate_pairs_multi
   max_bucket + star edges), so one pathological bucket cannot explode
   the verify stage;
@@ -44,14 +45,15 @@ from wdedup_spark.operators.cluster import cluster_assignments, incremental_upda
 from wdedup_spark.operators.exact import add_fingerprint
 from wdedup_spark.operators.minhash import add_signatures
 from wdedup_spark.operators.simhash import simhash_chunks
-from wdedup_spark.operators.verify import verify_kernel
+from wdedup_spark.operators.verify import verify_pairs
 from wdedup_spark.sources.ledger import StageLedger
 
 
 #: bumped when the stage DAG / committed schemas change shape, so ledgers
 #: written by an incompatible pipeline layout are fenced out on resume
-#: (v2: fingerprint committed by the assemble stage; members stage removed)
-PIPELINE_VERSION = 2
+#: (v2: fingerprint committed by the assemble stage; members stage removed;
+#: v3: verify commits the common run)
+PIPELINE_VERSION = 3
 
 # Fixed tuning constants.  They are not PipelineConfig fields; cfg.fence()
 # hashes them with the fields, so changing one fences out old outputs.
@@ -241,37 +243,6 @@ def build_candidates(
     return (
         agg.select("conv_a", "conv_b", via.alias("via"))
         .filter(F.size("via") > 0)
-    )
-
-
-def build_verify(cands: DataFrame, docs: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """The pipeline's verify stage as a reusable plan builder: ``cands``
-    joined to ``docs`` (conv_id, doc) once per pair side, then ONE
-    ``mapInPandas`` pass of ``verify.verify_kernel`` that tokenizes each
-    batch's documents once and decides the Jaccard, substring and (with
-    ``verify_edit``) edit channels.  Output (conv_a, conv_b, jaccard, via):
-    verified pairs only, ``via`` sorted, ``jaccard`` null unless ``via``
-    contains jaccard."""
-
-    def side(s: str) -> DataFrame:
-        return docs.select(F.col("conv_id").alias(f"conv_{s}"), F.col("doc").alias(f"doc_{s}"))
-
-    pairs = (
-        cands.join(side("a"), "conv_a")
-        .join(side("b"), "conv_b")
-        .select("conv_a", "conv_b", "via", "doc_a", "doc_b")
-    )
-    edit_floor = cfg.threshold - EDIT_MARGIN if cfg.verify_edit else None
-
-    def _verify(batches):
-        for pdf in batches:
-            yield verify_kernel(
-                pdf, cfg.k, cfg.threshold, cfg.substring_min_span, edit_floor, cfg.edit_threshold
-            )
-
-    id_type = cands.schema["conv_a"].dataType.simpleString()
-    return pairs.mapInPandas(
-        _verify, f"conv_a {id_type}, conv_b {id_type}, jaccard double, via array<string>"
     )
 
 
@@ -676,8 +647,10 @@ def _run_stages(
     # -- stage 5: verify (every channel decided by one Arrow kernel) ---------
     # candidates join the documents once per pair side; one mapInPandas
     # pass tokenizes each batch's documents once and runs exact Jaccard,
-    # the substring common run and the edit check — see build_verify.
-    verified = ledger.run(spark, "verify", lambda: build_verify(cands, docs, cfg))
+    # the substring common run and the edit check — see verify.verify_pairs.
+    edit_floor = cfg.threshold - EDIT_MARGIN if cfg.verify_edit else None
+    args = (cfg.k, cfg.threshold, cfg.substring_min_span, edit_floor, cfg.edit_threshold)
+    verified = ledger.run(spark, "verify", lambda: verify_pairs(cands, docs, *args))
     out["verified"] = verified
     if done("verify"):
         return out

@@ -101,10 +101,13 @@ def containment_index(
     )
     freqs = hot_token_freqs(distinct, "dsh")
     order = freq_order_udf(freqs, distinct.schema["dsh"].dataType)
+    # checkpoint: the ordered sets feed both posting roles and the verify
+    # side, which a stream re-runs every micro-batch
     sets = (
         distinct.select("index_id", order(F.col("dsh")).alias("sh"))
         .withColumn("sz", F.size("sh"))
         .filter(F.col("sz") > 0)
+        .localCheckpoint(eager=False)
     )
     plen = prefix_bound_len(F.col("sz"), t, 1)
     exploded = sets.select(
