@@ -10,10 +10,17 @@ plain-Python reference in ``candidate_oracle`` across:
 * the default config (max_bucket=256, MIN_BAND_COLLISIONS=2),
 * a flood corpus with a tiny max_bucket, so star edges dominate,
 * uncapped buckets (max_bucket=None), on the flood and the plain corpus,
-* incremental mode (new_col batch flag + old-anchor star edges).
+* incremental mode (new_col batch flag + old-anchor star edges),
+* a SimHash flood whose star anchor is more than MAX_HAMMING bits from
+  most members, so the Hamming check must drop those star edges.
+
+The candidate plan is pinned too: its only join is the bucket self-join.
 """
 
 from __future__ import annotations
+
+import random
+import re
 
 import pandas as pd
 import pytest
@@ -91,3 +98,49 @@ def test_merged_equals_per_channel_incremental(spark):
     )
     got = _collect(build_candidates(signed, cfg, new_col="is_new"))
     assert got == _reference(signed, cfg, new_col="is_new")
+
+
+def test_far_star_anchor_dropped(spark):
+    """Twelve SimHash values share blocks 0-2 (bits 0-32), so the
+    (0, 1, 2) table holds one oversize bucket and star-connects every
+    member to id 0.  Members 1 and 2 sit 1 and 3 bits from id 0 in the
+    high blocks; member 3 sits 4 bits away and the rest are random there,
+    so their star edges fail the Hamming check.  MinHash lanes are random
+    and there are no anchors, so only the SimHash channel pairs."""
+    rng = random.Random(5)
+
+    def i64(x: int) -> int:
+        return x - (1 << 64) if x >= (1 << 63) else x
+
+    low = rng.getrandbits(33)
+    high0 = rng.getrandbits(31)
+    highs = [high0, high0 ^ 1, high0 ^ 0b10101, high0 ^ 0b1111]
+    highs += [rng.getrandbits(31) for _ in range(8)]
+    rows = [
+        (i, [i64(rng.getrandbits(64)) for _ in range(32)], i64(h << 33 | low), [])
+        for i, h in enumerate(highs)
+    ]
+    signed = spark.createDataFrame(
+        rows, "conv_id long, sig array<long>, simhash long, anchors array<long>"
+    )
+    cfg = PipelineConfig(n_perms=32, n_bands=8, max_bucket=4)
+    got = _collect(build_candidates(signed, cfg))
+    assert {(0, 1, ("simhash",)), (0, 2, ("simhash",))} <= got
+    assert not {(a, b) for a, b, _ in got} & {(0, i) for i in range(3, 12)}
+    assert got == _reference(signed, cfg)
+
+
+def _joins(df) -> list[str]:
+    return re.findall(r"\b\w+Join\b", df._jdf.queryExecution().executedPlan().toString())
+
+
+@pytest.mark.parametrize("new_col", [None, "is_new"], ids=["batch", "incremental"])
+def test_candidate_plan_has_one_join(spark, new_col):
+    """The Hamming check filters the engine's raw rows on the signatures
+    they carry: the bucket self-join is the plan's only join (the
+    signature table is never joined back onto the pairs)."""
+    cfg = PipelineConfig(n_perms=32, n_bands=8, substring_k=4, substring_w=8)
+    signed = _corpus(spark, flood=False).withColumn(
+        "is_new", F.pmod(F.col("conv_id"), F.lit(3)) == 0
+    )
+    assert _joins(build_candidates(signed, cfg, new_col=new_col)) == ["ShuffledHashJoin"]

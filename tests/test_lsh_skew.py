@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import candidate_oracle
-from wdedup_spark.operators.lsh import candidate_pairs
+from wdedup_spark.operators.lsh import candidate_pairs, candidate_pairs_multi
 
 
 def _banded(spark, rows):
@@ -119,3 +119,43 @@ def test_windowed_path_equals_bruteforce_random(spark):
                 }
                 want = candidate_oracle.candidate_pairs(clean, max_bucket, mc)
                 assert got == want, (trial, max_bucket, mc)
+
+
+def _raw(df) -> set:
+    return {(r["conv_a"], r["conv_b"], r["is_star"], r["p_a"], r["p_b"]) for r in df.collect()}
+
+
+def test_payload_follows_each_side_batch(spark):
+    """Every non-key column is a payload: collision rows carry both
+    members' values, star rows the min-id anchor's value on its side
+    (p falls as id rises, so the min p is never the anchor's)."""
+    banded = spark.createDataFrame(
+        [(0, 0, 1, i, 100 - i) for i in (5, 3, 9, 7)]     # oversize: star
+        + [(0, 1, 2, 12, 88), (0, 1, 2, 11, 89)],        # gated pair
+        "ch tinyint, band int, bucket long, id long, p long",
+    )
+    assert _raw(candidate_pairs_multi(banded, max_bucket=2)) == {
+        (3, 5, True, 97, 95),
+        (3, 7, True, 97, 93),
+        (3, 9, True, 97, 91),
+        (11, 12, False, 89, 88),
+    }
+
+
+def test_payload_follows_each_side_incremental(spark):
+    """Incremental star rows anchor at the min OLD member, which may be
+    the larger id of the pair (its payload then sits on the b side), and
+    fall back to the min NEW member in an all-new bucket."""
+    banded = spark.createDataFrame(
+        # band 0: old 8, 6 and new 2, 9 — anchor 6, above member 2
+        [(0, 0, 1, i, 100 - i, i in (2, 9)) for i in (8, 6, 2, 9)]
+        # band 1: all new — anchor is the min new member, 1
+        + [(0, 1, 1, i, 100 - i, True) for i in (4, 1, 7)],
+        "ch tinyint, band int, bucket long, id long, p long, is_new boolean",
+    )
+    assert _raw(candidate_pairs_multi(banded, max_bucket=2, new_col="is_new")) == {
+        (2, 6, True, 98, 94),
+        (6, 9, True, 94, 91),
+        (1, 4, True, 99, 96),
+        (1, 7, True, 99, 93),
+    }

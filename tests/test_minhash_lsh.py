@@ -1,6 +1,8 @@
 """MinHash/LSH recall vs the O(n²) oracle (FIXTURES.md F2, BASELINE
 recall >= 0.99) + SimHash and substring candidate generators."""
 
+import re
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -92,6 +94,15 @@ def test_simhash_catches_bitflip_dups(spark, conv, tiny):
     hit2 = sum((min(a, b), max(a, b)) in got for a, b in zip(d2.conv_a, d2.conv_b))
     assert hit2 >= 0.6 * len(d2), f"simhash D2 recall {hit2}/{len(d2)}"
 
+
+
+def test_simhash_candidates_plan_has_one_join(conv):
+    """The Hamming filter reads the signatures the bucket self-join
+    carries; no join back to the signature table."""
+    for max_bucket in (256, None):
+        plan = simhash_candidates(conv, "doc", "conv_id", max_bucket=max_bucket)
+        joins = re.findall(r"\b\w+Join\b", plan._jdf.queryExecution().executedPlan().toString())
+        assert joins == ["ShuffledHashJoin"], max_bucket
 
 def test_substring_catches_shared_span(spark, conv, tiny):
     pairs = substring_candidates(conv, "doc", "conv_id", min_span=100)

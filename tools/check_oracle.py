@@ -61,6 +61,9 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
+    # queries may share one oracle (incremental_clusters IS dedup_clusters'
+    # closure): run each distinct SQL text once per invocation
+    oracle_results: dict[str, pd.DataFrame] = {}
     failures = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -70,7 +73,10 @@ def main() -> int:
             print(f"{name:24s} rows={len(sdf):6d}  (rows-only, no oracle)")
             continue
         try:
-            odf = con.execute(oracles[name]).fetchdf()
+            sql = oracles[name]
+            if sql not in oracle_results:
+                oracle_results[sql] = con.execute(sql).fetchdf()
+            odf = oracle_results[sql]
         except Exception as e:
             print(f"{name:24s} ORACLE SQL ERROR: {e}")
             failures.append(name)

@@ -17,6 +17,9 @@ Scale design:
   floors and star bypass fold in ONE groupBy(conv_a, conv_b) — the
   pipeline's per-channel aggregate (build_candidates) or the
   single-channel ``candidate_pairs`` wrapper's.
+* Raw rows carry both sides' payload columns, so a test on the pair's
+  values (SimHash's Hamming distance) filters raw rows — no per-id table
+  is joined back onto the pairs.
 * Skew: AQE skew-join is on (session.py); hot *conversations* are removed
   earlier by exact dedup; hot *buckets* are bounded by the star edges.
 """
@@ -75,8 +78,9 @@ def candidate_pairs_multi(
     max_bucket: int | None = DEFAULT_MAX_BUCKET,
     new_col: str | None = None,
 ) -> DataFrame:
-    """The bucket-expansion engine: ``(ch, band, bucket, id[, new_col])``
-    rows → RAW collision rows ``(ch, conv_a, conv_b, is_star)``.
+    """The bucket-expansion engine: ``(ch, band, bucket, id[, new_col],
+    payload...)`` rows → RAW collision rows ``(ch, conv_a, conv_b,
+    is_star, <payload>_a, <payload>_b...)``.
 
     ``ch`` is a channel tag (a narrow integer — guide §2.3) and buckets are
     keyed per (ch, band, bucket), so every channel gets its own size gate,
@@ -90,6 +94,12 @@ def candidate_pairs_multi(
     floors and folds them into its ONE groupBy(conv_a, conv_b) — the
     pipeline's per-channel tag set (build_candidates) or the
     single-channel floor (``candidate_pairs``).
+
+    Payload: every column of ``banded`` besides ``ch, band, bucket, id``
+    and ``new_col`` is a per-id payload, emitted as ``<col>_a`` /
+    ``<col>_b`` with the values of the ids on each side: a collision row
+    carries its two members' values, a star row its anchor's and its
+    member's.
 
     ``max_bucket``: buckets with more members emit m-1 star edges to their
     min id instead of m(m-1)/2 pairs — bounded output, connectivity kept
@@ -111,10 +121,12 @@ def candidate_pairs_multi(
     only buckets already proven ``1 < m <= max_bucket`` reach the
     self-join.  A 10^7-member boilerplate flood never materializes a
     per-bucket buffer: its rows flow straight to the star branch as
-    (min_id, id) edges, one row at a time.  The raw stream carries at most
+    (anchor, id) edges, one row at a time.  The raw stream carries at most
     Σ m·(m−1)/2 rows over gated buckets plus the star edges.
     """
     keys = ["ch", "band", "bucket"]
+    payload = [c for c in banded.columns if c not in (*keys, "id", new_col)]
+    out = ["ch", "conv_a", "conv_b", "is_star", *[f"{c}_{s}" for c in payload for s in "ab"]]
 
     # within-bucket expansion as a co-partitioned SELF-JOIN on the bucket
     # key (r6): the previous shape (collect_list per bucket + double
@@ -123,11 +135,13 @@ def candidate_pairs_multi(
     # end-to-end than the join at 1.6M banded rows.  No per-bucket array
     # is ever materialized: a bucket of m rows streams m(m-1)/2 join rows.
     def _expand(rows: DataFrame) -> DataFrame:
-        lcols = [*[F.col(k) for k in keys], F.col("id").alias("_ida")]
-        rcols = [*[F.col(k) for k in keys], F.col("id").alias("_idb")]
-        if new_col:
-            lcols.append(F.col(new_col).alias("_na"))
-            rcols.append(F.col(new_col).alias("_nb"))
+        def side(s: str) -> DataFrame:
+            return rows.select(
+                *keys, F.col("id").alias(f"conv_{s}"),
+                *[F.col(c).alias(f"{c}_{s}") for c in payload],
+                *([F.col(new_col).alias(f"_n{s}")] if new_col else []),
+            )
+
         # shuffle_hash hint: size ESTIMATES through the Python signature
         # UDFs are garbage, so without it the planner broadcasts the
         # multi-million-row banded side (driver collect + the whole
@@ -137,67 +151,58 @@ def candidate_pairs_multi(
         # SAME subtree, the second Exchange is a ReusedExchange: the
         # upstream computes exactly once.
         p = (
-            rows.select(*lcols)
+            side("a")
             .hint("shuffle_hash")
-            .join(rows.select(*rcols), keys)
-            .filter(F.col("_ida") < F.col("_idb"))
+            .join(side("b"), keys)
+            .filter(F.col("conv_a") < F.col("conv_b"))
         )
         if new_col:
             p = p.filter(F.col("_na") | F.col("_nb"))
-        return p.select("ch", F.col("_ida").alias("a"), F.col("_idb").alias("b"))
+        return p.withColumn("is_star", F.lit(False)).select(*out)
 
     if max_bucket is None:
-        return _expand(banded).select(
-            "ch", F.col("a").alias("conv_a"), F.col("b").alias("conv_b"),
-            F.lit(False).alias("is_star"),
-        )
+        return _expand(banded)
 
     w = Window.partitionBy(*keys)
-    extra_cols = []
-    if new_col:
-        # incremental star anchor: the min over OLD members — the node
-        # the base run's star edges already orbit.  A new bucket-min
-        # would otherwise be isolated (old members' committed edges
-        # point at the OLD min, and new members only edge to the
-        # anchor).  All-new flood → fall back to min over new.
-        extra_cols = [
-            new_col,
-            F.coalesce(
-                F.min(F.when(~F.col(new_col), F.col("id"))).over(w),
-                F.min(F.when(F.col(new_col), F.col("id"))).over(w),
-            ).alias("anchor"),
-        ]
+    # star anchor: the min id, or, incremental, the min over OLD members —
+    # the node the base run's star edges already orbit.  A new bucket-min
+    # would otherwise be isolated (old members' committed edges point at
+    # the OLD min, and new members only edge to the anchor).  Ordering by
+    # (is_new, id) puts old members first and falls back to the min over
+    # new in an all-new flood; min_by reads the anchor's payload too.
+    order = F.struct(new_col, "id") if new_col else F.col("id")
     counted = banded.select(
-        *keys,
-        "id",
-        *extra_cols,
+        *keys, "id", *payload, *([new_col] if new_col else []),
         F.count(F.lit(1)).over(w).alias("m"),
-        F.min("id").over(w).alias("min_id"),
+        *[F.min_by(c, order).over(w).alias(f"_anc_{c}") for c in ("id", *payload)],
     ).filter(F.col("m") > 1)
     # the join below reuses the window's hash partitioning on the bucket
     # key — one exchange total
-    pairs = _expand(counted.filter(F.col("m") <= max_bucket)).withColumn(
-        "is_star", F.lit(False)
+    pairs = _expand(counted.filter(F.col("m") <= max_bucket))
+    big_rows = counted.filter(
+        (F.col("m") > max_bucket) & (F.col("id") != F.col("_anc_id"))
     )
-    big_rows = counted.filter(F.col("m") > max_bucket)
     # star edges row-by-row: (anchor, member) — no array ever built.
     # Incremental: only NEW members need edges (old members were
     # star-connected to the old-member min by the base run at the same
-    # config), anchored at that same old min.
+    # config), anchored at that same old min — which may be the larger
+    # id of the two, so each side's payload follows its id.
     if new_col:
-        pairs_big = big_rows.filter(
-            F.col(new_col) & (F.col("id") != F.col("anchor"))
-        ).select(
-            "ch", F.least("anchor", "id").alias("a"), F.greatest("anchor", "id").alias("b")
-        )
-    else:
-        pairs_big = big_rows.filter(F.col("id") != F.col("min_id")).select(
-            "ch", F.col("min_id").alias("a"), F.col("id").alias("b")
-        )
-    pairs = pairs.unionByName(pairs_big.withColumn("is_star", F.lit(True)))
-    return pairs.select(
-        "ch", F.col("a").alias("conv_a"), F.col("b").alias("conv_b"), "is_star"
+        big_rows = big_rows.filter(F.col(new_col))
+    anc_first = F.col("_anc_id") < F.col("id")
+
+    def star_side(c: str, s: str):
+        anc, mem = F.col(f"_anc_{c}"), F.col(c)
+        return F.when(anc_first, anc if s == "a" else mem).otherwise(mem if s == "a" else anc)
+
+    pairs_big = big_rows.select(
+        "ch",
+        star_side("id", "a").alias("conv_a"),
+        star_side("id", "b").alias("conv_b"),
+        F.lit(True).alias("is_star"),
+        *[star_side(c, s).alias(f"{c}_{s}") for c in payload for s in "ab"],
     )
+    return pairs.unionByName(pairs_big).select(*out)
 
 
 def candidate_pairs(

@@ -7,9 +7,12 @@ document vs 128 lanes.
 Bucketing uses the pigeonhole principle: split the 64-bit signature into
 ``N_BLOCKS`` blocks — two signatures within Hamming distance d agree
 exactly on at least ``N_BLOCKS - d`` of them.  Candidates = equal
-(block combination, block values); the exact Hamming check is JVM-side
-``bit_count(a XOR b) <= d`` — no Python in the verification of this
-path at all.
+(block combination, block values), expanded by the one bucket engine
+(``lsh.candidate_pairs_multi``) with the signature as its payload, so
+every raw row carries both sides' signatures; the exact Hamming check is
+the JVM-side filter ``bit_count(a XOR b) <= d`` on those rows — no
+Python and no join back to the signatures in the verification of this
+path.
 """
 
 from __future__ import annotations
@@ -21,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from wdedup_spark.functions import hashing
-from wdedup_spark.operators.lsh import candidate_pairs
+from wdedup_spark.operators.lsh import candidate_pairs_multi
 
 DEFAULT_HAMMING = 3
 #: pigeonhole blocks per 64-bit signature (``simhash_chunks``)
@@ -142,26 +145,31 @@ def simhash_candidates(
 ) -> DataFrame:
     """→ (conv_a, conv_b) pairs with Hamming(simhash) <= max_hamming.
 
-    The pigeonhole buckets generate candidates; the exact distance filter
-    re-joins the two signatures and checks ``bit_count(xor) <= d``.  With
+    The pigeonhole buckets generate candidates through the bucket engine
+    (``lsh.candidate_pairs_multi``), which carries each id's signature to
+    both sides of every raw row; the exact distance check
+    ``bit_count(xor) <= d`` filters those rows, and a distinct folds them
+    (the floor-1 fold of ``lsh.candidate_pairs``).  With
     ``max_bucket=None`` the pigeonhole guarantee makes the result EXACTLY
     the set of all pairs within the Hamming budget (the DuckDB oracle's
     all-pairs definition); a cap bounds pathological buckets at scale
     with star edges, at the cost of completeness inside them.
     """
-    # checkpoint: the signature pass (Python md5 features) feeds the
-    # banding AND both sides of the exact-distance verify join — without
-    # this it executes three times per query (r6)
+    # checkpoint: uncapped (the simhash_pairs query), the Hamming
+    # filter's inferred isnotnull(simhash) is pushed below the self-join
+    # and evaluates the md5 UDF a second time
     signed = (
         add_simhash(df, text_col, k=k)
         .select(F.col(id_col).alias(id_col), "simhash")
         .localCheckpoint(eager=False)
     )
-    sigs = signed.select(F.col(id_col).alias("id"), "simhash")
-    cands = candidate_pairs(simhash_chunks(signed, "simhash", id_col, max_hamming), max_bucket)
+    banded = simhash_chunks(signed, "simhash", id_col, max_hamming, passthrough=["simhash"])
+    raw = candidate_pairs_multi(
+        banded.select(F.lit(0).cast("tinyint").alias("ch"), "band", "bucket", "id", "simhash"),
+        max_bucket,
+    )
     return (
-        cands.join(sigs.withColumnRenamed("id", "conv_a").withColumnRenamed("simhash", "sh_a"), "conv_a")
-        .join(sigs.withColumnRenamed("id", "conv_b").withColumnRenamed("simhash", "sh_b"), "conv_b")
-        .filter(F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))) <= max_hamming)
+        raw.filter(F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))) <= max_hamming)
         .select("conv_a", "conv_b")
+        .distinct()
     )

@@ -142,32 +142,31 @@ def build_candidates(
     pass — one window exchange + one self-join for all channels instead
     of one of each per channel (guide §2.4; per-channel gating, floors
     and star economy pinned against a plain-Python reference in
-    tests/test_build_candidates_equiv.py).  The raw collision/star rows
-    then fold into ONE groupBy(conv_a, conv_b) carrying per-channel hit
-    counts and star flags — the per-(channel, pair) floor aggregate and
-    the final per-pair tag-set aggregate used to be two exchanges; the
-    CASE floors and the via array are evaluated on the single
-    aggregate's output instead.  The simhash Hamming verify is a linear
-    join+filter over that per-pair stream (rows of other channels pass
-    the filter untouched) rather than a branch — a branched plan would
-    let the channel-tag filters push back down the union and undo the
-    merge."""
+    tests/test_build_candidates_equiv.py).  Every stream carries
+    ``simhash`` as the engine's payload (null outside the SimHash
+    channel), so the Hamming check is one filter on raw SimHash rows —
+    no join back to the signatures.  Hamming distance is a property of
+    the pair, so every SimHash row of a pair passes or none does.  The
+    raw rows then fold into ONE groupBy(conv_a, conv_b) carrying
+    per-channel hit counts and star flags; the CASE floors and the via
+    array are evaluated on that aggregate's output."""
     from wdedup_spark.operators.lsh import band_buckets, candidate_pairs_multi
 
     CH_MINHASH, CH_SIMHASH, CH_SUBSTRING = 0, 1, 2
     ch_names = ["minhash", "simhash", "substring"]
-    passthrough = [new_col] if new_col else None
-    cols = ["band", "bucket", "id", *(passthrough or [])]
+    flag = [new_col] if new_col else []
+    # the SimHash payload; the other channels carry a null in its place
+    no_sig = [F.lit(None).cast("long").alias("simhash")] if cfg.enable_simhash else []
 
-    def tag(df: DataFrame, ch: int) -> DataFrame:
-        return df.select(F.lit(ch).cast("tinyint").alias("ch"), *cols)
+    def tag(df: DataFrame, ch: int, *sig) -> DataFrame:
+        return df.select(
+            F.lit(ch).cast("tinyint").alias("ch"), "band", "bucket", "id", *flag, *sig
+        )
 
     streams = [
         tag(
-            band_buckets(
-                signed, cfg.n_perms, n_bands=cfg.n_bands, passthrough=passthrough,
-            ),
-            CH_MINHASH,
+            band_buckets(signed, cfg.n_perms, n_bands=cfg.n_bands, passthrough=flag),
+            CH_MINHASH, *no_sig,
         )
     ]
     if cfg.enable_simhash:
@@ -175,23 +174,27 @@ def build_candidates(
             tag(
                 simhash_chunks(
                     signed, "simhash", "conv_id", MAX_HAMMING,
-                    passthrough=passthrough,
+                    passthrough=[*flag, "simhash"],
                 ),
-                CH_SIMHASH,
+                CH_SIMHASH, "simhash",
             )
         )
     if cfg.enable_substring:
         anchored = signed.select(
-            F.col("conv_id").alias("id"),
-            *( [new_col] if new_col else [] ),
-            F.explode("anchors").alias("bucket"),
+            F.col("conv_id").alias("id"), *flag, F.explode("anchors").alias("bucket"),
         ).withColumn("band", F.lit(0))
-        streams.append(tag(anchored, CH_SUBSTRING))
+        streams.append(tag(anchored, CH_SUBSTRING, *no_sig))
     banded = streams[0]
     for s in streams[1:]:
         banded = banded.unionByName(s)
 
     raw = candidate_pairs_multi(banded, cfg.max_bucket, new_col=new_col)
+    if cfg.enable_simhash:
+        # Hamming verify applies to EVERY simhash row, star edges included
+        raw = raw.filter(
+            (F.col("ch") != F.lit(CH_SIMHASH))
+            | (F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b"))) <= MAX_HAMMING)
+        )
 
     def _ch(c: int):
         return F.col("ch") == F.lit(c)
@@ -214,26 +217,6 @@ def build_candidates(
         (F.col("_h1") >= 1) | F.coalesce("_s1", F.lit(False)),
         (F.col("_h2") >= 1) | F.coalesce("_s2", F.lit(False)),
     ]
-    # drop pairs failing every pre-Hamming condition BEFORE the sigs
-    # joins (review): the Hamming check only narrows the simhash
-    # channel, so such pairs — e.g. single-band LSH noise under the
-    # minhash floor, which the old per-channel shape discarded before
-    # any join — are doomed regardless and must not ride through two
-    # join shuffles to die at the final size(via) filter
-    agg = agg.filter(passes[0] | passes[1] | passes[2])
-    if cfg.enable_simhash:
-        # Hamming verify applies to EVERY simhash pair, star edges
-        # included (exactly as the old per-channel shape, where the sigs
-        # join ran after the star union)
-        sigs = signed.select(F.col("conv_id").alias("id"), "simhash")
-        agg = agg.join(
-            sigs.select(F.col("id").alias("conv_a"), F.col("simhash").alias("sh_a")), "conv_a"
-        ).join(
-            sigs.select(F.col("id").alias("conv_b"), F.col("simhash").alias("sh_b")), "conv_b"
-        )
-        passes[CH_SIMHASH] = passes[CH_SIMHASH] & (
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))) <= MAX_HAMMING
-        )
     # ch_names is lexically ordered, so this conditional array IS the
     # sorted tag set the old sort_array(collect_set(via)) produced
     via = F.filter(
