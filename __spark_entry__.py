@@ -122,8 +122,8 @@ def q_exact_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _signed_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Shared candidate scaffolding: documents → fused shingle+MinHash
-    signatures → uncapped LSH candidates.  Returns (docs, cands) with
+    """Shared candidate scaffolding: documents → MinHash signatures →
+    uncapped LSH candidates.  Returns (docs, cands) with
     ``docs`` the (conv_id, doc) frame the candidates were signed from;
     every driver query that needs MinHash candidates goes through here so
     the shingle/signature config lives in exactly one place."""
@@ -133,10 +133,10 @@ def _signed_candidates(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Dat
     docs = _fan(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )
-    # fused kernel: shingles + MinHash in one tokenization pass
+    # the signing kernel asked for MinHash lanes only
     signed = add_signatures(
         docs, "doc", k=K, n_perms=N_PERMS,
-        enable_simhash=False, enable_substring=False,
+        enable_simhash=False, enable_substring=False, enable_shingles=False,
     ).drop("doc")
     cands = minhash_lsh_candidates(signed, n_perms=N_PERMS, n_bands=N_BANDS,
                                    max_bucket=None)
@@ -662,8 +662,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from wdedup_spark.operators.minhash import add_shingles
 
     # shingle-only signing (r6): this query consumes ONLY the shingle
-    # sets — the fused kernel's 128-perm MinHash lanes were computed and
-    # thrown away (~half the sign kernel's CPU)
+    # sets, so the signing kernel computes no MinHash lanes (~half its
+    # CPU), SimHash or anchors
     docs = _fan(_t(spark, sf_dir, "documents")).select(
         F.col("doc_id").alias("conv_id"), F.col("text").alias("doc")
     )

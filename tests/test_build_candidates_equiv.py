@@ -144,3 +144,26 @@ def test_candidate_plan_has_one_join(spark, new_col):
         "is_new", F.pmod(F.col("conv_id"), F.lit(3)) == 0
     )
     assert _joins(build_candidates(signed, cfg, new_col=new_col)) == ["ShuffledHashJoin"]
+
+
+@pytest.mark.parametrize("new_col", [None, "is_new"], ids=["batch", "incremental"])
+def test_candidate_plan_shuffles_banded_once(spark, new_col):
+    """The star branch's window and the self-join read ONE exchange of the
+    banded union: the final AQE plan has exactly one
+    hashpartitioning(ch, band, bucket) Exchange (the join's is reused)."""
+    cfg = PipelineConfig(n_perms=32, n_bands=8, max_bucket=8, substring_k=4, substring_w=8)
+    signed = (
+        _corpus(spark, flood=True)
+        .withColumn("is_new", F.pmod(F.col("conv_id"), F.lit(3)) == 0)
+        .localCheckpoint(eager=True)
+    )
+    df = build_candidates(signed, cfg, new_col=new_col)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    banded = re.findall(
+        r"^[\s+\-:]*Exchange hashpartitioning\(ch#\d+, band#\d+, bucket#\d+",
+        final, flags=re.M,
+    )
+    assert len(banded) == 1, final

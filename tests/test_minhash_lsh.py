@@ -34,10 +34,10 @@ def oracle_pairs_high(conv):
 
 
 def _signed(conv):
-    """The fused signing path the entry queries use (MinHash lanes and
-    shingle sets only)."""
+    """The signing path the entry queries use (MinHash lanes only)."""
     return add_signatures(
-        conv, "doc", k=K, n_perms=N_PERMS, enable_simhash=False, enable_substring=False
+        conv, "doc", k=K, n_perms=N_PERMS, enable_simhash=False, enable_substring=False,
+        enable_shingles=False,
     )
 
 
@@ -103,6 +103,18 @@ def test_simhash_candidates_plan_has_one_join(conv):
         plan = simhash_candidates(conv, "doc", "conv_id", max_bucket=max_bucket)
         joins = re.findall(r"\b\w+Join\b", plan._jdf.queryExecution().executedPlan().toString())
         assert joins == ["ShuffledHashJoin"], max_bucket
+
+
+def test_stream_index_plan_has_no_join(conv):
+    """The streaming near-dup index carries each id's signature through
+    its banding instead of joining the signature table back on."""
+    from wdedup_spark.streaming.neardup_stream import index_for_stream
+
+    index = index_for_stream(_signed(conv), N_PERMS, N_BANDS)
+    assert index.columns == ["band", "bucket", "index_id", "index_sig"]
+    plan = index._jdf.queryExecution().executedPlan().toString()
+    assert re.findall(r"\b\w+Join\b", plan) == [], plan
+
 
 def test_substring_catches_shared_span(spark, conv, tiny):
     pairs = substring_candidates(conv, "doc", "conv_id", min_span=100)

@@ -126,6 +126,13 @@ def candidate_pairs_multi(
     """
     keys = ["ch", "band", "bucket"]
     payload = [c for c in banded.columns if c not in (*keys, "id", new_col)]
+    # ONE exchange of ``banded`` feeds the window and the join.  No
+    # bucket is null (an xxhash64, or an explode of non-null longs); the
+    # explicit filter matches the one the join infers from its key, and
+    # the explicit repartition sits below the star branch's anchor-order
+    # projection, so both branches shuffle the same subtree and the
+    # second exchange is reused
+    banded = banded.filter(F.col("bucket").isNotNull()).repartition(*keys)
     out = ["ch", "conv_a", "conv_b", "is_star", *[f"{c}_{s}" for c in payload for s in "ab"]]
 
     # within-bucket expansion as a co-partitioned SELF-JOIN on the bucket

@@ -1,4 +1,5 @@
-"""Shingling + MinHash signatures as vectorized pandas UDFs.
+"""The signing kernel: text → shingle set, MinHash signature, SimHash and
+winnowing anchors, as ONE vectorized pandas UDF.
 
 Replaces the reference's per-segment in-memory dedup structure
 (/root/reference/src/wtreededup.cpp:59-96) as the "compress before you
@@ -7,10 +8,9 @@ shuffle" step: a conversation document of arbitrary size becomes a fixed
 before shuffle" — at 10^12-turn scale wide stages ship 1 KB signatures,
 never raw text.
 
-All kernels are Arrow-batched pandas UDFs (north_rule: "vectorized
-pandas/Arrow UDFs (no per-row Python)"): the per-row work is numpy over
-uint64 arrays; Python-level loops touch only O(tokens) hashing with a
-batch-level memo (functions/hashing.py).
+Every caller (pipeline, queries, streams) asks ``sign_udf`` for only the
+fields it reads.  The per-row work is numpy over uint64 arrays; Python
+loops touch only O(tokens) hashing with a batch memo (functions/hashing.py).
 """
 
 from __future__ import annotations
@@ -27,27 +27,6 @@ DEFAULT_NUM_PERMS = 128
 DEFAULT_SEED = 42
 
 
-def shingle_udf(k: int = DEFAULT_K):
-    """text → array<long> of distinct hashed k-token-shingles.
-
-    Whole-batch vectorized (r6, guide §4.2): one tokenize+factorize pass,
-    one global windowed-hash pass, one lexsort — no per-doc Python loop.
-    Bit-identical to the per-doc kernels (tests/test_hashing_batch.py)."""
-
-    @pandas_udf("array<long>")
-    def _shingle(texts: pd.Series) -> pd.Series:
-        import numpy as np
-
-        if len(texts) == 0:
-            return pd.Series([], dtype=object)
-        flat_h, offsets = hashing.split_hash_batch(texts)
-        grams, go = hashing.batch_shingle_seq(flat_h, offsets, k)
-        sets, so = hashing.batch_unique_sets(grams, go)
-        return pd.Series(np.split(sets.view(np.int64), so[1:-1]))
-
-    return _shingle
-
-
 def sign_udf(
     k: int = DEFAULT_K,
     n_perms: int = DEFAULT_NUM_PERMS,
@@ -56,10 +35,18 @@ def sign_udf(
     enable_substring: bool = True,
     substring_k: int = 16,
     substring_w: int = 48,
+    enable_shingles: bool = True,
 ):
-    """Fused signing kernel: ONE pandas UDF computing every signature the
-    pipeline needs — shingle set, MinHash signature, SimHash, winnowing
-    anchors — from one tokenization pass per document.
+    """Fused signing kernel: ONE pandas UDF computing the signatures a
+    caller asks for — shingle set (``enable_shingles``), MinHash signature
+    (``n_perms`` lanes; 0 asks for none), SimHash (``enable_simhash``),
+    winnowing anchors (``enable_substring``) — from one tokenization pass
+    per document.
+
+    The output struct has a fixed schema whatever is asked for; a field
+    nobody asked for comes out empty (``[]``) or 0, and only the work the
+    asked fields need runs: k-grams for shingles, sig or simhash, the
+    per-doc set dedup for shingles or sig, MinHash only for n_perms > 0.
 
     vs separate UDFs: one Arrow round-trip instead of four, and token
     hashing runs once instead of four times.  This is the hot kernel of
@@ -75,11 +62,6 @@ def sign_udf(
         import numpy as np
 
         n = len(texts)
-        if n == 0:
-            return pd.DataFrame(
-                {"shingles": [], "sig": [],
-                 "simhash": pd.Series([], dtype="int64"), "anchors": []}
-            )
         # whole-batch vectorized pipeline (r6, guide §4.2): tokenization +
         # token hashing (one factorize, blake2b per distinct token), the
         # k-gram windowed hash, per-doc set dedup, MinHash and SimHash all
@@ -88,14 +70,19 @@ def sign_udf(
         # (tests/test_hashing_batch.py pins parity with the per-doc
         # kernels on every edge shape)
         flat_h, offsets = hashing.split_hash_batch(texts)
-        grams, go = hashing.batch_shingle_seq(flat_h, offsets, k)
-        sets, so = hashing.batch_unique_sets(grams, go)
-        shingles = np.split(sets.view(np.int64), so[1:-1])
-        sigs = list(hashing.batch_minhash(sets, so, a, b).view(np.int64))
-        if enable_simhash:
-            simhashes = hashing.batch_simhash(grams, go).view(np.int64)
-        else:
-            simhashes = np.zeros(n, dtype=np.int64)
+        shingles = sigs = anchors = [[]] * n
+        simhashes = np.zeros(n, dtype=np.int64)
+        if enable_shingles or n_perms or enable_simhash:
+            grams, go = hashing.batch_shingle_seq(flat_h, offsets, k)
+            if enable_shingles or n_perms:
+                sets, so = hashing.batch_unique_sets(grams, go)
+                if n_perms:
+                    sigs = list(hashing.batch_minhash(sets, so, a, b).view(np.int64))
+                if enable_shingles:
+                    sets = sets.view(np.int64)
+                    shingles = [sets[so[i]:so[i + 1]] for i in range(n)]
+            if enable_simhash:
+                simhashes = hashing.batch_simhash(grams, go).view(np.int64)
         if enable_substring:
             from wdedup_spark.operators.substring import winnow_from_grams
 
@@ -104,8 +91,6 @@ def sign_udf(
                 hashing.to_i64(winnow_from_grams(sgrams[sgo[i]:sgo[i + 1]], substring_w))
                 for i in range(n)
             ]
-        else:
-            anchors = [[]] * n
         return pd.DataFrame(
             {"shingles": shingles, "sig": sigs,
              "simhash": pd.Series(simhashes, dtype="int64"), "anchors": anchors}
@@ -124,12 +109,21 @@ def add_signatures(
     enable_substring: bool = True,
     substring_k: int = 16,
     substring_w: int = 48,
+    enable_shingles: bool = True,
 ) -> DataFrame:
     """Attach all signatures in one fused pass: + shingles, sig, simhash,
-    anchors columns."""
-    s = sign_udf(k, n_perms, seed, enable_simhash, enable_substring, substring_k, substring_w)
+    anchors columns (the fields not asked for are empty or 0)."""
+    s = sign_udf(
+        k, n_perms, seed, enable_simhash, enable_substring, substring_k, substring_w,
+        enable_shingles,
+    )
     return df.withColumn("_s", s(F.col(text_col))).select("*", "_s.*").drop("_s")
 
 
-def add_shingles(df: DataFrame, text_col: str = "doc", k: int = DEFAULT_K, out_col: str = "shingles") -> DataFrame:
-    return df.withColumn(out_col, shingle_udf(k)(F.col(text_col)))
+def add_shingles(df: DataFrame, text_col: str = "doc", k: int = DEFAULT_K) -> DataFrame:
+    """+ the distinct hashed k-shingle set as ``shingles``: the signing
+    kernel asked for shingles only (no MinHash lanes, SimHash or
+    anchors)."""
+    return add_signatures(
+        df, text_col, k, n_perms=0, enable_simhash=False, enable_substring=False
+    ).drop("sig", "simhash", "anchors")

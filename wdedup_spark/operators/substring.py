@@ -9,8 +9,9 @@ content-defined, alignment-free sample with the guarantee
 ``detectable span >= W + k - 1`` tokens.
 
 Pipeline shape mirrors the LSH path exactly (anchor = band bucket):
-  fingerprint (narrow, pandas UDF) → explode anchors → bucket groupBy →
-  candidate pairs → verify longest common token run (verify.verify_pairs).
+  anchors (narrow: the signing kernel, minhash.sign_udf, asked for
+  anchors only) → explode anchors → bucket groupBy → candidate pairs →
+  verify longest common token run (verify.verify_pairs).
 
 vs a true distributed suffix array (per-partition suffix arrays + k-mer
 anchor join across partitions, SURVEY.md §2.1): winnowing gives the same
@@ -30,6 +31,7 @@ from pyspark.sql.types import IntegerType
 
 from wdedup_spark.functions import hashing
 from wdedup_spark.operators.lsh import candidate_pairs
+from wdedup_spark.operators.minhash import add_signatures
 
 DEFAULT_KGRAM = 16
 DEFAULT_WINDOW = 48  # guarantee: spans >= 48+16-1 = 63 tokens are detected
@@ -47,25 +49,6 @@ def winnow_from_grams(grams: np.ndarray, w: int) -> np.ndarray:
     # numpy min over a strided view — O(n*w) worst case but w is constant)
     view = np.lib.stride_tricks.sliding_window_view(grams, w)
     return np.unique(view.min(axis=1))
-
-
-def fingerprint_udf(k: int = DEFAULT_KGRAM, w: int = DEFAULT_WINDOW):
-    @pandas_udf("array<long>")
-    def _fp(texts: pd.Series) -> pd.Series:
-        if len(texts) == 0:
-            return pd.Series([], dtype=object)
-        # batch kernels for tokenize/hash/gram (r6); the sliding-window
-        # min stays per doc (w is large relative to doc gram counts)
-        flat_h, offsets = hashing.split_hash_batch(texts)
-        grams, go = hashing.batch_shingle_seq(flat_h, offsets, k)
-        return pd.Series(
-            [
-                hashing.to_i64(winnow_from_grams(grams[go[i]:go[i + 1]], w))
-                for i in range(len(texts))
-            ]
-        )
-
-    return _fp
 
 
 def _common_run(ta: np.ndarray, tb: np.ndarray, k: int) -> int:
@@ -149,10 +132,11 @@ def substring_candidates(
     # checkpoint: the winnowing pass feeds the anchor explode AND both
     # sides of the verify join — without this it executes three times
     # per query (r6)
-    fp = df.select(
-        F.col(id_col).alias("id"), F.col(text_col).alias("doc"),
-        fingerprint_udf(k, w)(F.col(text_col)).alias("anchors"),
-    ).localCheckpoint(eager=False)
+    fp = add_signatures(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("doc")), "doc",
+        n_perms=0, enable_simhash=False, substring_k=k, substring_w=w,
+        enable_shingles=False,
+    ).select("id", "doc", "anchors").localCheckpoint(eager=False)
     anchored = fp.select("id", F.explode("anchors").alias("bucket")).withColumn(
         "band", F.lit(0)
     )

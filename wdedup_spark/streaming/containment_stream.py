@@ -174,8 +174,8 @@ def stream_containment_flags(
             "false negatives) — shingle the stream with the index's k or "
             "rebuild the index"
         )
-    # ONE shingle pass (no MinHash lanes — add_shingles, not
-    # add_signatures) and ONE posexplode; the prefix membership is a
+    # ONE shingle pass (the signing kernel asked for shingles only — no
+    # MinHash lanes) and ONE posexplode; the prefix membership is a
     # per-token flag, so both subsumption directions come out of a
     # single stream-static join below.  Ordering uses the index's static
     # hot-token map — per-row, stateless, same total order as the

@@ -36,10 +36,10 @@ from wdedup_spark.operators.minhash import add_signatures
 def index_for_stream(signed: DataFrame, n_perms: int = 128, n_bands: int = 32) -> DataFrame:
     """Static probe index from the batch ``sign`` stage output:
     one row per (band, bucket, index id, signature)."""
-    banded = band_buckets(signed, n_perms, n_bands=n_bands)
-    sigs = signed.select(F.col("conv_id").alias("id"), F.col("sig").alias("index_sig"))
-    return banded.join(sigs, "id").select(
-        "band", "bucket", F.col("id").alias("index_id"), "index_sig"
+    # the signature rides the banding (passthrough): no join back onto
+    # the corpus-sized banded rows
+    return band_buckets(signed, n_perms, n_bands=n_bands, passthrough=["sig"]).select(
+        "band", "bucket", F.col("id").alias("index_id"), F.col("sig").alias("index_sig")
     )
 
 
@@ -63,7 +63,7 @@ def stream_neardup_flags(
     """
     signed = add_signatures(
         docs, "doc", k=k, n_perms=n_perms, seed=seed,
-        enable_simhash=False, enable_substring=False,
+        enable_simhash=False, enable_substring=False, enable_shingles=False,
     ).select("conv_id", "sig")
     # the index's own banding, carrying the signature along: everything
     # before the stream-static join stays narrow and stateless — a
